@@ -86,7 +86,6 @@ class NL2DocEngine:
         self.store = store
         self.model = model
         self._linker = None
-        self._col_scores: dict[str, dict[str, float]] = {}
         if model is not None:
             from ..models.inference import SemanticLinker
 
@@ -105,25 +104,33 @@ class NL2DocEngine:
         }
 
     # --------------------------------------------------------- linking
-    def _relevant(self, question: str) -> dict[str, list[str]]:
-        """Linking ladder (mirror of NL2SQLEngine._relevant): trained
+    def _relevant(
+        self, question: str
+    ) -> tuple[dict[str, list[str]], dict[str, dict[str, float]]]:
+        """Linking ladder (mirror of NL2SQLEngine.link): trained
         semantic tier when a model is attached — restricted to actually
         registered collections — else, or when it finds nothing, the
-        fuzzy tier. Stashes raw per-field cosines so the template tier
-        can rank fields on semantic evidence."""
-        self._col_scores = {}
+        fuzzy tier. Returns (slice, raw per-field cosines) so the
+        template tier can rank fields on semantic evidence."""
         schema = self._schema()
         if self._linker is not None:
             rel = self._linker.relevant(question)
-            self._col_scores = rel.column_scores()
             slice_ = {
                 t: cols for t, cols in rel.as_slice().items() if t in schema
             }
-            if slice_:
-                return slice_
-        return select_relevant_collections(schema, question)
+            return (
+                slice_ or select_relevant_collections(schema, question),
+                rel.column_scores(),
+            )
+        return select_relevant_collections(schema, question), {}
 
-    def _field_score(self, coll: str, name: str, question: str) -> float:
+    def _field_score(
+        self,
+        coll: str,
+        name: str,
+        question: str,
+        scores: dict[str, dict[str, float]],
+    ) -> float:
         """Fuzzy score blended with trained-cosine evidence — same
         weights as the relational engine's _column_score (trained cosine
         primary, character fuzz halved to a tie-breaker)."""
@@ -131,9 +138,9 @@ class NL2DocEngine:
         if self.model is not None:
             for syn in self.model.metadata.synonyms.get(name, []):
                 fuzzy = max(fuzzy, partial_ratio(syn, question))
-        scores = self._col_scores.get(coll)
-        if scores:
-            return 0.5 * fuzzy + 100.0 * max(scores.get(name, 0.0), 0.0)
+        coll_scores = scores.get(coll)
+        if coll_scores:
+            return 0.5 * fuzzy + 100.0 * max(coll_scores.get(name, 0.0), 0.0)
         return fuzzy
 
     def _is_numeric(self, coll: str, name: str) -> bool:
@@ -220,7 +227,7 @@ class NL2DocEngine:
     def template_query(self, question: str) -> dict:
         """Deterministic template tier: intent-compiled query dicts."""
         schema = self._schema()
-        relevant = self._relevant(question)
+        relevant, col_scores = self._relevant(question)
         if not relevant:
             raise ValueError("no collections registered")
         coll = next(iter(relevant))
@@ -258,7 +265,8 @@ class NL2DocEngine:
             # ties (a short name fully contained in the question) break
             # toward the longer, more specific field name
             return max(
-                cands, key=lambda f: (self._field_score(coll, f, scope), len(f))
+                cands,
+                key=lambda f: (self._field_score(coll, f, scope, col_scores), len(f)),
             )
 
         # filter fields are evidence already SPENT on the predicate —

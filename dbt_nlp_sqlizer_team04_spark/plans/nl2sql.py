@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import SparkSession
 
@@ -27,6 +28,7 @@ from .executor import (
     DEFAULT_LIMIT,
     DEFAULT_TIMEOUT_MS,
     ExecutionResult,
+    ResultCache,
     run_readonly,
 )
 from .intent import IntentAnalysis, QueryIntent, analyze_query_intent, build_enhanced_prompt
@@ -306,6 +308,10 @@ def parse_llm_candidates(resp: str, max_candidates: int = MAX_LLM_CANDIDATES) ->
     return out[:max_candidates]
 
 
+# (schema slice, per-table column scores) of one question: NL2SQLEngine.link
+Linked = tuple[dict[str, list[str]], dict[str, dict[str, float]]]
+
+
 @dataclass
 class Candidate:
     sql: str
@@ -347,29 +353,33 @@ class NL2SQLEngine:
         self.model = model
         self._linker = SemanticLinker(model)
 
-    def _relevant(self, question: str) -> dict[str, list[str]]:
+    def link(self, question: str) -> Linked:
         """Linking ladder: trained semantic tier (top-20 cosine ≥ 0.3,
         inference.py:70-118) when a model is attached, else — or when the
         semantic tier finds nothing — the fuzzy tier (nl2sql.py:23-46).
 
-        Side effect: stashes the linker's raw per-column cosines so the
-        template tier can rank columns on semantic evidence even when it
-        fell below the linking threshold."""
-        self._col_scores: dict[str, dict[str, float]] = {}
+        Returns (slice, column scores): the scores are the linker's raw
+        per-column cosines (empty without a model), so the template tier
+        can rank columns on semantic evidence even when it fell below the
+        linking threshold. Nothing is stored on the engine, which
+        concurrent requests share."""
         if self._linker is not None:
             rel = self._linker.relevant(question)
-            self._col_scores = rel.column_scores()
-            slice_ = rel.as_slice()
-            if slice_:
-                return slice_
-        return select_relevant(self.schema, question)
+            slice_ = rel.as_slice() or select_relevant(self.schema, question)
+            return slice_, rel.column_scores()
+        return select_relevant(self.schema, question), {}
 
     # ---------------- column selection helpers ----------------
     def _cols(self, table: str):
         return self.metadata.tables[table].columns if table in self.metadata.tables else []
 
     def _column_score(
-        self, table: str, name: str, fuzzy: float, preferred: list[str] | None
+        self,
+        table: str,
+        name: str,
+        fuzzy: float,
+        preferred: list[str] | None,
+        scores: dict[str, dict[str, float]],
     ) -> float:
         """Blend the linking evidence into a 0-100-ish column score.
 
@@ -378,9 +388,9 @@ class NL2SQLEngine:
         consult fuzzy matching at all (inference.py:70-118), we keep it
         only as a tie-breaker. No model: fuzzy score plus a positional
         boost for slice membership."""
-        scores = getattr(self, "_col_scores", {}).get(table)
-        if scores:
-            return 0.5 * fuzzy + 100.0 * max(scores.get(name, 0.0), 0.0)
+        table_scores = scores.get(table)
+        if table_scores:
+            return 0.5 * fuzzy + 100.0 * max(table_scores.get(name, 0.0), 0.0)
         if preferred and name in preferred:
             return fuzzy + 25.0 - 2.0 * preferred.index(name)
         return fuzzy
@@ -391,6 +401,8 @@ class NL2SQLEngine:
         question: str,
         numeric: bool | None = None,
         preferred: list[str] | None = None,
+        *,
+        scores: dict[str, dict[str, float]],
     ) -> str | None:
         """Highest-scoring column: fuzzy score (synonym-aware via the
         profiler's A8 map) plus a boost for columns the linking tier
@@ -406,7 +418,7 @@ class NL2SQLEngine:
             fuzzy = partial_ratio(c.name, question)
             for syn in self.metadata.synonyms.get(c.name, []):
                 fuzzy = max(fuzzy, partial_ratio(syn, question))
-            score = self._column_score(table, c.name, fuzzy, preferred)
+            score = self._column_score(table, c.name, fuzzy, preferred, scores)
             if score > best_score:
                 best, best_score = c.name, score
         return best
@@ -417,8 +429,12 @@ class NL2SQLEngine:
         question: str,
         preferred: list[str] | None = None,
         exclude: str | None = None,
+        *,
+        scores: dict[str, dict[str, float]],
     ) -> str | None:
-        scored = self._group_column_scored(table, question, preferred, exclude)
+        scored = self._group_column_scored(
+            table, question, preferred, exclude, scores=scores
+        )
         return scored[0] if scored else None
 
     def _fk_path(
@@ -459,6 +475,8 @@ class NL2SQLEngine:
         preferred: list[str] | None = None,
         exclude: str | None = None,
         numeric: bool | None = None,
+        *,
+        scores: dict[str, dict[str, float]],
     ) -> tuple[str, float] | None:
         """Grouping key with its score: prefer low-cardinality
         (categorical) columns, fuzzy-matched against the question,
@@ -479,7 +497,7 @@ class NL2SQLEngine:
             fuzzy = partial_ratio(c.name, question)
             for syn in self.metadata.synonyms.get(c.name, []):
                 fuzzy = max(fuzzy, partial_ratio(syn, question))
-            score = self._column_score(table, c.name, fuzzy, preferred)
+            score = self._column_score(table, c.name, fuzzy, preferred, scores)
             if c.unique_values is not None:  # profiled categorical
                 score += 15.0
             if c.is_primary_key:
@@ -759,10 +777,18 @@ class NL2SQLEngine:
 
     # ---------------- candidate generation ----------------
     def template_candidates(
-        self, question: str, analysis: IntentAnalysis, relevant: dict[str, list[str]]
+        self,
+        question: str,
+        analysis: IntentAnalysis,
+        relevant: dict[str, list[str]],
+        col_scores: dict[str, dict[str, float]],
     ) -> list[Candidate]:
         """Deterministic intent-compiled templates (extends
-        inference.py:215-246's two templates)."""
+        inference.py:215-246's two templates). ``col_scores`` are the
+        linker's per-column cosines for this question (see :meth:`link`)."""
+        best_column = partial(self._best_column, scores=col_scores)
+        group_column = partial(self._group_column, scores=col_scores)
+        group_column_scored = partial(self._group_column_scored, scores=col_scores)
         out: list[Candidate] = []
         tables = list(relevant)
         if not tables:
@@ -796,7 +822,7 @@ class NL2SQLEngine:
         if _BREAKDOWN_RE.search(question.lower()):
             keys: list[str] = []
             for w in _BY_WORD_RE.findall(question.lower()):
-                sc = self._group_column_scored(t, w, numeric=False)
+                sc = group_column_scored(t, w, numeric=False)
                 if sc is not None and sc[0] not in keys:
                     keys.append(sc[0])
             if len(keys) >= 2:
@@ -848,7 +874,7 @@ class NL2SQLEngine:
                         continue
                     if partial_ratio(cand_t, g_ph) < 70.0:
                         continue
-                    dsc = self._group_column_scored(
+                    dsc = group_column_scored(
                         cand_t, g_ph, numeric=False
                     )
                     if dsc is None:
@@ -874,7 +900,7 @@ class NL2SQLEngine:
                     out.append(
                         Candidate(sql, "template_pct_of_total", 0.8)
                     )
-            g0 = self._group_column(t, question, preferred=relevant.get(t))
+            g0 = group_column(t, question, preferred=relevant.get(t))
             if g0 is not None:
                 # comparison-filtered share (r11, nl74's surface): a
                 # "<col> over <n>" / "before <year>" phrase narrows
@@ -987,7 +1013,7 @@ class NL2SQLEngine:
                         msc7 = partial_ratio(mc7, m_phrase)
                         if best_e is None or msc7 > best_e[0]:
                             best_e = (msc7, cand_t, mc7, p7)
-                    ge = self._group_column_scored(
+                    ge = group_column_scored(
                         ent_t5, g_phrase, numeric=False
                     )
                     if best_e is not None and ge is not None:
@@ -1032,7 +1058,7 @@ class NL2SQLEngine:
                         )
             best_fit = None  # (score, table, g, m)
             for cand_t in self.metadata.tables:
-                gsc = self._group_column_scored(cand_t, g_phrase)
+                gsc = group_column_scored(cand_t, g_phrase)
                 if gsc is None:
                     continue
                 m2 = self._best_numeric_column(cand_t, m_phrase.strip())
@@ -1082,7 +1108,7 @@ class NL2SQLEngine:
                 None,
             )
             if ent_t is not None and dim_t is not None and ent_t != dim_t:
-                gd = self._group_column_scored(dim_t, dim_w, numeric=False)
+                gd = group_column_scored(dim_t, dim_w, numeric=False)
                 path_tc = self._fk_path(ent_t, dim_t, max_hops=2)
                 if gd is not None and path_tc:
                     joins_tc = " ".join(
@@ -1101,7 +1127,7 @@ class NL2SQLEngine:
         sm = _SUPERLATIVE_RE.search(question.lower())
         if sm:
             g_phrase, direction = sm.groups()
-            gsc = self._group_column_scored(
+            gsc = group_column_scored(
                 t, g_phrase, preferred=relevant.get(t)
             )
             if gsc is not None:
@@ -1163,8 +1189,8 @@ class NL2SQLEngine:
             w_a, w_b, tok = um.groups()
             t_a, t_b = self._entity_table(w_a), self._entity_table(w_b)
             if t_a and t_b and t_a != t_b:
-                n_a = self._best_column(t_a, "name", numeric=False)
-                n_b = self._best_column(t_b, "name", numeric=False)
+                n_a = best_column(t_a, "name", numeric=False)
+                n_b = best_column(t_b, "name", numeric=False)
                 if n_a and n_b:
                     sql = (
                         f"SELECT {n_a} AS name FROM {t_a} "
@@ -1220,7 +1246,7 @@ class NL2SQLEngine:
                 # measure word resolve
                 best_c = None
                 for cand_t in self.metadata.tables:
-                    gc6 = self._group_column_scored(
+                    gc6 = group_column_scored(
                         cand_t, ent_w, numeric=False
                     )
                     mc6 = self._best_numeric_column(cand_t, m_word)
@@ -1234,7 +1260,7 @@ class NL2SQLEngine:
                 if best_c is not None:
                     ent_t = best_c[1]
             if ent_t is not None:
-                gsc5 = self._group_column_scored(
+                gsc5 = group_column_scored(
                     ent_t, ent_w, numeric=False
                 )
                 m5 = self._best_numeric_column(ent_t, m_word)
@@ -1306,7 +1332,7 @@ class NL2SQLEngine:
                 )
                 # same-table grouping first ("priorities with … orders"
                 # groups orders itself)...
-                gsc = self._group_column_scored(ent_t, g_phrase)
+                gsc = group_column_scored(ent_t, g_phrase)
                 best_dim = None  # (score, dim_t, dim_col, join path)
                 # ...but a DIMENSION whose group column matches the
                 # phrase better wins ("nations with … customers" must
@@ -1315,7 +1341,7 @@ class NL2SQLEngine:
                 for cand_t in self.metadata.tables:
                     if cand_t == ent_t:
                         continue
-                    dsc = self._group_column_scored(
+                    dsc = group_column_scored(
                         cand_t, g_phrase, numeric=False
                     )
                     if dsc is None:
@@ -1494,7 +1520,7 @@ class NL2SQLEngine:
                 msc = partial_ratio(m3, m_word)
                 if msc < 70.0:
                     continue  # the measure must really match a column
-                gsc3 = self._group_column_scored(
+                gsc3 = group_column_scored(
                     cand_t, g_phrase, exclude=m3
                 )
                 if gsc3 is None:
@@ -1524,7 +1550,7 @@ class NL2SQLEngine:
             analysis.agg_func == "COUNT"
             and QueryIntent.DISTINCT in analysis.all_intents
         ):
-            c0 = self._best_column(t, question, preferred=relevant.get(t))
+            c0 = best_column(t, question, preferred=relevant.get(t))
             if c0 is not None:
                 sql = (
                     f"SELECT COUNT(DISTINCT {c0}) AS n_distinct_{c0} FROM {t}"
@@ -1543,7 +1569,7 @@ class NL2SQLEngine:
             if func == "COUNT":
                 expr, alias = "COUNT(*)", "cnt"
             else:
-                c = self._best_column(t, question, numeric=True, preferred=relevant.get(t))
+                c = best_column(t, question, numeric=True, preferred=relevant.get(t))
                 if c is None:
                     expr, alias = "COUNT(*)", "cnt"
                     func = "COUNT"
@@ -1556,7 +1582,7 @@ class NL2SQLEngine:
                     else:
                         expr, alias = f"{func}({c})", f"{func.lower()}_{c}"
             g = (
-                self._group_column(
+                group_column(
                     t, question, preferred=relevant.get(t), exclude=measure
                 )
                 if QueryIntent.GROUPED_AGGREGATION in analysis.all_intents
@@ -1614,7 +1640,7 @@ class NL2SQLEngine:
             join_cand = None
             if QueryIntent.GROUPED_AGGREGATION in analysis.all_intents:
                 pm_loc = _PER_PHRASE_RE.search(question.lower())
-                local = self._group_column_scored(
+                local = group_column_scored(
                     t,
                     pm_loc.group(1) if pm_loc else question,
                     preferred=relevant.get(t),
@@ -1656,7 +1682,7 @@ class NL2SQLEngine:
                     # and a phrase that NAMES the table ("per customer
                     # name") is decisive evidence for that table's
                     # column over a same-fuzzy column elsewhere
-                    scored = self._group_column_scored(
+                    scored = group_column_scored(
                         other,
                         group_text,
                         preferred=relevant.get(other),
@@ -1727,7 +1753,7 @@ class NL2SQLEngine:
                             m4 = self._best_numeric_column(cand_t, question)
                             if m4 is None:
                                 continue
-                            gsc4 = self._group_column_scored(
+                            gsc4 = group_column_scored(
                                 cand_t, pm3.group(1), exclude=m4
                             )
                             if gsc4 is None:
@@ -1736,11 +1762,11 @@ class NL2SQLEngine:
                             if best4 is None or fit > best4[0]:
                                 best4 = (fit, cand_t, gsc4[0], m4)
                         if best4 is not None and best4[1] != t:
-                            local_m = self._best_column(
+                            local_m = best_column(
                                 t, question, numeric=True,
                                 preferred=relevant.get(t),
                             )
-                            lg = self._group_column_scored(
+                            lg = group_column_scored(
                                 t, pm3.group(1), exclude=local_m
                             )
                             local_fit = (lg[1] if lg else 0.0) + (
@@ -1752,7 +1778,7 @@ class NL2SQLEngine:
                             # template: a near-tie stays local
                             if best4[0] > local_fit + 20.0:
                                 t_m, g_m = best4[1], best4[2]
-                    mcol = self._best_column(
+                    mcol = best_column(
                         t_m, question, numeric=True,
                         preferred=relevant.get(t_m),
                     )
@@ -1811,7 +1837,7 @@ class NL2SQLEngine:
                     parts = [p.strip() for p in pm.group(1).split(" and ")]
                     keys: list[str] | None = []
                     for part in parts:
-                        gc = self._group_column(
+                        gc = group_column(
                             t, part, preferred=relevant.get(t), exclude=measure
                         )
                         if gc is None or gc in (keys or []):
@@ -1850,11 +1876,11 @@ class NL2SQLEngine:
 
         # --- window function: rows alongside partitioned aggregate ---
         if QueryIntent.WINDOW_FUNCTION in analysis.all_intents and analysis.agg_func:
-            c = self._best_column(t, question, numeric=True, preferred=relevant.get(t))
+            c = best_column(t, question, numeric=True, preferred=relevant.get(t))
             # exclude the measure from the partition-key pick — the
             # fuzzy-best group otherwise IS the measure ("average
             # acctbal per nation" scored acctbal highest for both)
-            g = self._group_column(
+            g = group_column(
                 t, question, preferred=relevant.get(t), exclude=c
             )
             if g and c and g != c:
@@ -1878,7 +1904,7 @@ class NL2SQLEngine:
 
         # --- distinct values ---
         if QueryIntent.DISTINCT in analysis.all_intents:
-            c = self._best_column(t, question, numeric=False, preferred=relevant.get(t)) or all_cols[0]
+            c = best_column(t, question, numeric=False, preferred=relevant.get(t)) or all_cols[0]
             sql = f"SELECT DISTINCT {c} FROM {t} ORDER BY {c}"
             out.append(Candidate(sql, "template_distinct", 0.7))
 
@@ -1898,11 +1924,11 @@ class NL2SQLEngine:
             if recency is not None:
                 # "most recent orders" sorts on the date column; the
                 # numeric-best pick would order by a surrogate key
-                c = self._date_column(t, question) or self._best_column(
+                c = self._date_column(t, question) or best_column(
                     t, question, numeric=True, preferred=relevant.get(t)
                 )
             else:
-                c = self._best_column(
+                c = best_column(
                     t, question, numeric=True, preferred=relevant.get(t)
                 )
             eff_limit = limit_n
@@ -2122,24 +2148,31 @@ class NL2SQLEngine:
             cand.confidence = min(score, 1.0)
         return sorted(candidates, key=lambda c: -c.confidence)
 
-    def generate(self, question: str, max_candidates: int = 5) -> list[Candidate]:
-        relevant = self._relevant(question)
+    def generate(
+        self, question: str, max_candidates: int = 5, linked: Linked | None = None
+    ) -> list[Candidate]:
+        """Ranked candidates; ``linked`` is this question's :meth:`link`
+        result when the caller already has it."""
+        relevant, col_scores = linked or self.link(question)
         analysis = analyze_query_intent(question, relevant)
         cands = self.llm_candidates(question, analysis, relevant)
-        cands += self.template_candidates(question, analysis, relevant)
+        cands += self.template_candidates(question, analysis, relevant, col_scores)
         return self.rank(cands, relevant)[:max_candidates]
 
-    def query_df(self, question: str, limit: int = DEFAULT_LIMIT):
+    def query_df(
+        self, question: str, limit: int = DEFAULT_LIMIT, linked: Linked | None = None
+    ):
         """Generate-only verb (the reference's /ai/nl2sql split endpoint,
         app/main.py:262-296): returns the lazy (DataFrame, final_sql) for
         the best candidate that passes validation + Spark analysis —
-        collection is left to the caller."""
+        collection is left to the caller. ``linked`` as in :meth:`generate`."""
         from .safety import validate
 
-        relevant = self._relevant(question)
+        linked = linked or self.link(question)
+        relevant = linked[0]
         last_err: Exception | None = None
         self.last_method: str | None = None
-        for cand in self.generate(question):
+        for cand in self.generate(question, linked=linked):
             try:
                 final = validate(
                     cand.sql,
@@ -2164,14 +2197,16 @@ class NL2SQLEngine:
         question: str,
         limit: int = DEFAULT_LIMIT,
         timeout_ms: int = DEFAULT_TIMEOUT_MS,
+        *,
+        cache: ResultCache,
     ) -> ExecutionResult:
         """Full pipeline with the candidate retry ladder
         (routes_ai.py:205-226): first candidate that validates + executes
-        wins."""
-        relevant = self._relevant(question)
-        candidates = self.generate(question)
+        wins. ``cache`` is passed to :func:`run_readonly`."""
+        linked = self.link(question)
+        relevant = linked[0]
         last: ExecutionResult | None = None
-        for cand in candidates:
+        for cand in self.generate(question, linked=linked):
             res = run_readonly(
                 self.spark,
                 cand.sql,
@@ -2180,6 +2215,7 @@ class NL2SQLEngine:
                 limit=limit,
                 timeout_ms=timeout_ms,
                 schema_context=relevant,
+                cache=cache,
             )
             if res.ok:
                 res.explain = f"[{cand.method} conf={cand.confidence:.2f}] " + (

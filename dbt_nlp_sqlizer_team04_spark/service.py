@@ -28,6 +28,10 @@ Verbs and their reference routes:
 
 Every verb returns a JSON-safe dict in the reference's response shape so
 a FastAPI wrapper would be a few-line adapter.
+
+``run`` and ``ask`` share one result cache over ``sf_dir``
+(``plans.executor.ResultCache``); their responses say whether the
+answer came from it (``cached``).
 """
 
 from __future__ import annotations
@@ -43,7 +47,7 @@ from .catalog.metadata import generate_schema_id
 from .models import progress
 from .models.trainer import ModelTrainer, SchemaModel
 from .operators.profiler import crawl_schema
-from .plans.executor import run_readonly
+from .plans.executor import ResultCache, run_readonly
 from .plans.nl2sql import NL2SQLEngine
 from .plans.safety import SQLSafetyError
 from .sources.parquet import register_views
@@ -62,6 +66,7 @@ class SQLizerService:
         self._metadata = crawl_schema(spark, sf_dir, sample_size=5)
         self._trainer = ModelTrainer(model_dir)
         self._engine = NL2SQLEngine(spark, self._metadata)
+        self._cache = ResultCache(sf_dir)
         self._lock = threading.Lock()
         # per-schema_id engines for the trained model_query path;
         # invalidated on retrain/delete
@@ -122,22 +127,19 @@ class SQLizerService:
         question = (question or "").strip()
         if not question:
             return {"ok": False, "error": "Missing 'question'"}
+        linked = self._engine.link(question)
         try:
-            _df, sql = self._engine.query_df(question)
+            _df, sql = self._engine.query_df(question, linked=linked)
         except (SQLSafetyError, ValueError) as e:
             return {"ok": False, "error": f"Validation failed: {e}"}
-        return {
-            "ok": True,
-            "sql": sql,
-            "slice": self._engine._relevant(question),  # noqa: SLF001
-            "warnings": [],
-        }
+        return {"ok": True, "sql": sql, "slice": linked[0], "warnings": []}
 
     def run(
         self, sql: str, timeout_ms: int = 5000, max_rows: int = 100
     ) -> dict[str, Any]:
         """Validate-again-and-execute: {ok, columns, rows, rowcount,
-        explain} (the safety pass re-runs here like /ai/run's does)."""
+        explain, cached} (the safety pass re-runs here like /ai/run's
+        does, cache hit or not)."""
         sql = (sql or "").strip()
         if not sql:
             return {"ok": False, "error": "Missing 'sql'"}
@@ -147,6 +149,7 @@ class SQLizerService:
             allowed_tables=list(self._engine.schema),
             limit=max_rows,
             timeout_ms=timeout_ms,
+            cache=self._cache,
         )
         if not res.ok:
             return {"ok": False, "error": res.error, "sql": res.sql}
@@ -157,17 +160,19 @@ class SQLizerService:
             "rows": res.rows,
             "rowcount": res.rowcount,
             "explain": res.explain,
+            "cached": res.cached,
         }
 
     def ask(self, question: str) -> dict[str, Any]:
         """Full pipeline: generate + execute with the retry ladder."""
-        res = self._engine.ask(question)
+        res = self._engine.ask(question, cache=self._cache)
         out = {
             "ok": res.ok,
             "sql": res.sql,
             "columns": res.columns,
             "rows": res.rows,
             "rowcount": res.rowcount,
+            "cached": res.cached,
         }
         if res.error:
             out["error"] = res.error
@@ -294,9 +299,10 @@ class SQLizerService:
             engine = NL2SQLEngine(self.spark, self._metadata)
             engine.attach_model(model)
             self._model_engines[schema_id] = engine
-        relevant = engine._relevant(question)  # noqa: SLF001
+        linked = engine.link(question)
+        relevant = linked[0]
         last: Exception | None = None
-        for cand in engine.generate(question):
+        for cand in engine.generate(question, linked=linked):
             try:
                 final = validate(
                     cand.sql,

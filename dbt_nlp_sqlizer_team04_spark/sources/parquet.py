@@ -14,6 +14,8 @@ pushdown + column pruning from Catalyst either way.
 from __future__ import annotations
 
 import os
+import stat
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -38,21 +40,53 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def data_fingerprint(path: str) -> tuple:
+    """(path, size, mtime_ns) of every file at or under ``path``, sorted.
+
+    A plain file costs one ``os.stat``; a directory is walked recursively
+    (``os.walk``), so an in-place rewrite of a nested part file, such as a
+    hive-partitioned ``k=v/part-*.parquet``, changes the fingerprint even
+    though no directory's own stat moves. Raises ``OSError`` when ``path``
+    does not exist. Keys both the schema cache below and the executor's
+    result cache.
+    """
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return ((path, st.st_size, st.st_mtime_ns),)
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs.sort()
+        for f in sorted(files):
+            fp = os.path.join(root, f)
+            fst = os.stat(fp)
+            out.append((fp, fst.st_size, fst.st_mtime_ns))
+    return tuple(out)
+
+
+# Per-session count of register_views calls, kept on the session object
+# like the temp views it counts: the executor's result cache keys on it,
+# because the views a SQL string resolves against may have changed.
+_VIEWS_GENERATION = "_dbt_nlp_views_generation"
+_generation_lock = threading.Lock()
+
+
+def views_generation(spark: SparkSession) -> int:
+    return getattr(spark, _VIEWS_GENERATION, 0)
+
+
 # Parquet-footer schema cache: the driver-side footer read + schema
 # inference costs ~130-270 ms per `spark.read.parquet` call in this
 # environment vs ~20-40 ms with an explicit schema (guide §6: file
 # listing/metadata work is driver-side, single-process, and paid per
 # query without a catalog). A real deployment registers these tables in
 # a catalog exactly so that query N never re-infers what query 1
-# already knew; this cache is that catalog's schema entry. The key
-# signature (size, mtime_ns — plus the newest/biggest part file for a
-# directory dataset, whose root stat does not change when a part file
-# is rewritten in place) invalidates on any in-place regeneration of
-# the corpus — same contract as operators/dedup._sf_tag. The key also
-# carries the nanosAsLong conf value inference depends on, so a schema
-# inferred before the event-time guard pinned the conf can never be
-# served after it. No data rows are cached: every query still scans
-# parquet.
+# already knew; this cache is that catalog's schema entry. The key is
+# the path's :func:`data_fingerprint`, so it invalidates on any in-place
+# regeneration of the corpus, nested part files included — same
+# contract as operators/dedup._sf_tag. The key also carries the
+# nanosAsLong conf value inference depends on, so a schema inferred
+# before the event-time guard pinned the conf can never be served after
+# it. No data rows are cached: every query still scans parquet.
 _SCHEMA_CACHE: dict[tuple, object] = {}
 
 _NANOS_CONF_MEMO = "_dbt_nlp_nanos_as_long_conf"
@@ -74,19 +108,7 @@ def _nanos_conf(spark: SparkSession) -> str:
 
 def _read_with_cached_schema(spark: SparkSession, path: str) -> DataFrame:
     try:
-        st = os.stat(path)
-        key: tuple = (path, st.st_size, st.st_mtime_ns, _nanos_conf(spark))
-        if os.path.isdir(path):
-            # A rewritten part file changes neither the dir's size nor
-            # mtime; fold the max part-file signature into the key.
-            parts = [
-                e.stat() for e in os.scandir(path) if e.is_file()
-            ]
-            key += (
-                len(parts),
-                max((p.st_mtime_ns for p in parts), default=0),
-                max((p.st_size for p in parts), default=0),
-            )
+        key = (data_fingerprint(path), _nanos_conf(spark))
     except OSError:
         return spark.read.parquet(path)  # missing file: loud error as before
     schema = _SCHEMA_CACHE.get(key)
@@ -120,12 +142,7 @@ def _spread_small(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     operator: only per-row-CPU-bound consumers ask for it (a cheap
     filter/limit path must keep the bare scan)."""
     try:
-        st = os.stat(path)
-        total = st.st_size
-        if os.path.isdir(path):
-            total = sum(
-                e.stat().st_size for e in os.scandir(path) if e.is_file()
-            )
+        total = sum(size for _, size, _ in data_fingerprint(path))
     except OSError:
         return df
     if total >= _SPREAD_MAX_BYTES:
@@ -179,10 +196,15 @@ def load_table(
 def register_views(
     spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TABLES
 ) -> list[str]:
-    """Register every available parquet table as a temp view; returns names."""
+    """Register every available parquet table as a temp view; returns names.
+
+    Bumps the session's :func:`views_generation` once the views are in
+    place, so results cached against the old views miss."""
     registered = []
     for t in tables:
         if os.path.exists(table_path(sf_dir, t)):
             load_table(spark, sf_dir, t).createOrReplaceTempView(t)
             registered.append(t)
+    with _generation_lock:
+        setattr(spark, _VIEWS_GENERATION, views_generation(spark) + 1)
     return registered

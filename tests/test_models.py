@@ -146,6 +146,43 @@ def test_engine_uses_trained_model(spark, sf_smoke, metadata, model):
     assert rows and "c_mktsegment" in sql and "c_acctbal" in sql.lower()
 
 
+RACE_QUESTIONS = [
+    "average customer balance per market segment",
+    "total order price per order status",
+    "count of customers per nation",
+    "max account balance per market segment",
+    "sum of total price per order priority",
+    "number of orders per clerk",
+    "average order total per ship priority",
+    "count of nations per region",
+]
+
+
+def test_concurrent_generate_matches_serial(spark, metadata, model):
+    """Column scores travel with each request, not on the shared engine:
+    8 threads asking distinct questions get the serial run's SQL."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from dbt_nlp_sqlizer_team04_spark.plans.nl2sql import NL2SQLEngine
+
+    eng = NL2SQLEngine(spark, metadata, model=model)
+
+    def sqls(q):
+        return [c.sql for c in eng.generate(q)]
+
+    serial = {q: sqls(q) for q in RACE_QUESTIONS}
+    work = RACE_QUESTIONS * 4
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # switch threads often: races show sooner
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            got = list(pool.map(sqls, work, timeout=300))
+    finally:
+        sys.setswitchinterval(interval)
+    assert [serial[q] for q in work] == got
+
+
 # ------------------------------------------------- A19 LLM training data
 def test_llm_training_examples_tolerant_parse(metadata):
     """Canned LLM response: prose around a JSON array → parsed pairs,

@@ -6,13 +6,18 @@ from __future__ import annotations
 
 import pytest
 
-from dbt_nlp_sqlizer_team04_spark.plans.executor import run_readonly
+from dbt_nlp_sqlizer_team04_spark.plans.executor import ResultCache, run_readonly
 from dbt_nlp_sqlizer_team04_spark.plans.nl2sql import NL2SQLEngine, explain_query
 
 
 @pytest.fixture(scope="module")
 def engine(spark, sf_smoke):
     return NL2SQLEngine.from_sf_dir(spark, sf_smoke, sample_size=5)
+
+
+@pytest.fixture()
+def cache(sf_smoke):
+    return ResultCache(sf_smoke)
 
 
 EVAL_QUESTIONS = [
@@ -27,25 +32,25 @@ EVAL_QUESTIONS = [
 ]
 
 
-def test_eval_success_rate(engine):
+def test_eval_success_rate(engine, cache):
     ok = 0
     for q in EVAL_QUESTIONS:
-        res = engine.ask(q)
+        res = engine.ask(q, cache=cache)
         if res.ok and res.rowcount >= 1:
             ok += 1
     # reference pilot: 10/12 (83%) — require >= 85% here
     assert ok / len(EVAL_QUESTIONS) >= 0.85, f"only {ok}/{len(EVAL_QUESTIONS)} succeeded"
 
 
-def test_grouped_count_sql_shape(engine):
-    res = engine.ask("count of orders per orderpriority")
+def test_grouped_count_sql_shape(engine, cache):
+    res = engine.ask("count of orders per orderpriority", cache=cache)
     assert res.ok
     assert "GROUP BY o_orderpriority" in res.sql
     assert res.rowcount == 5
     assert res.columns == ["o_orderpriority", "cnt"]
 
 
-def test_unsafe_rate_zero(engine, spark):
+def test_unsafe_rate_zero(engine, spark, cache):
     """Adversarial probes through the run (execute) verb must all fail
     closed — the 10/10 blocked parity."""
     probes = [
@@ -63,26 +68,32 @@ def test_unsafe_rate_zero(engine, spark):
     blocked = sum(
         1
         for p in probes
-        if not run_readonly(spark, p, allowed_tables=["orders", "customer"]).ok
+        if not run_readonly(
+            spark, p, allowed_tables=["orders", "customer"], cache=cache
+        ).ok
     )
     assert blocked == len(probes)
 
 
-def test_unbounded_select_gets_limit(engine, spark):
-    res = run_readonly(spark, "SELECT * FROM lineitem", allowed_tables=["lineitem"])
+def test_unbounded_select_gets_limit(engine, spark, cache):
+    res = run_readonly(
+        spark, "SELECT * FROM lineitem", allowed_tables=["lineitem"], cache=cache
+    )
     assert res.ok
     assert res.rowcount <= 100
     assert "LIMIT 100" in res.sql
 
 
-def test_table_allowlist_enforced(spark):
-    res = run_readonly(spark, "SELECT * FROM lineitem", allowed_tables=["orders"])
+def test_table_allowlist_enforced(spark, cache):
+    res = run_readonly(
+        spark, "SELECT * FROM lineitem", allowed_tables=["orders"], cache=cache
+    )
     assert not res.ok
     assert "not allowed" in res.error
 
 
-def test_jsonable_rows(engine):
-    res = engine.ask("show me all orders")
+def test_jsonable_rows(engine, cache):
+    res = engine.ask("show me all orders", cache=cache)
     assert res.ok
     # o_orderdate must be ISO string, not datetime
     date_idx = res.columns.index("o_orderdate")
@@ -107,6 +118,7 @@ def test_cost_gate_rejects_huge_estimate(spark, sf_check):
         "SELECT * FROM lineitem a JOIN orders b LIMIT 200",
         allowed_tables=["lineitem", "orders"],
         max_estimated_rows=100_000,
+        cache=ResultCache(sf_check),
     )
     # either blocked by the cost gate or (if stats estimate is tiny) runs
     # bounded — but it must never return unbounded output
@@ -114,7 +126,7 @@ def test_cost_gate_rejects_huge_estimate(spark, sf_check):
         assert res.rowcount <= 200
 
 
-def test_llm_multi_candidate_parsing(engine, monkeypatch):
+def test_llm_multi_candidate_parsing(engine, cache, monkeypatch):
     """A 3-candidate QUERY:-prefixed response (inference.py:199-206
     shape) must put all 3 into the ladder, ranked with the templates."""
     from dbt_nlp_sqlizer_team04_spark.plans import nl2sql as N
@@ -132,7 +144,7 @@ def test_llm_multi_candidate_parsing(engine, monkeypatch):
     assert len(llm) == 3
     assert any("GROUP BY o_orderpriority" in c.sql for c in llm)
     # ladder still executes end-to-end with the LLM rungs present
-    res = engine.ask("count of orders per orderpriority")
+    res = engine.ask("count of orders per orderpriority", cache=cache)
     assert res.ok
 
 

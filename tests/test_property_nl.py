@@ -22,6 +22,8 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from dbt_nlp_sqlizer_team04_spark.plans.executor import ResultCache
+
 SF = "/root/testdata/sf0.001"
 
 _AGGS = {
@@ -135,7 +137,7 @@ def test_nl2sql_grammar_sweep(sql_engine, oracle, agg, grp, flt):
         ensure_select_only(cand.sql)
         ensure_tables_allowed(cand.sql, list(sql_engine.schema))
 
-    res = sql_engine.ask(question)
+    res = sql_engine.ask(question, cache=ResultCache(SF))
     assert res.ok, f"{question!r} failed: {res.error}"
     assert "limit" in res.sql.lower()  # S3 injection present
 
@@ -199,7 +201,9 @@ def test_nl2sql_iso_date_filter_regression(sql_engine, oracle):
     (_YEAR_CMP_RE claimed the ISO literal's year prefix), silently
     dropping the month/day. The full-date tier must win and the year
     tier must not double-claim."""
-    res = sql_engine.ask("count of orders per priority after 1996-03-15")
+    res = sql_engine.ask(
+        "count of orders per priority after 1996-03-15", cache=ResultCache(SF)
+    )
     assert res.ok
     s = res.sql.lower()
     assert "date '1996-03-15'" in s
