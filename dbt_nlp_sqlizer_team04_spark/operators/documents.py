@@ -39,7 +39,9 @@ strings (``F.to_json``), scalars untouched.
 
 from __future__ import annotations
 
+import itertools
 import json
+import math
 import re
 from typing import Any
 
@@ -416,18 +418,23 @@ def lookup_correlated(
             )
         payload_cols = list(project)
 
-    def resolve(tok: str) -> Column:
+    def local(tok: str) -> str:
+        if tok.startswith("$$"):
+            raise DocumentQueryError(f"Unbound expression variable: {tok}")
+        return "`__l`." + _sql_ident(tok[1:])
+
+    def resolve(tok: str) -> str:
+        # SQL text for the expression compiler: '$$var' → the let
+        # binding evaluated on the LOCAL side, '$field' → the FOREIGN
+        # side (the same rule inside $group accumulators and keys)
         if tok.startswith("$$"):
             var = tok[2:]
             if var not in let:
                 raise DocumentQueryError(
                     f"$lookup let variable {var!r} is not defined"
                 )
-            b = let[var]
-            if isinstance(b, str) and b.startswith("$"):
-                return F.col(f"__l.{b[1:]}")
-            return F.lit(b)
-        return F.col(f"__f.{tok[1:]}")
+            return _sql_of(let[var], _Env(local))
+        return "`__f`." + _sql_ident(tok[1:])
 
     if out_name in df.columns:
         # Mongo OVERWRITES an existing field named by "as" (the
@@ -482,15 +489,9 @@ def lookup_correlated(
                     "compiler's __* namespace"
                 )
         matched_c = F.col("__f.__frow").isNotNull()
-
-        def fresolve(tok: str) -> Column:
-            if tok.startswith("$$"):
-                return resolve(tok)
-            return F.col(f"__f.{tok[1:]}")
-
         acc_aliases = [a for a in sub_group if a != "_id"]
         aggs = [
-            _acc_to_agg_masked(a, s_, matched_c, fresolve)
+            _acc_to_agg_masked(a, s_, matched_c, resolve)
             for a, s_ in sub_group.items()
             if a != "_id"
         ]
@@ -509,7 +510,7 @@ def lookup_correlated(
             # (row_id, k) then row_id — both map-side-combinable; no
             # per-row re-execution and no skew beyond the data's own
             # key distribution.
-            key_c = _ref(gid, fresolve)
+            key_c = _ref(gid, resolve)
             per_key = joined.groupBy(
                 F.col(f"__l.{row_id}").alias(row_id),
                 key_c.alias("__gk"),
@@ -603,292 +604,22 @@ def lookup_correlated(
 
 
 # ----------------------------------------------------- $group stage (C5)
-def _acc_to_agg(alias: str, spec: dict[str, Any], resolve=None) -> Column:
+def _acc_to_agg(alias: str, spec: dict[str, Any]) -> Column:
     """Unmasked accumulator — delegates to the masked dispatch with a
     constant-true condition (Catalyst folds the no-op CASE away), so
     there is exactly ONE accumulator table to extend."""
-    return _acc_to_agg_masked(alias, spec, F.lit(True), resolve)
+    return _acc_to_agg_masked(alias, spec, F.lit(True))
 
 
 def _ref(arg: Any, resolve=None) -> Column:
-    """'$field' → column reference; literals pass through; operator
-    dicts recurse into the expression language (:func:`_expr`). An
-    optional ``resolve`` callable overrides how '$field' / '$$var'
-    tokens become Columns — the correlated-$lookup compiler uses it to
+    """Compile an expression argument — '$field', '$$var', a literal, a
+    document or array literal, or an {$op: operands} document — to ONE
+    F.expr() over the SQL text :func:`_sql_of` renders. ``resolve``
+    overrides how '$field' and unbound '$$var' tokens render: it
+    returns SQL text, and the correlated-$lookup compiler uses it to
     bind '$field' to the foreign side and '$$var' to the local side.
-
-    With the default resolver, a supported expression document compiles
-    through the SQL-text fast path (ONE F.expr parse instead of a py4j
-    roundtrip per node — see ``_sql_of``); the trees are identical by
-    the canonicalized-plan test contract, and anything unsupported
-    falls through to the Column path below unchanged."""
-    if resolve is None and _SQL_FAST_PATH:
-        s = _sql_of(arg, None)
-        if s is not None:
-            return F.expr(s)
-    if isinstance(arg, str) and arg.startswith("$"):
-        if resolve is not None:
-            return resolve(arg)
-        if arg.startswith("$$"):
-            raise DocumentQueryError(f"Unbound expression variable: {arg}")
-        return F.col(arg[1:])
-    if isinstance(arg, dict):
-        if len(arg) == 1 and next(iter(arg)).startswith("$"):
-            return _expr(arg, resolve)
-        # document literal (Mongo's object construction in expression
-        # position): {"k": e, …} → a struct with each value compiled —
-        # what $arrayToObject/$objectToArray/$getField compose over
-        if not arg:
-            raise DocumentQueryError(
-                "empty document literal is not a compilable expression"
-            )
-        bad = [k for k in arg if k.startswith("$")]
-        if bad:
-            raise DocumentQueryError(
-                f"document literal keys may not start with '$': {bad} "
-                "(a single-key $-dict is an operator expression)"
-            )
-        return F.struct(
-            *[_ref(v, resolve).alias(k) for k, v in arg.items()]
-        )
-    if isinstance(arg, list):
-        # array literal: each element compiles as an expression (Mongo
-        # semantics — '$refs' and document literals nest inside)
-        if not arg:
-            return F.array().cast("array<string>")
-        return F.array(*[_ref(e, resolve) for e in arg])
-    return F.lit(arg)
-
-
-def _typeof_to_bson(t: Column) -> Column:
-    """Map Spark typeof() names onto Mongo $type names (int/long/
-    double/decimal/string/bool/date/array/object/binData); unknown
-    Spark types pass through under their Spark name."""
-    return (
-        F.when(t.isin("tinyint", "smallint", "int"), F.lit("int"))
-        .when(t == "bigint", F.lit("long"))
-        .when(t.isin("float", "double"), F.lit("double"))
-        .when(t.startswith("decimal"), F.lit("decimal"))
-        .when(t == "string", F.lit("string"))
-        .when(t == "boolean", F.lit("bool"))
-        .when(t.isin("date", "timestamp", "timestamp_ntz"), F.lit("date"))
-        .when(t.startswith("array"), F.lit("array"))
-        .when(t.startswith("struct") | t.startswith("map"), F.lit("object"))
-        .when(t == "binary", F.lit("binData"))
-        .otherwise(t)
-    )
-
-
-def _merge_two_maps(a: Column, b: Column) -> Column:
-    """Later-wins merge of two MAP columns (Mongo $mergeObjects): keep
-    a's entries whose key b does not define, then append b's — avoids
-    map_concat's duplicate-key policy dependence entirely."""
-    return F.map_from_entries(
-        F.concat(
-            F.filter(
-                F.map_entries(a),
-                lambda e: ~F.array_contains(F.map_keys(b), e["key"]),
-            ),
-            F.map_entries(b),
-        )
-    )
-
-
-# Mongo aggregation expression operators → Column expressions. Every
-# operand recurses through _ref, so field refs, literals, and nested
-# operator dicts compose ("$cond" over "$eq" over "$multiply"). All of
-# it stays whole-stage-codegen — the expression dialect compiles to
-# native Catalyst expressions, never a UDF.
-_EXPR_OPS = {
-    "$eq": lambda a, b: a.eqNullSafe(b),
-    "$ne": lambda a, b: ~a.eqNullSafe(b),
-    "$gt": lambda a, b: a > b,
-    "$gte": lambda a, b: a >= b,
-    "$lt": lambda a, b: a < b,
-    "$lte": lambda a, b: a <= b,
-    "$add": lambda *xs: sum(xs[1:], xs[0]),
-    "$subtract": lambda a, b: a - b,
-    "$multiply": lambda *xs: __import__("functools").reduce(
-        lambda p, x: p * x, xs
-    ),
-    "$divide": lambda a, b: a / b,
-    "$toUpper": lambda a: F.upper(a),
-    "$toLower": lambda a: F.lower(a),
-    "$concat": lambda *xs: F.concat(*xs),
-    "$strLenCP": lambda a: F.length(a),
-    "$size": lambda a: F.size(a).cast("long"),
-    # ---- numeric (r8): all native Catalyst, codegen-friendly.
-    # $round/$trunc follow Mongo's HALF_EVEN contract — Spark's
-    # bround IS banker's rounding (plain round() is HALF_UP and would
-    # silently diverge).
-    "$abs": lambda a: F.abs(a),
-    "$ceil": lambda a: F.ceil(a),
-    "$floor": lambda a: F.floor(a),
-    "$mod": lambda a, b: a % b,
-    "$pow": lambda a, b: F.pow(a, b),
-    "$sqrt": lambda a: F.sqrt(a),
-    "$exp": lambda a: F.exp(a),
-    "$ln": lambda a: F.log(a),
-    "$log10": lambda a: F.log10(a),
-    # ---- string (r8)
-    "$trim": lambda a: F.trim(a),
-    "$ltrim": lambda a: F.ltrim(a),
-    "$rtrim": lambda a: F.rtrim(a),
-    "$toString": lambda a: a.cast("string"),
-    "$toInt": lambda a: a.cast("int"),
-    "$toLong": lambda a: a.cast("long"),
-    "$toDouble": lambda a: a.cast("double"),
-    "$toDate": lambda a: a.cast("date"),
-    # Mongo defines $toBool/$toDecimal as $convert shorthands; ANSI
-    # cast is loud on unconvertible input (Mongo errors there too) —
-    # use $convert's onError for the recovering form
-    "$toBool": lambda a: a.cast("boolean"),
-    "$toDecimal": lambda a: a.cast("decimal(38,10)"),
-    # ---- array (r8)
-    "$concatArrays": lambda *xs: F.concat(*xs),
-    "$ifNull": lambda *xs: F.coalesce(*xs),
-    "$in": lambda v, arr: F.array_contains(arr, v),
-    "$not": lambda a: ~a.cast("boolean"),
-    # ---- comparison / boolean (r9 wave 2). $cmp/$strcasecmp return
-    # -1/0/1; a null operand yields null (documented divergence —
-    # Mongo totally orders null below numbers, a per-type order no
-    # single Catalyst expression reproduces; $ifNull the operands if
-    # null ranking matters).
-    "$cmp": lambda a, b: (
-        F.when(a.eqNullSafe(b) & a.isNotNull(), 0)
-        .when(a < b, -1).when(a > b, 1).cast("int")
-    ),
-    "$strcasecmp": lambda a, b: (
-        F.when(F.lower(a) == F.lower(b), 0)
-        .when(F.lower(a) < F.lower(b), -1)
-        .when(F.lower(a) > F.lower(b), 1).cast("int")
-    ),
-    # Mongo's arg shape is [array] — the list unwraps to one operand
-    # Mongo TRUTHINESS in the element predicate: null (and 0/false)
-    # elements are FALSY — without the coalesce, Spark's 3VL
-    # exists/forall returns NULL for [1, null] where Mongo says
-    # false/true by the falsy rule (r12 set-sweep find)
-    "$anyElementTrue": lambda a: F.exists(
-        a, lambda x: F.coalesce(x.cast("boolean"), F.lit(False))),
-    "$allElementsTrue": lambda a: F.forall(
-        a, lambda x: F.coalesce(x.cast("boolean"), F.lit(False))),
-    # ---- arrays (r9 wave 2)
-    "$indexOfArray": lambda arr, v: (
-        (F.array_position(arr, v) - F.lit(1)).cast("long")
-    ),
-    "$setEquals": lambda a, b: (
-        F.array_sort(F.array_distinct(a)) == F.array_sort(F.array_distinct(b))
-    ),
-    "$setIsSubset": lambda a, b: F.size(F.array_except(a, b)) == 0,
-    # ---- math (r9 wave 2) — all 1:1 native
-    "$sin": lambda a: F.sin(a), "$cos": lambda a: F.cos(a),
-    "$tan": lambda a: F.tan(a), "$asin": lambda a: F.asin(a),
-    "$acos": lambda a: F.acos(a), "$atan": lambda a: F.atan(a),
-    "$atan2": lambda a, b: F.atan2(a, b),
-    "$sinh": lambda a: F.sinh(a), "$cosh": lambda a: F.cosh(a),
-    "$tanh": lambda a: F.tanh(a),
-    "$degreesToRadians": lambda a: F.radians(a),
-    "$radiansToDegrees": lambda a: F.degrees(a),
-    # [num, base] — computed as ln(x)/ln(b), the same identity Mongo's
-    # and DuckDB's arbitrary-base logs use
-    "$log": lambda x, b: F.log(x) / F.log(b),
-    "$bitAnd": lambda *xs: __import__("functools").reduce(
-        lambda p, x: p.bitwiseAND(x), xs
-    ),
-    "$bitOr": lambda *xs: __import__("functools").reduce(
-        lambda p, x: p.bitwiseOR(x), xs
-    ),
-    "$bitXor": lambda *xs: __import__("functools").reduce(
-        lambda p, x: p.bitwiseXOR(x), xs
-    ),
-    "$bitNot": lambda a: F.bitwise_not(a),
-    # ---- strings (r9 wave 2)
-    "$strLenBytes": lambda a: F.octet_length(a),
-    # $binarySize: byte size of a string (UTF-8) or binary value —
-    # octet_length covers both input types natively; Mongo returns an
-    # int, null for null input (octet_length's contract too)
-    "$binarySize": lambda a: F.octet_length(a).cast("long"),
-    # ---- r10: byte-indexed substring + type introspection.
-    # $substrBytes slices the UTF-8 BYTES (substring over a binary
-    # cast — native); a slice that splits a multi-byte character
-    # yields replacement characters where Mongo errors (documented
-    # divergence — Spark's binary→string cast does not validate).
-    "$substrBytes": lambda s, start, cnt: F.substring(
-        s.cast("binary"), start.cast("int") + F.lit(1), cnt.cast("int")
-    ).cast("string"),
-    # $isNumber/$type read the COLUMN type via typeof() (constant per
-    # expression — Catalyst folds it) plus a per-row null gate: in a
-    # typed columnar engine a value's BSON type is its column type,
-    # and null is the only per-row variation. Mongo's 'missing' is
-    # not representable (columns always exist) — documented.
-    "$isNumber": lambda a: a.isNotNull() & F.typeof(a).rlike(
-        r"^(tinyint|smallint|int|bigint|float|double)$|^decimal\("
-    ),
-    "$type": lambda a: F.when(a.isNull(), F.lit("null")).otherwise(
-        _typeof_to_bson(F.typeof(a))
-    ),
-    # ---- object/map (r9): the doc plane's dynamic-key objects are MAP
-    # columns; $objectToArray emits Mongo's [{k, v}, …] shape in the
-    # map's entry order (map_from_entries preserves insertion order, so
-    # a build→entries round-trip is order-stable). $arrayToObject takes
-    # the same {k, v} shape back. Struct inputs fail at analysis time
-    # with Spark's type error — dynamic keys belong in maps.
-    "$objectToArray": lambda m: F.transform(
-        F.map_entries(m),
-        lambda e: F.struct(e["key"].alias("k"), e["value"].alias("v")),
-    ),
-    # duplicate keys follow Mongo's documented LAST-value-wins: an
-    # entry survives only when no later entry redefines its key (the
-    # _merge_two_maps key-filter pattern, indexed) — otherwise Spark's
-    # default map_from_entries duplicate-key policy would throw
-    "$arrayToObject": lambda a: F.map_from_entries(
-        F.filter(
-            F.transform(a, lambda e: F.struct(e["k"], e["v"])),
-            lambda e, i: ~F.exists(
-                F.slice(a, i + F.lit(2), F.greatest(F.size(a), F.lit(1))),
-                lambda later: later["k"] == e["k"],
-            ),
-        )
-    ),
-    # later-wins variadic merge over MAP columns; a null operand
-    # propagates null (Mongo skips nulls — $ifNull an empty map if
-    # that matters)
-    "$mergeObjects": lambda *xs: __import__("functools").reduce(
-        _merge_two_maps, xs
-    ),
-    "$setUnion": lambda *xs: F.array_sort(F.array_distinct(F.concat(*xs))),
-    "$setIntersection": lambda a, b: F.array_sort(F.array_intersect(a, b)),
-    "$setDifference": lambda a, b: F.array_sort(F.array_except(a, b)),
-    "$reverseArray": lambda a: F.reverse(a),
-    # ---- date parts (r8): Mongo returns ints
-    "$year": lambda a: F.year(a),
-    "$month": lambda a: F.month(a),
-    "$dayOfMonth": lambda a: F.dayofmonth(a),
-    "$hour": lambda a: F.hour(a),
-    "$minute": lambda a: F.minute(a),
-    "$second": lambda a: F.second(a),
-    "$dayOfWeek": lambda a: F.dayofweek(a),
-    "$dayOfYear": lambda a: F.dayofyear(a),
-    # ISO fields: weekofyear IS the ISO week; ISO weekday is Mon=1..
-    # Sun=7 (weekday() is 0-based Monday); the ISO week-year is the
-    # calendar year of that week's THURSDAY (d + (4 - isoDow) days) —
-    # the standard identity, no Spark pattern needed
-    "$isoWeek": lambda a: F.weekofyear(a),
-    "$isoDayOfWeek": lambda a: F.weekday(a) + F.lit(1),
-    "$isoWeekYear": lambda a: F.year(
-        F.date_add(F.to_date(a), F.lit(4) - (F.weekday(a) + F.lit(1)))
-    ).cast("long"),
-    # Mongo's $week: Sunday-start, week 1 begins at the first Sunday,
-    # earlier days are week 0 — floor((doy-1 - (dayofweek-1) + 7) / 7)
-    "$week": lambda a: F.floor(
-        (F.dayofyear(a) - F.lit(1) - (F.dayofweek(a) - F.lit(1)) + F.lit(7))
-        / F.lit(7)
-    ).cast("int"),
-    "$millisecond": lambda a: F.floor(
-        (F.unix_micros(a.cast("timestamp")) % F.lit(1_000_000))
-        / F.lit(1000)
-    ).cast("int"),
-}
+    Malformed input raises DocumentQueryError here, at compile time."""
+    return F.expr(_sql_of(arg, _Env(resolve)))
 
 
 def _int_literal(x: Any, op: str) -> int:
@@ -897,24 +628,6 @@ def _int_literal(x: Any, op: str) -> int:
             f"{op} expects an integer literal, got {x!r}"
         )
     return x
-
-
-def _scoped_resolve(outer, bindings: dict[str, Column]):
-    """Resolver for array-expression lambda bodies: '$$<var>' tokens in
-    ``bindings`` become the lambda parameters; everything else delegates
-    to the enclosing resolver (so $filter inside a correlated $lookup
-    still sees the right sides)."""
-
-    def resolve(tok: str) -> Column:
-        if tok.startswith("$$") and tok[2:] in bindings:
-            return bindings[tok[2:]]
-        if outer is not None:
-            return outer(tok)
-        if tok.startswith("$$"):
-            raise DocumentQueryError(f"Unbound expression variable: {tok}")
-        return F.col(tok[1:])
-
-    return resolve
 
 
 _DATE_TRUNC_UNITS = {"year", "quarter", "month", "week", "day", "hour",
@@ -1015,7 +728,7 @@ def _mongo_datetime_fmt(fmt: str, op: str) -> str:
 _REGEX_OPTIONS = {"i", "m", "s", "x"}
 
 # $convert targets: Mongo type name -> Spark cast type ("date" is the
-# try-parse cascade, handled in _expr), plus Mongo's numeric type codes
+# try-parse cascade, see _sql_expr_text), plus Mongo's numeric type codes
 _CONVERT_TYPES = {
     "double": "double", "string": "string", "bool": "boolean",
     "date": "date", "int": "int", "long": "long",
@@ -1123,28 +836,28 @@ def _regex_operands(op: str, operands: Any) -> tuple[Any, str]:
     return operands["input"], pattern
 
 
-# ------------------------------------------------------------------ r14
-# SQL-text fast path for expression compilation (guide §4/§5: the
-# driver should do almost no work — through this environment's ~1-2 ms
-# py4j gateway every Column operation is a JVM roundtrip, so a deep
-# expression document costs 0.2-0.6 s of PURE plan construction when
-# built node-by-node). The emitter below renders a supported expression
-# document to ONE SQL string, compiled with a single F.expr() parse.
+# ------------------------------------------------ expression compiler
+# Mongo expression documents compile to ONE SQL string, parsed by a
+# single F.expr() (through the py4j gateway every Column operation is
+# a JVM roundtrip, so building a deep expression node by node costs
+# 0.2-0.6 s of pure plan construction). Every operand recurses through _sql_of, so field
+# refs, literals and nested operator documents compose ("$cond" over
+# "$eq" over "$multiply"). All of it lowers to native Catalyst
+# expressions — whole-stage codegen, never a UDF. Malformed input
+# raises DocumentQueryError while the text is rendered, so Spark only
+# ever parses validated text.
 #
-# Equivalence contract: every template here parses to the EXACT
-# Catalyst tree the Column path builds — verified by canonicalized-
-# optimized-plan equality in tests/test_documents.py
-# (test_sql_fast_path_tree_equivalence) over the full op battery, so
-# plans, results and hashes are unchanged by construction. Anything
-# not provably identical (document literals — struct() vs
-# named_struct() render differently — $convert's cascade, the regex
-# family, date arithmetic, $let, …) returns None and falls back to the
-# Column path, which also keeps every typed-error contract: the
-# emitter only fires on specs it has fully validated, so malformed
-# input always reaches the Column path's DocumentQueryError.
-_SQL_FAST_PATH = True
+# Lambda hygiene: every lambda the compiler introduces — the $map/
+# $filter/$reduce bodies and the helper lambdas of the $arrayToObject,
+# $objectToArray, $mergeObjects, $regexFindAll, $zip and
+# $any/$allElementsTrue templates — binds a parameter named
+# __m_<n> from a per-compile counter (_Env.fresh). Operand text the
+# templates splice into their lambda bodies can therefore never be
+# captured: user variables only ever stand for such fresh names, column
+# refs under the __m_ prefix are refused (_sql_ident), and resolver
+# text is qualified (`__l`.`f`).
 
-_SQL_IDENT_RE = __import__("re").compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
+_LAMBDA_PREFIX = "__m_"
 
 _SQL_CASTS = {
     "$toString": "STRING", "$toInt": "INT", "$toLong": "BIGINT",
@@ -1156,9 +869,11 @@ _SQL_DATE_FNS = {
     "$year": "year", "$month": "month", "$dayOfMonth": "dayofmonth",
     "$hour": "hour", "$minute": "minute", "$second": "second",
     "$dayOfWeek": "dayofweek", "$dayOfYear": "dayofyear",
+    # weekofyear IS the ISO week
     "$isoWeek": "weekofyear",
 }
 
+# one-operand operators that map 1:1 onto a native function
 _SQL_FN1 = {
     "$toUpper": "upper", "$toLower": "lower", "$strLenCP": "length",
     "$abs": "abs", "$ceil": "ceil", "$floor": "floor", "$sqrt": "sqrt",
@@ -1168,15 +883,55 @@ _SQL_FN1 = {
     "$tan": "tan", "$asin": "asin", "$acos": "acos", "$atan": "atan",
     "$sinh": "sinh", "$cosh": "cosh", "$tanh": "tanh",
     "$degreesToRadians": "radians", "$radiansToDegrees": "degrees",
-    "$bitNot": None,  # rendered as ~x below
+}
+
+# operand-count bounds (min, max; None = variadic) of the operators
+# whose operands are all plain sub-expressions
+_ARITY: dict[str, tuple[int, int | None]] = {
+    **dict.fromkeys((
+        *_SQL_FN1, *_SQL_CASTS, *_SQL_DATE_FNS, "$size", "$binarySize",
+        "$not", "$anyElementTrue", "$allElementsTrue", "$isoDayOfWeek",
+        "$isoWeekYear", "$week", "$millisecond", "$bitNot",
+        "$objectToArray", "$arrayToObject", "$isNumber", "$type"), (1, 1)),
+    **dict.fromkeys((
+        "$eq", "$ne", "$gt", "$gte", "$lt", "$lte", "$subtract",
+        "$divide", "$mod", "$pow", "$atan2", "$log", "$in", "$cmp",
+        "$strcasecmp", "$indexOfArray", "$setEquals", "$setIsSubset",
+        "$setIntersection", "$setDifference"), (2, 2)),
+    **dict.fromkeys((
+        "$add", "$multiply", "$ifNull", "$bitAnd", "$bitOr", "$bitXor",
+        "$setUnion", "$mergeObjects"), (1, None)),
+    "$concat": (0, None), "$concatArrays": (0, None),
+    "$substrBytes": (3, 3),
 }
 
 
-def _sql_lit(v: Any) -> str | None:
+class _Env:
+    """Compile state of one expression document: the SQL text each
+    bound '$$var' stands for, the resolver for '$field' and unbound
+    '$$var' tokens (None = the current document's columns), and the
+    per-compile counter behind fresh lambda parameter names."""
+
+    __slots__ = ("vars", "resolve", "_names")
+
+    def __init__(self, resolve=None, vars=None, names=None):
+        self.vars: dict[str, str] = vars or {}
+        self.resolve = resolve
+        self._names = names if names is not None else itertools.count()
+
+    def bind(self, vars: dict[str, str]) -> "_Env":
+        return _Env(self.resolve, {**self.vars, **vars}, self._names)
+
+    def fresh(self) -> str:
+        return f"{_LAMBDA_PREFIX}{next(self._names)}"
+
+
+def _sql_lit(v: Any) -> str:
     """SQL literal with the same Catalyst type F.lit() would produce
     (bool before int — bool is an int subclass; D-suffixed doubles —
     a bare 1.5 parses as DECIMAL; L-suffix only past int32 — F.lit
-    makes IntegerType literals in range)."""
+    makes IntegerType literals in range). Strings escape '{' so the
+    parser's ${var} substitution can never rewrite user text."""
     if v is None:
         return "NULL"
     if isinstance(v, bool):
@@ -1186,80 +941,90 @@ def _sql_lit(v: Any) -> str | None:
             return str(v)
         if -(2**63) <= v < 2**63:
             return f"{v}L"
-        return None
-    if isinstance(v, float):
-        import math
-
-        if not math.isfinite(v):
-            return None
-        return repr(v) + "D"
-    if isinstance(v, str):
-        if any(ord(c) < 32 or ord(c) == 127 for c in v):
-            return None  # keep control-char escaping out of scope
-        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
-    return None  # dates/datetimes/bytes: Column path
-
-
-def _sql_ident(path: str) -> str | None:
-    if not path or "`" in path or path.startswith("__m_"):
-        # "__m_" is the emitter's lambda-parameter namespace: a column
-        # of that name would be shadowed inside lambda bodies
-        return None
-    return ".".join("`" + seg + "`" for seg in path.split("."))
+    elif isinstance(v, float):
+        if math.isfinite(v):
+            return repr(v) + "D"
+    elif isinstance(v, str):
+        if not any(ord(c) < 32 or ord(c) == 127 for c in v):
+            return "'" + (v.replace("\\", "\\\\").replace("'", "\\'")
+                          .replace("{", "\\{")) + "'"
+    raise DocumentQueryError(
+        f"literal {v!r} ({type(v).__name__}) has no expression-dialect "
+        "rendering: use a finite number within int64, a string without "
+        "control characters, a boolean or null"
+    )
 
 
-def _sql_of(arg: Any, env: dict[str, str] | None) -> str | None:
-    """SQL text for an expression document under the DEFAULT resolver
-    ('$f' → column f; '$$v' → the lambda binding in ``env``), or None
-    when any node lacks a verified SQL twin."""
-    if isinstance(arg, str):
+def _sql_name(name: str) -> str:
+    """Backquoted struct-field / identifier part."""
+    if "${" in name:
+        raise DocumentQueryError(f"field name {name!r} may not contain '${{'")
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_ident(path: str) -> str:
+    """'$a.b' field path → `a`.`b`. The __m_ prefix is the compiler's
+    lambda-parameter namespace: a column of that name would be shadowed
+    inside lambda bodies (Spark resolves names case-insensitively)."""
+    if not path or path.lower().startswith(_LAMBDA_PREFIX):
+        raise DocumentQueryError(
+            f"field path {'$' + path!r} is empty or uses the compiler's "
+            f"reserved {_LAMBDA_PREFIX}* namespace"
+        )
+    return ".".join(_sql_name(seg) for seg in path.split("."))
+
+
+def _sql_of(arg: Any, env: _Env) -> str:
+    """SQL text for one expression argument under ``env``."""
+    if isinstance(arg, str) and arg.startswith("$"):
+        if arg.startswith("$$") and arg[2:] in env.vars:
+            return env.vars[arg[2:]]
+        if env.resolve is not None:
+            return env.resolve(arg)
         if arg.startswith("$$"):
-            if env and arg[2:] in env:
-                return env[arg[2:]]
-            return None
-        if arg.startswith("$"):
-            return _sql_ident(arg[1:])
-        return _sql_lit(arg)
+            raise DocumentQueryError(f"Unbound expression variable: {arg}")
+        return _sql_ident(arg[1:])
     if isinstance(arg, dict):
         if len(arg) == 1 and next(iter(arg)).startswith("$"):
             return _sql_expr_text(arg, env)
-        # document literal → struct with aliases (struct(e AS `k`, …)
-        # parses to the same CreateStruct F.struct(e.alias(k)) builds)
-        if not arg or any(k.startswith("$") or "`" in k for k in arg):
-            return None
-        parts = [(k, _sql_of(v, env)) for k, v in arg.items()]
-        if any(p is None for _, p in parts):
-            return None
-        return ("struct("
-                + ", ".join(f"{p} AS `{k}`" for k, p in parts) + ")")
+        # document literal (Mongo's object construction in expression
+        # position): {"k": e, …} → a struct with each value compiled —
+        # what $arrayToObject/$objectToArray/$getField compose over
+        if not arg:
+            raise DocumentQueryError(
+                "empty document literal is not a compilable expression"
+            )
+        bad = [k for k in arg if k.startswith("$")]
+        if bad:
+            raise DocumentQueryError(
+                f"document literal keys may not start with '$': {bad} "
+                "(a single-key $-dict is an operator expression)"
+            )
+        return ("struct(" + ", ".join(
+            f"{_sql_of(v, env)} AS {_sql_name(k)}" for k, v in arg.items()
+        ) + ")")
     if isinstance(arg, list):
+        # array literal: each element compiles as an expression (Mongo
+        # semantics — '$refs' and document literals nest inside)
         if not arg:
             return "CAST(array() AS ARRAY<STRING>)"
-        parts = [_sql_of(e, env) for e in arg]
-        if any(p is None for p in parts):
-            return None
-        return "array(" + ", ".join(parts) + ")"
+        return "array(" + ", ".join(_sql_of(e, env) for e in arg) + ")"
     return _sql_lit(arg)
 
 
-def _sql_literal_tree(v: Any) -> str | None:
+def _sql_literal_tree(v: Any) -> str:
     """$literal body: scalars, lists and documents, NO '$'
     interpretation (keys and strings stay verbatim text)."""
     if isinstance(v, dict):
-        if not v or any("`" in k for k in v):
-            return None
-        parts = [(k, _sql_literal_tree(x)) for k, x in v.items()]
-        if any(p is None for _, p in parts):
-            return None
-        return ("struct("
-                + ", ".join(f"{p} AS `{k}`" for k, p in parts) + ")")
+        if not v:
+            raise DocumentQueryError("$literal: empty document")
+        return ("struct(" + ", ".join(
+            f"{_sql_literal_tree(x)} AS {_sql_name(k)}" for k, x in v.items()
+        ) + ")")
     if isinstance(v, list):
         if not v:
             return "CAST(array() AS ARRAY<STRING>)"
-        parts = [_sql_literal_tree(x) for x in v]
-        if any(p is None for p in parts):
-            return None
-        return "array(" + ", ".join(parts) + ")"
+        return "array(" + ", ".join(_sql_literal_tree(x) for x in v) + ")"
     return _sql_lit(v)
 
 
@@ -1267,815 +1032,162 @@ def _sql_bool(x: str) -> str:
     return f"CAST({x} AS BOOLEAN)"
 
 
-def _sql_expr_text(  # noqa: C901 — one dispatcher, mirror of _expr
-    spec: dict[str, Any], env: dict[str, str] | None
-) -> str | None:
-    if len(spec) != 1:
-        return None
+def _sql_expr_text(  # noqa: C901 — one dispatcher over the dialect
+    spec: dict[str, Any], env: _Env
+) -> str:
+    """SQL text for one {$op: operands} expression document."""
     op, operands = next(iter(spec.items()))
 
-    def sub(a: Any) -> str | None:
+    def sub(a: Any) -> str:
         return _sql_of(a, env)
 
-    # ---- special forms -------------------------------------------
+    # ---- special forms: operators whose operands are not all plain
+    # sub-expressions — literal places/delimiters, lambda bodies with
+    # $$-variables, or named documents.
     if op == "$cond":
         if isinstance(operands, dict):
+            # dict form: a missing key and an explicit null are
+            # indistinguishable — keep the strict guard (use the array
+            # form for literal-null branches)
             parts = [operands.get("if"), operands.get("then"),
                      operands.get("else")]
             if any(p is None for p in parts):
-                return None
+                raise DocumentQueryError(f"$cond needs if/then/else: {spec!r}")
+        elif isinstance(operands, list) and len(operands) == 3:
+            # array form: [if, then, else] — a None element is Mongo's
+            # literal null branch, compiled as such
+            parts = operands
         else:
-            parts = list(operands) if isinstance(operands, list) else None
-            if parts is None or len(parts) != 3:
-                return None
+            raise DocumentQueryError(f"$cond needs if/then/else: {spec!r}")
         c, t, e = (sub(p) for p in parts)
-        if None in (c, t, e):
-            return None
         return f"CASE WHEN {c} THEN {t} ELSE {e} END"
     if op in ("$and", "$or"):
-        if not isinstance(operands, list) or not operands:
-            return None
-        xs = [sub(a) for a in operands]
-        if any(x is None for x in xs):
-            return None
+        args = operands if isinstance(operands, list) else [operands]
+        if not args:
+            raise DocumentQueryError(f"{op} needs operands: {spec!r}")
         word = "AND" if op == "$and" else "OR"
-        out = _sql_bool(xs[0])
-        for x in xs[1:]:
-            out = f"({out} {word} {_sql_bool(x)})"
+        out = _sql_bool(sub(args[0]))
+        for a in args[1:]:
+            out = f"({out} {word} {_sql_bool(sub(a))})"
         return out
     if op == "$switch":
+        # {"branches": [{"case": e, "then": e}, ...], "default": e}.
+        # Mongo errors at RUN time when no branch matches and there is
+        # no default; a DataFrame engine can't raise per-row — the
+        # documented divergence is NULL instead (CASE without ELSE)
         if not (isinstance(operands, dict)
                 and isinstance(operands.get("branches"), list)
                 and operands["branches"]):
-            return None
+            raise DocumentQueryError(f"Bad $switch: {spec!r}")
         pieces = []
         for br in operands["branches"]:
             if not (isinstance(br, dict) and "case" in br and "then" in br):
-                return None
-            c, t = sub(br["case"]), sub(br["then"])
-            if c is None or t is None:
-                return None
-            pieces.append(f"WHEN {_sql_bool(c)} THEN {t}")
-        tail = ""
-        if "default" in operands:
-            d = sub(operands["default"])
-            if d is None:
-                return None
-            tail = f" ELSE {d}"
+                raise DocumentQueryError(f"Bad $switch branch: {br!r}")
+            pieces.append(
+                f"WHEN {_sql_bool(sub(br['case']))} THEN {sub(br['then'])}"
+            )
+        tail = f" ELSE {sub(operands['default'])}" \
+            if "default" in operands else ""
         return "CASE " + " ".join(pieces) + tail + " END"
     if op == "$literal":
+        # verbatim value, no '$' interpretation
         return _sql_literal_tree(operands)
     if op in ("$round", "$trunc"):
         args = operands if isinstance(operands, list) else [operands]
-        if len(args) > 1 and not (isinstance(args[1], int)
-                                  and not isinstance(args[1], bool)):
-            return None
-        place = args[1] if len(args) > 1 else 0
+        if not 1 <= len(args) <= 2:
+            raise DocumentQueryError(
+                f"{op}: bad operand count ({len(args)}): expects 1-2"
+            )
+        place = _int_literal(args[1], op) if len(args) > 1 else 0
         v = sub(args[0])
-        if v is None:
-            return None
         if op == "$round":
+            # Mongo rounds HALF_EVEN — Spark's bround IS banker's
+            # rounding (plain round() is HALF_UP and would diverge)
             return f"bround({v}, {place})"
         sd = repr(float(10**place)) + "D"
         return (f"(CASE WHEN (({v} * {sd}) >= 0) THEN floor(({v} * {sd}))"
                 f" ELSE ceil(({v} * {sd})) END / {sd})")
     if op == "$split":
-        import re as _re_mod
-
+        # Mongo's delimiter is a LITERAL string; Spark's split takes a
+        # regex — escape metacharacters so '.' splits on dots. A
+        # field-path delimiter can't be escaped at compile time, so it
+        # is refused rather than treated as literal text. Limit -1
+        # keeps trailing empties (Mongo keeps them).
         if not (isinstance(operands, list) and len(operands) == 2
                 and isinstance(operands[1], str)
                 and not operands[1].startswith("$")):
-            return None
-        s = sub(operands[0])
-        pat = _sql_lit(_re_mod.escape(operands[1]))
-        if s is None or pat is None:
-            return None
-        return f"split({s}, {pat}, -1)"
+            raise DocumentQueryError(
+                f"$split expects [expr, literal delimiter]: {spec!r}"
+            )
+        return (f"split({sub(operands[0])}, "
+                f"{_sql_lit(re.escape(operands[1]))}, -1)")
     if op == "$substrCP":
+        # Mongo is 0-based; Spark substring is 1-based
         if not (isinstance(operands, list) and len(operands) == 3):
-            return None
+            raise DocumentQueryError(f"$substrCP needs 3 operands: {spec!r}")
         s, start, cnt = (sub(a) for a in operands)
-        if None in (s, start, cnt):
-            return None
         return f"substring({s}, ({start} + 1), {cnt})"
-    if op == "$substrBytes":
-        args = operands if isinstance(operands, list) else [operands]
-        if len(args) != 3:
-            return None
-        s, start, cnt = (sub(a) for a in args)
-        if None in (s, start, cnt):
-            return None
-        return (f"CAST(substring(CAST({s} AS BINARY), "
-                f"(CAST({start} AS INT) + 1), CAST({cnt} AS INT)) "
-                f"AS STRING)")
     if op == "$arrayElemAt":
+        # Mongo: 0-based, negative counts from the end, OUT-OF-RANGE
+        # yields missing (null here) — try_element_at, because Spark
+        # 4's plain element_at THROWS on an out-of-bounds index.
+        # element_at is 1-based with the same negative convention; the
+        # +1 shift means the compiled index is never 0.
         if not (isinstance(operands, list) and len(operands) == 2):
-            return None
+            raise DocumentQueryError(
+                f"$arrayElemAt needs 2 operands: {spec!r}"
+            )
         arr, idx = sub(operands[0]), sub(operands[1])
-        if arr is None or idx is None:
-            return None
         return (f"try_element_at({arr}, CAST(CASE WHEN ({idx} >= 0) "
                 f"THEN ({idx} + 1) ELSE {idx} END AS INT))")
     if op == "$slice":
         if not (isinstance(operands, list) and len(operands) in (2, 3)):
-            return None
+            raise DocumentQueryError(f"$slice needs 2-3 operands: {spec!r}")
         arr = sub(operands[0])
-        tail_ints = operands[1:]
-        if arr is None or not all(
-            isinstance(x, int) and not isinstance(x, bool)
-            for x in tail_ints
-        ):
-            return None
         if len(operands) == 2:
-            n = operands[1]
+            # Mongo 2-arg: first n (n>0) or last n (n<0)
+            n = _int_literal(operands[1], "$slice")
             if n >= 0:
                 return f"slice({arr}, 1, {n})"
             return (f"slice({arr}, greatest((size({arr}) + {n + 1}), 1), "
                     f"{-n})")
-        pos, n = operands[1], operands[2]
+        pos = _int_literal(operands[1], "$slice")
+        n = _int_literal(operands[2], "$slice")
         if n <= 0:
-            return None
+            raise DocumentQueryError("$slice 3-arg count must be positive")
+        # slice() shares the negative-from-end convention for starts
         start = pos + 1 if pos >= 0 else pos
         return f"slice({arr}, {start}, {n})"
     if op == "$getField":
+        # {"field": literal, "input": e} pulls a struct field / map key;
+        # the string shorthand reads a top-level field of the current
+        # document (dots are LITERAL in Mongo's $getField — that is its
+        # reason to exist — so the shorthand refuses them rather than
+        # silently nesting).
         if isinstance(operands, str):
             if "." in operands:
-                return None
-            return _sql_of("$" + operands, env)
+                raise DocumentQueryError(
+                    "$getField shorthand with a dotted name needs the "
+                    "{field, input} form"
+                )
+            return sub("$" + operands)
         if not (isinstance(operands, dict) and "field" in operands
                 and "input" in operands):
-            return None
+            raise DocumentQueryError(f"Bad $getField: {spec!r}")
         field = operands["field"]
         if not isinstance(field, str) or field.startswith("$"):
-            return None
-        inp = sub(operands["input"])
-        f_lit = _sql_lit(field)
-        if inp is None or f_lit is None:
-            return None
-        return f"{inp}[{f_lit}]"
-    if op == "$dateTrunc":
-        if not (isinstance(operands, dict) and "date" in operands
-                and "unit" in operands):
-            return None
-        unit = operands["unit"]
-        if unit not in _DATE_TRUNC_UNITS:
-            return None
-        d = sub(operands["date"])
-        if d is None:
-            return None
-        if unit == "week":
-            idx = _START_OF_WEEK.get(
-                str(operands.get("startOfWeek", "sunday")).lower()
+            raise DocumentQueryError(
+                f"$getField field must be a literal string: {field!r}"
             )
-            if idx is None:
-                return None
-            day = f"to_date({d})"
-            return (f"date_sub({day}, (((dayofweek({day}) - {idx}) + 7) "
-                    f"% 7))")
-        t = f"date_trunc('{unit}', {d})"
-        if unit in ("year", "quarter", "month", "day"):
-            return f"CAST({t} AS DATE)"
-        return t
-    if op == "$sortArray":
-        if not (isinstance(operands, dict) and "input" in operands
-                and operands.get("sortBy") in (1, -1)):
-            return None
-        arr = sub(operands["input"])
-        if arr is None:
-            return None
-        s = f"array_sort({arr})"
-        return s if operands["sortBy"] == 1 else f"reverse({s})"
-    if op == "$replaceAll":
-        if not (isinstance(operands, dict) and "input" in operands
-                and "find" in operands and "replacement" in operands):
-            return None
-        i, f_, r = (sub(operands[k])
-                    for k in ("input", "find", "replacement"))
-        if None in (i, f_, r):
-            return None
-        return f"replace({i}, {f_}, {r})"
-    if op == "$indexOfCP":
-        if not (isinstance(operands, list) and len(operands) in (2, 3, 4)):
-            return None
-        needle = operands[1]
-        if not isinstance(needle, str) or needle.startswith("$"):
-            return None
-        tail_ints = operands[2:]
-        if not all(isinstance(x, int) and not isinstance(x, bool)
-                   for x in tail_ints):
-            return None
-        s = sub(operands[0])
-        n_lit = _sql_lit(needle)
-        if s is None or n_lit is None:
-            return None
-        if len(operands) == 4:
-            s = f"substring({s}, 1, {operands[3]})"
-        start = operands[2] if len(operands) >= 3 else 0
-        if start < 0:
-            return None
-        return f"CAST((locate({n_lit}, {s}, {start + 1}) - 1) AS BIGINT)"
-    if op in ("$trim", "$ltrim", "$rtrim") and isinstance(operands, dict):
-        import re as _re_mod
-
-        if "input" not in operands:
-            return None
-        s = sub(operands["input"])
-        if s is None:
-            return None
-        chars = operands.get("chars")
-        if chars is None:
-            return f"{_SQL_FN1[op]}({s})"
-        if not isinstance(chars, str) or chars.startswith("$") or not chars:
-            return None
-        cls = "[" + "".join(_re_mod.escape(c) for c in set(chars)) + "]+"
-        pat = {"$trim": f"^{cls}|{cls}$", "$ltrim": f"^{cls}",
-               "$rtrim": f"{cls}$"}[op]
-        p_lit = _sql_lit(pat)
-        if p_lit is None:
-            return None
-        return f"regexp_replace({s}, {p_lit}, '')"
-    if op in ("$filter", "$map"):
-        if not (isinstance(operands, dict) and "input" in operands):
-            return None
-        var = operands.get("as", "this")
-        if not (isinstance(var, str) and _SQL_IDENT_RE.match(var)):
-            return None
-        body_key = "cond" if op == "$filter" else "in"
-        if body_key not in operands:
-            return None
-        inp = sub(operands["input"])
-        if inp is None:
-            return None
-        param = f"__m_{var}"
-        body = _sql_of(operands[body_key], {**(env or {}), var: param})
-        if body is None:
-            return None
-        if op == "$filter":
-            return f"filter({inp}, {param} -> {_sql_bool(body)})"
-        return f"transform({inp}, {param} -> {body})"
-    if op == "$reduce":
-        if not (isinstance(operands, dict) and "input" in operands
-                and "initialValue" in operands and "in" in operands):
-            return None
-        inp = sub(operands["input"])
-        if inp is None:
-            return None
-        init_spec = operands["initialValue"]
-        body = operands["in"]
-        scoped = {**(env or {}), "value": "__m_value", "this": "__m_this"}
-        body_sql = _sql_of(body, scoped)
-        if body_sql is None:
-            return None
-        if isinstance(init_spec, (int, float)) and not isinstance(
-                init_spec, bool):
-            probe = f"get({inp}, -1)"
-            body_probe = _sql_of(
-                body, {**(env or {}), "value": probe, "this": probe}
-            )
-            i_lit = _sql_lit(init_spec)
-            if body_probe is None or i_lit is None:
-                return None
-            init = (f"coalesce(CASE WHEN FALSE THEN {probe} END, "
-                    f"CASE WHEN FALSE THEN {body_probe} END, {i_lit})")
-        else:
-            init = sub(init_spec)
-            if init is None:
-                return None
-        return (f"aggregate({inp}, {init}, "
-                f"(__m_value, __m_this) -> {body_sql})")
-    if op == "$let":
-        if not (isinstance(operands, dict)
-                and isinstance(operands.get("vars"), dict)
-                and "in" in operands):
-            return None
-        # vars evaluate in the ENCLOSING scope (Mongo's rule); inlining
-        # each binding's SQL text wherever '$$name' appears duplicates
-        # the subtree exactly like the Column path's reuse of one
-        # Column object does
-        scoped = dict(env or {})
-        for name, val in operands["vars"].items():
-            if not isinstance(name, str) or not _SQL_IDENT_RE.match(name):
-                return None
-            v = _sql_of(val, env)
-            if v is None:
-                return None
-            scoped[name] = v
-        return _sql_of(operands["in"], scoped)
-    if op in ("$dateDiff", "$dateAdd", "$dateSubtract"):
-        if not (isinstance(operands, dict) and "unit" in operands):
-            return None
-        unit = operands["unit"]
-        if op == "$dateDiff":
-            if not ("startDate" in operands and "endDate" in operands):
-                return None
-            a = sub(operands["startDate"])
-            b = sub(operands["endDate"])
-            if a is None or b is None:
-                return None
-            if unit == "day":
-                return f"CAST(datediff(to_date({b}), to_date({a})) AS BIGINT)"
-            if unit == "year":
-                return f"CAST((year({b}) - year({a})) AS BIGINT)"
-            if unit == "month":
-                return (f"CAST((((year({b}) - year({a})) * 12) + "
-                        f"(month({b}) - month({a}))) AS BIGINT)")
-            if unit == "week":
-                sow = _sql_expr_text(
-                    {"$dateTrunc": {"date": operands["startDate"],
-                                    "unit": "week"}}, env)
-                eow = _sql_expr_text(
-                    {"$dateTrunc": {"date": operands["endDate"],
-                                    "unit": "week"}}, env)
-                if sow is None or eow is None:
-                    return None
-                return f"CAST((datediff({eow}, {sow}) / 7) AS BIGINT)"
-            if unit in ("hour", "minute", "second"):
-                secs = {"hour": 3600, "minute": 60, "second": 1}[unit]
-                ta = (f"CAST(date_trunc('{unit}', "
-                      f"CAST({a} AS TIMESTAMP)) AS BIGINT)")
-                tb = (f"CAST(date_trunc('{unit}', "
-                      f"CAST({b} AS TIMESTAMP)) AS BIGINT)")
-                return f"CAST((({tb} - {ta}) / {secs}) AS BIGINT)"
-            return None
-        if "startDate" not in operands or "amount" not in operands:
-            return None
-        amt = operands["amount"]
-        if not isinstance(amt, int) or isinstance(amt, bool):
-            return None
-        if op == "$dateSubtract":
-            amt = -amt
-        if unit not in ("year", "quarter", "month", "week", "day",
-                        "hour", "minute", "second"):
-            return None
-        if unit == "quarter":
-            unit, amt = "month", amt * 3
-        d = sub(operands["startDate"])
-        if d is None:
-            return None
-        return f"({d} + interval {amt} {unit})"
-    if op == "$dateToString":
-        if not (isinstance(operands, dict) and "date" in operands
-                and "timezone" not in operands):
-            return None
-        fmt = operands.get("format", "%Y-%m-%dT%H:%M:%S.%LZ")
-        if not isinstance(fmt, str):
-            return None
-        d = sub(operands["date"])
-        if d is None:
-            return None
-        try:
-            toks = _mongo_fmt_tokens(fmt, "$dateToString")
-        except DocumentQueryError:
-            return None  # Column path raises the same typed error
-        pieces = []
-        for kind, text in toks:
-            t_lit = _sql_lit(text)
-            if t_lit is None:
-                return None
-            pieces.append(t_lit if kind == "lit"
-                          else f"date_format({d}, {t_lit})")
-        body = ("concat(" + ", ".join(pieces) + ")") if pieces else "''"
-        rendered = f"CASE WHEN ({d} IS NOT NULL) THEN {body}"
-        if "onNull" in operands:
-            on = sub(operands["onNull"])
-            if on is None:
-                return None
-            rendered += f" ELSE {on}"
-        return rendered + " END"
-    if op == "$dateFromString":
-        if not (isinstance(operands, dict) and "dateString" in operands
-                and "timezone" not in operands):
-            return None
-        s = sub(operands["dateString"])
-        if s is None:
-            return None
-        fmt = operands.get("format")
-        if fmt is not None:
-            if not isinstance(fmt, str) or fmt.startswith("$"):
-                return None
-            try:
-                pat = _mongo_datetime_fmt(fmt, "$dateFromString")
-            except DocumentQueryError:
-                return None
-            p_lit = _sql_lit(pat)
-            if p_lit is None:
-                return None
-            parsed = (f"try_to_timestamp({s}, {p_lit})"
-                      if "onError" in operands
-                      else f"to_timestamp({s}, {p_lit})")
-        else:
-            parsed = (f"try_to_timestamp({s})" if "onError" in operands
-                      else f"to_timestamp({s})")
-        if "onError" in operands:
-            on_err = sub(operands["onError"])
-            if on_err is None:
-                return None
-            parsed = f"coalesce({parsed}, {on_err})"
-        if "onError" in operands or "onNull" in operands:
-            if "onNull" in operands:
-                on_null = sub(operands["onNull"])
-                if on_null is None:
-                    return None
-            else:
-                on_null = "CAST(NULL AS TIMESTAMP)"
-            parsed = (f"CASE WHEN ({s} IS NULL) THEN {on_null} "
-                      f"ELSE {parsed} END")
-        return parsed
-    if op == "$dateFromParts":
-        if not (isinstance(operands, dict) and "year" in operands):
-            return None
-        known = {"year", "month", "day", "hour", "minute", "second",
-                 "millisecond", "onError", "onNull"}
-        if set(operands) - known:  # timezone/iso*/unknown → Column path
-            return None
-        part = {}
-        for k, dflt in (("year", 0), ("month", 1), ("day", 1),
-                        ("hour", 0), ("minute", 0), ("second", 0),
-                        ("millisecond", 0)):
-            part[k] = (sub(operands[k]) if k in operands else str(dflt))
-            if part[k] is None:
-                return None
-        secs = (f"CAST((CAST({part['second']} AS DECIMAL(16,6)) + "
-                f"(CAST({part['millisecond']} AS DECIMAL(16,6)) / 1000)) "
-                f"AS DECIMAL(16,6))")
-        made_args = ", ".join(
-            [f"CAST({part[k]} AS INT)"
-             for k in ("year", "month", "day", "hour", "minute")]
-            + [secs]
-        )
-        if "onError" in operands:
-            on_err = sub(operands["onError"])
-            if on_err is None:
-                return None
-            made = (f"coalesce(try_make_timestamp({made_args}), "
-                    f"CAST({on_err} AS TIMESTAMP))")
-        else:
-            made = f"make_timestamp({made_args})"
-        if "onError" in operands or "onNull" in operands:
-            if "onNull" in operands:
-                on_null = sub(operands["onNull"])
-                if on_null is None:
-                    return None
-            else:
-                on_null = "CAST(NULL AS TIMESTAMP)"
-            made = (f"CASE WHEN ({part['year']} IS NULL) THEN {on_null} "
-                    f"ELSE {made} END")
-        return made
-    if op in ("$regexMatch", "$regexFind", "$regexFindAll"):
-        try:
-            inp, pattern = _regex_operands(op, operands)
-        except DocumentQueryError:
-            return None  # Column path raises the same typed error
-        s = sub(inp)
-        p_lit = _sql_lit(pattern)
-        if s is None or p_lit is None:
-            return None
-        if op == "$regexMatch":
-            return f"regexp_like({s}, {p_lit})"
-        import re as _re_mod
-
-        try:
-            n_groups = _re_mod.compile(_python_probe(pattern)).groups
-        except _re_mod.error:
-            return None  # Column path raises the typed error
-        pref_lit = _sql_lit(f"(?s)^.*?(?={pattern})")
-        if pref_lit is None:
-            return None
-        if op == "$regexFind":
-            caps = ", ".join(
-                f"regexp_extract({s}, {p_lit}, {g})"
-                for g in range(1, n_groups + 1)
-            )
-            doc = (
-                f"struct(regexp_extract({s}, {p_lit}, 0) AS `match`, "
-                f"CAST((length({s}) - length(regexp_replace({s}, "
-                f"{pref_lit}, ''))) AS BIGINT) AS `idx`, "
-                f"CAST(array({caps}) AS ARRAY<STRING>) AS `captures`)"
-            )
-            return f"CASE WHEN regexp_like({s}, {p_lit}) THEN {doc} END"
-        if _has_left_context_assertion(pattern):
-            return None  # Column path raises the typed refusal
-        matches = f"regexp_extract_all({s}, {p_lit}, 0)"
-        suffix = f"substr({s}, (__m_acc['pos'] + 1), length({s}))"
-        found = (f"CAST(((__m_acc['pos'] + length({suffix})) - "
-                 f"length(regexp_replace({suffix}, {pref_lit}, ''))) "
-                 f"AS INT)")
-        step = (f"struct(({found} + greatest(length(__m_m), 1)) AS `pos`, "
-                f"concat(__m_acc['out'], array(CAST({found} AS BIGINT))) "
-                f"AS `out`)")
-        idxs = (f"aggregate({matches}, "
-                f"struct(CAST(0 AS INT) AS `pos`, "
-                f"CAST(array() AS ARRAY<BIGINT>) AS `out`), "
-                f"(__m_acc, __m_m) -> {step}, "
-                f"__m_acc -> __m_acc['out'])")
-        caps = ", ".join(
-            f"element_at(regexp_extract_all({s}, {p_lit}, {g}), "
-            f"(__m_i + 1))"
-            for g in range(1, n_groups + 1)
-        )
-        docs = (f"transform({matches}, (__m_m, __m_i) -> "
-                f"struct(__m_m AS `match`, "
-                f"element_at({idxs}, (__m_i + 1)) AS `idx`, "
-                f"CAST(array({caps}) AS ARRAY<STRING>) AS `captures`))")
-        return (f"coalesce({docs}, CAST(array() AS "
-                f"array<struct<match:string,idx:bigint,"
-                f"captures:array<string>>>))")
-    if op == "$convert":
-        if not (isinstance(operands, dict) and "input" in operands
-                and "to" in operands):
-            return None
-        to = operands["to"]
-        if isinstance(to, int) and not isinstance(to, bool):
-            to = _CONVERT_CODES.get(to, to)
-        if to == "timestamp":
-            to = "date"
-        if not isinstance(to, str) or to not in _CONVERT_TYPES:
-            return None
-        for fb_key in ("onError", "onNull"):
-            fb = operands.get(fb_key)
-            if fb is None or isinstance(fb, dict) or (
-                    isinstance(fb, str) and fb.startswith("$")):
-                continue
-            if to == "date":
-                return None  # Column path raises the typed guard
-            if to == "string":
-                ok = isinstance(fb, str)
-            elif to == "bool":
-                ok = isinstance(fb, bool)
-            else:
-                ok = isinstance(fb, (int, float)) and not isinstance(
-                    fb, bool)
-            if not ok:
-                return None  # Column path raises the typed guard
-        x = sub(operands["input"])
-        if x is None:
-            return None
-        if to == "date":
-            s = f"CAST({x} AS STRING)"
-            conv = (f"coalesce(try_to_timestamp({s}), "
-                    f"timestamp_millis(try_cast({s} AS BIGINT)))")
-        elif "onError" in operands:
-            conv = f"try_cast({x} AS {_CONVERT_TYPES[to]})"
-        else:
-            conv = f"CAST({x} AS {_CONVERT_TYPES[to]})"
-        failed = f"(({x} IS NOT NULL) AND ({conv} IS NULL))"
-        if "onError" in operands:
-            on_err = sub(operands["onError"])
-            if on_err is None:
-                return None
-            conv = f"CASE WHEN {failed} THEN {on_err} ELSE {conv} END"
-        elif to == "date":
-            conv = (f"CASE WHEN {failed} THEN raise_error("
-                    f"'$convert: unparseable date input (use onError)') "
-                    f"ELSE {conv} END")
-        if "onNull" in operands:
-            on_null = sub(operands["onNull"])
-            if on_null is None:
-                return None
-            conv = (f"CASE WHEN ({x} IS NULL) THEN {on_null} "
-                    f"ELSE {conv} END")
-        return conv
-    if op == "$dateToParts":
-        if not (isinstance(operands, dict) and "date" in operands
-                and not operands.get("iso8601")):
-            return None
-        d = sub(operands["date"])
-        if d is None:
-            return None
-        ms = (f"CAST(floor(((unix_micros(CAST({d} AS TIMESTAMP)) "
-              f"% 1000000) / 1000)) AS INT)")
-        return (f"struct(year({d}) AS `year`, month({d}) AS `month`, "
-                f"dayofmonth({d}) AS `day`, hour({d}) AS `hour`, "
-                f"minute({d}) AS `minute`, second({d}) AS `second`, "
-                f"{ms} AS `millisecond`)")
-    if op == "$zip":
-        if not (isinstance(operands, dict)
-                and isinstance(operands.get("inputs"), list)
-                and len(operands["inputs"]) == 2):
-            return None
-        a = sub(operands["inputs"][0])
-        b = sub(operands["inputs"][1])
-        if a is None or b is None:
-            return None
-        if not operands.get("useLongestLength", False):
-            n = f"least(size({a}), size({b}))"
-            a, b = f"slice({a}, 1, {n})", f"slice({b}, 1, {n})"
-        return f"zip_with({a}, {b}, (__m_x, __m_y) -> array(__m_x, __m_y))"
-    if op == "$range":
-        if not (isinstance(operands, list) and len(operands) in (2, 3)):
-            return None
-        step = operands[2] if len(operands) == 3 else 1
-        if not isinstance(step, int) or isinstance(step, bool) or step == 0:
-            return None
-        a0, b0 = sub(operands[0]), sub(operands[1])
-        if a0 is None or b0 is None:
-            return None
-        a = f"CAST({a0} AS INT)"
-        b = f"CAST({b0} AS INT)"
-        if step > 0:
-            cond, stop = f"({a} < {b})", f"({b} - 1)"
-        else:
-            cond, stop = f"({a} > {b})", f"({b} + 1)"
-        return (f"CASE WHEN {cond} THEN sequence({a}, {stop}, {step}) "
-                f"ELSE CAST(array() AS ARRAY<INT>) END")
-    if op == "$replaceOne":
-        if not (isinstance(operands, dict) and "input" in operands
-                and "find" in operands and "replacement" in operands):
-            return None
-        find = operands["find"]
-        if not isinstance(find, str) or find.startswith("$") or not find:
-            return None
-        s = sub(operands["input"])
-        repl = sub(operands["replacement"])
-        f_lit = _sql_lit(find)
-        if None in (s, repl, f_lit):
-            return None
-        pos = f"locate({f_lit}, {s})"
-        spliced = (f"concat(substring({s}, 1, ({pos} - 1)), {repl}, "
-                   f"substring({s}, ({pos} + {len(find)}), length({s})))")
-        return f"CASE WHEN ({pos} = 0) THEN {s} ELSE {spliced} END"
-    if op == "$mergeObjects":
-        args_m = operands if isinstance(operands, list) else [operands]
-        xs_m = [_sql_of(a, env) for a in args_m]
-        if not xs_m or any(x is None for x in xs_m):
-            return None
-        out = xs_m[0]
-        for b in xs_m[1:]:
-            out = (f"map_from_entries(concat(filter(map_entries({out}), "
-                   f"__m_e -> (NOT array_contains(map_keys({b}), "
-                   f"__m_e['key']))), map_entries({b})))")
-        return out
-    if op == "$objectToArray":
-        if isinstance(operands, list) and len(operands) != 1:
-            return None  # Column path raises the arity error
-        m_sql = sub(operands[0] if isinstance(operands, list) else operands)
-        if m_sql is None:
-            return None
-        return (f"transform(map_entries({m_sql}), __m_e -> "
-                f"struct(__m_e['key'] AS `k`, __m_e['value'] AS `v`))")
-    if op == "$arrayToObject":
-        if isinstance(operands, list) and len(operands) != 1:
-            return None  # Column path raises the arity error
-        a_sql = sub(operands[0] if isinstance(operands, list) else operands)
-        if a_sql is None:
-            return None
-        return (
-            f"map_from_entries(filter(transform({a_sql}, __m_e -> "
-            f"struct(__m_e['k'] AS `k`, __m_e['v'] AS `v`)), "
-            f"(__m_e, __m_i) -> (NOT exists(slice({a_sql}, (__m_i + 2), "
-            f"greatest(size({a_sql}), 1)), "
-            f"__m_later -> (__m_later['k'] = __m_e['k'])))))"
-        )
-    if op == "$isNumber":
-        args_n = operands if isinstance(operands, list) else [operands]
-        if len(args_n) != 1:
-            return None
-        x = _sql_of(args_n[0], env)
-        if x is None:
-            return None
-        return (f"(({x} IS NOT NULL) AND (typeof({x}) RLIKE "
-                f"'^(tinyint|smallint|int|bigint|float|double)$"
-                f"|^decimal\\\\('))")
-    if op == "$type":
-        args_t = operands if isinstance(operands, list) else [operands]
-        if len(args_t) != 1:
-            return None
-        x = _sql_of(args_t[0], env)
-        if x is None:
-            return None
-        t = f"typeof({x})"
-        bson = (
-            f"CASE WHEN ({t} IN ('tinyint', 'smallint', 'int')) "
-            f"THEN 'int' "
-            f"WHEN ({t} = 'bigint') THEN 'long' "
-            f"WHEN ({t} IN ('float', 'double')) THEN 'double' "
-            f"WHEN startswith({t}, 'decimal') THEN 'decimal' "
-            f"WHEN ({t} = 'string') THEN 'string' "
-            f"WHEN ({t} = 'boolean') THEN 'bool' "
-            f"WHEN ({t} IN ('date', 'timestamp', 'timestamp_ntz')) "
-            f"THEN 'date' "
-            f"WHEN startswith({t}, 'array') THEN 'array' "
-            f"WHEN (startswith({t}, 'struct') OR startswith({t}, 'map')) "
-            f"THEN 'object' "
-            f"WHEN ({t} = 'binary') THEN 'binData' "
-            f"ELSE {t} END"
-        )
-        return f"CASE WHEN ({x} IS NULL) THEN 'null' ELSE {bson} END"
-    # ---- table ops ------------------------------------------------
-    args = operands if isinstance(operands, list) else [operands]
-    xs = [_sql_of(a, env) for a in args]
-    if any(x is None for x in xs):
-        return None
-    n = len(xs)
-
-    def fold(sym: str) -> str:
-        out = xs[0]
-        for x in xs[1:]:
-            out = f"({out} {sym} {x})"
-        return out
-
-    if op == "$eq" and n == 2:
-        return f"({xs[0]} <=> {xs[1]})"
-    if op == "$ne" and n == 2:
-        return f"(NOT ({xs[0]} <=> {xs[1]}))"
-    if op in ("$gt", "$gte", "$lt", "$lte") and n == 2:
-        sym = {"$gt": ">", "$gte": ">=", "$lt": "<", "$lte": "<="}[op]
-        return f"({xs[0]} {sym} {xs[1]})"
-    if op == "$add" and n >= 1:
-        return fold("+")
-    if op == "$subtract" and n == 2:
-        return fold("-")
-    if op == "$multiply" and n >= 1:
-        return fold("*")
-    if op == "$divide" and n == 2:
-        return fold("/")
-    if op == "$mod" and n == 2:
-        return fold("%")
-    if op == "$pow" and n == 2:
-        return f"power({xs[0]}, {xs[1]})"
-    if op == "$atan2" and n == 2:
-        return f"atan2({xs[0]}, {xs[1]})"
-    if op == "$log" and n == 2:
-        return f"(ln({xs[0]}) / ln({xs[1]}))"
-    if op in _SQL_FN1 and n == 1:
-        if op == "$bitNot":
-            return f"~{xs[0]}"
-        return f"{_SQL_FN1[op]}({xs[0]})"
-    if op in _SQL_CASTS and n == 1:
-        return f"CAST({xs[0]} AS {_SQL_CASTS[op]})"
-    if op in ("$concat", "$concatArrays") and n >= 1:
-        return "concat(" + ", ".join(xs) + ")"
-    if op == "$ifNull" and n >= 1:
-        return "coalesce(" + ", ".join(xs) + ")"
-    if op == "$size" and n == 1:
-        return f"CAST(size({xs[0]}) AS BIGINT)"
-    if op == "$binarySize" and n == 1:
-        return f"CAST(octet_length({xs[0]}) AS BIGINT)"
-    if op == "$in" and n == 2:
-        return f"array_contains({xs[1]}, {xs[0]})"
-    if op == "$not" and n == 1:
-        return f"(NOT {_sql_bool(xs[0])})"
-    if op in ("$bitAnd", "$bitOr", "$bitXor") and n >= 1:
-        return fold({"$bitAnd": "&", "$bitOr": "|", "$bitXor": "^"}[op])
-    if op == "$cmp" and n == 2:
-        a, b = xs
-        return (f"CAST(CASE WHEN (({a} <=> {b}) AND ({a} IS NOT NULL)) "
-                f"THEN 0 WHEN ({a} < {b}) THEN -1 "
-                f"WHEN ({a} > {b}) THEN 1 END AS INT)")
-    if op == "$strcasecmp" and n == 2:
-        a, b = xs
-        return (f"CAST(CASE WHEN (lower({a}) = lower({b})) THEN 0 "
-                f"WHEN (lower({a}) < lower({b})) THEN -1 "
-                f"WHEN (lower({a}) > lower({b})) THEN 1 END AS INT)")
-    if op == "$indexOfArray" and n == 2:
-        return f"CAST((array_position({xs[0]}, {xs[1]}) - 1) AS BIGINT)"
-    if op == "$setEquals" and n == 2:
-        return (f"(array_sort(array_distinct({xs[0]})) = "
-                f"array_sort(array_distinct({xs[1]})))")
-    if op == "$setIsSubset" and n == 2:
-        return f"(size(array_except({xs[0]}, {xs[1]})) = 0)"
-    if op == "$setUnion" and n >= 1:
-        return ("array_sort(array_distinct(concat("
-                + ", ".join(xs) + ")))")
-    if op == "$setIntersection" and n == 2:
-        return f"array_sort(array_intersect({xs[0]}, {xs[1]}))"
-    if op == "$setDifference" and n == 2:
-        return f"array_sort(array_except({xs[0]}, {xs[1]}))"
-    if op in ("$anyElementTrue", "$allElementsTrue") and n == 1:
-        hof = "exists" if op == "$anyElementTrue" else "forall"
-        return (f"{hof}({xs[0]}, __m_x -> "
-                f"coalesce(CAST(__m_x AS BOOLEAN), FALSE))")
-    if op in _SQL_DATE_FNS and n == 1:
-        return f"{_SQL_DATE_FNS[op]}({xs[0]})"
-    if op == "$isoDayOfWeek" and n == 1:
-        return f"(weekday({xs[0]}) + 1)"
-    if op == "$isoWeekYear" and n == 1:
-        a = xs[0]
-        return (f"CAST(year(date_add(to_date({a}), "
-                f"(4 - (weekday({a}) + 1)))) AS BIGINT)")
-    if op == "$week" and n == 1:
-        a = xs[0]
-        return (f"CAST(floor(((((dayofyear({a}) - 1) - "
-                f"(dayofweek({a}) - 1)) + 7) / 7)) AS INT)")
-    if op == "$millisecond" and n == 1:
-        return (f"CAST(floor(((unix_micros(CAST({xs[0]} AS TIMESTAMP)) "
-                f"% 1000000) / 1000)) AS INT)")
-    return None
-
-
-def _expr(spec: dict[str, Any], resolve=None) -> Column:
-    """One {$op: operands} expression document → a Column."""
-    if len(spec) != 1:
-        raise DocumentQueryError(f"Bad expression: {spec!r}")
-    op, operands = next(iter(spec.items()))
+        return f"{sub(operands['input'])}[{_sql_lit(field)}]"
     if op == "$dateTrunc":
         # {"date": "$ts", "unit": "day"} → date_trunc; day-or-coarser
         # units come back as DATE (Mongo returns a Date at the
         # boundary), finer units stay TIMESTAMP. Unit "week" does NOT
         # use Spark's date_trunc('week') (ISO, Monday-based): Mongo's
         # $dateTrunc defaults startOfWeek to SUNDAY, so the week path
-        # computes date_sub(day, (dayofweek - start) mod 7) honoring an
-        # optional {"startOfWeek": "monday"|...} operand.
+        # steps back (dayofweek - start) mod 7 days (dayofweek():
+        # 1=Sunday..7=Saturday).
         if not (isinstance(operands, dict) and "date" in operands
                 and "unit" in operands):
             raise DocumentQueryError(f"$dateTrunc needs date+unit: {spec!r}")
@@ -2089,373 +1201,192 @@ def _expr(spec: dict[str, Any], resolve=None) -> Column:
                 raise DocumentQueryError(
                     f"$dateTrunc bad startOfWeek: {sow!r}"
                 )
-            day = F.to_date(_ref(operands["date"], resolve))
-            # dayofweek(): 1=Sunday..7=Saturday; step back to the most
-            # recent start-of-week day (0..6 days)
-            return F.date_sub(
-                day, (F.dayofweek(day) - F.lit(idx) + F.lit(7)) % F.lit(7)
-            )
-        truncated = F.date_trunc(unit, _ref(operands["date"], resolve))
+            day = f"to_date({sub(operands['date'])})"
+            return (f"date_sub({day}, (((dayofweek({day}) - {idx}) + 7) "
+                    f"% 7))")
+        t = f"date_trunc('{unit}', {sub(operands['date'])})"
         if unit in ("year", "quarter", "month", "day"):
-            return truncated.cast("date")
-        return truncated
-    if op == "$cond":
-        if isinstance(operands, dict):
-            # dict form: a missing key and an explicit null are
-            # indistinguishable — keep the strict guard (use the array
-            # form for literal-null branches)
-            parts = [operands.get("if"), operands.get("then"),
-                     operands.get("else")]
-            if any(p is None for p in parts):
-                raise DocumentQueryError(
-                    f"$cond needs if/then/else: {spec!r}"
-                )
-        else:
-            # array form: [if, then, else] — a None element is Mongo's
-            # literal null branch, compiled as such
-            parts = list(operands)
-            if len(parts) != 3:
-                raise DocumentQueryError(
-                    f"$cond needs if/then/else: {spec!r}"
-                )
-        cond, then, other = (_ref(p, resolve) for p in parts)
-        return F.when(cond, then).otherwise(other)
-    if op in ("$and", "$or"):
-        import functools
-        import operator as _op
-
-        subs = [_ref(a, resolve).cast("boolean") for a in operands]
-        if not subs:
-            raise DocumentQueryError(f"{op} needs operands: {spec!r}")
-        return functools.reduce(
-            _op.and_ if op == "$and" else _op.or_, subs
-        )
-    # ---- special forms (r8): operators whose operands are not all
-    # plain sub-expressions — literal places/delimiters, lambda bodies
-    # with $$-variables, or named documents.
-    if op == "$switch":
-        # {"branches": [{"case": e, "then": e}, ...], "default": e}
-        if not (isinstance(operands, dict)
-                and isinstance(operands.get("branches"), list)
-                and operands["branches"]):
-            raise DocumentQueryError(f"Bad $switch: {spec!r}")
-        out = None
-        for br in operands["branches"]:
-            if not (isinstance(br, dict) and "case" in br and "then" in br):
-                raise DocumentQueryError(f"Bad $switch branch: {br!r}")
-            c = _ref(br["case"], resolve).cast("boolean")
-            t = _ref(br["then"], resolve)
-            out = F.when(c, t) if out is None else out.when(c, t)
-        if "default" in operands:
-            out = out.otherwise(_ref(operands["default"], resolve))
-        # Mongo errors at RUN time when no branch matches and there is
-        # no default; a DataFrame engine can't raise per-row — the
-        # documented divergence is NULL instead (when() without
-        # otherwise), which downstream null handling treats uniformly
-        return out
-    if op == "$round" or op == "$trunc":
-        args = operands if isinstance(operands, list) else [operands]
-        place = _int_literal(args[1], op) if len(args) > 1 else 0
-        val = _ref(args[0], resolve)
-        if op == "$round":
-            # Mongo rounds HALF_EVEN — Spark's bround IS banker's
-            # rounding (plain round() is HALF_UP and would diverge)
-            return F.bround(val, place)
-        scale = F.lit(float(10 ** place))
-        scaled = val * scale
-        return (
-            F.when(scaled >= 0, F.floor(scaled)).otherwise(F.ceil(scaled))
-            / scale
-        )
-    if op == "$split":
-        # Mongo's delimiter is a LITERAL string; Spark's split takes a
-        # regex — escape metacharacters so '.' splits on dots
-        import re as _re_mod
-
-        if not (isinstance(operands, list) and len(operands) == 2
-                and isinstance(operands[1], str)
-                and not operands[1].startswith("$")):
-            # Mongo allows a field-path delimiter; the compile-time
-            # regex escape can't — refuse '$'-refs loudly rather than
-            # treating them as literal text
+            return f"CAST({t} AS DATE)"
+        return t
+    if op == "$sortArray":
+        # {input, sortBy: 1|-1} — scalar element sort only; the
+        # field-spec sortBy form (document elements) is refused: a
+        # comparator over arbitrary struct shapes is not compilable
+        # without the element schema
+        if not (isinstance(operands, dict) and "input" in operands
+                and operands.get("sortBy") in (1, -1)):
             raise DocumentQueryError(
-                f"$split expects [expr, literal delimiter]: {spec!r}"
+                f"$sortArray needs input + sortBy 1|-1: {spec!r}"
             )
-        # split with limit -1 keeps trailing empties (Mongo keeps them)
-        return F.split(
-            _ref(operands[0], resolve), _re_mod.escape(operands[1]), -1
-        )
-    if op == "$substrCP":
-        # Mongo is 0-based; Spark substring is 1-based
-        if not (isinstance(operands, list) and len(operands) == 3):
-            raise DocumentQueryError(f"$substrCP needs 3 operands: {spec!r}")
-        s = _ref(operands[0], resolve)
-        start = _ref(operands[1], resolve) + F.lit(1)
-        return F.substring(s, start, _ref(operands[2], resolve))
-    if op == "$arrayElemAt":
-        # Mongo: 0-based, negative counts from the end, OUT-OF-RANGE
-        # yields missing (null here) — try_element_at, because Spark
-        # 4's plain element_at THROWS on an out-of-bounds index (the
-        # r11 projection property sweep caught [-4] over a 3-element
-        # array dying with SparkArrayIndexOutOfBoundsException).
-        # element_at is 1-based with the same negative convention; the
-        # +1 shift means the compiled index is never 0.
-        if not (isinstance(operands, list) and len(operands) == 2):
-            raise DocumentQueryError(f"$arrayElemAt needs 2 operands: {spec!r}")
-        arr = _ref(operands[0], resolve)
-        idx = _ref(operands[1], resolve)
-        return F.try_element_at(
-            arr, F.when(idx >= 0, idx + F.lit(1)).otherwise(idx).cast("int")
-        )
-    if op == "$slice":
-        if not (isinstance(operands, list) and len(operands) in (2, 3)):
-            raise DocumentQueryError(f"$slice needs 2-3 operands: {spec!r}")
-        arr = _ref(operands[0], resolve)
-        if len(operands) == 2:
-            n = _int_literal(operands[1], "$slice")
-            # Mongo 2-arg: first n (n>0) or last n (n<0)
-            if n >= 0:
-                return F.slice(arr, 1, n)
-            return F.slice(arr, F.greatest(
-                F.size(arr) + F.lit(n + 1), F.lit(1)
-            ), F.lit(-n))
-        pos = _int_literal(operands[1], "$slice")
-        n = _int_literal(operands[2], "$slice")
-        if n <= 0:
-            raise DocumentQueryError("$slice 3-arg count must be positive")
-        start = pos + 1 if pos >= 0 else pos  # slice() shares the
-        #                       negative-from-end convention for starts
-        return F.slice(arr, start, n)
+        s = f"array_sort({sub(operands['input'])})"
+        return s if operands["sortBy"] == 1 else f"reverse({s})"
+    if op == "$replaceAll":
+        # Mongo replaces LITERAL substrings; replace() is the non-regex
+        # replacement (all three operands may be expressions)
+        if not (isinstance(operands, dict) and "input" in operands
+                and "find" in operands and "replacement" in operands):
+            raise DocumentQueryError(f"Bad $replaceAll: {spec!r}")
+        i, f_, r = (sub(operands[k])
+                    for k in ("input", "find", "replacement"))
+        return f"replace({i}, {f_}, {r})"
+    if op == "$indexOfCP":
+        # [string, substring, start?, end?] → 0-based index of the
+        # first occurrence, -1 when absent (locate's 0 → -1). The
+        # substring and bounds must be literals: locate() folds the
+        # needle into the codegen'd expression.
+        if not (isinstance(operands, list) and len(operands) in (2, 3, 4)):
+            raise DocumentQueryError(
+                f"$indexOfCP needs 2-4 operands: {spec!r}"
+            )
+        needle = operands[1]
+        if not isinstance(needle, str) or needle.startswith("$"):
+            raise DocumentQueryError(
+                f"$indexOfCP substring must be a literal string: {needle!r}"
+            )
+        s = sub(operands[0])
+        if len(operands) == 4:
+            # Mongo's end bound is exclusive and CONTAINING: the whole
+            # match must lie within [start, end) — searching the
+            # end-length prefix reproduces that exactly
+            end = _int_literal(operands[3], "$indexOfCP")
+            s = f"substring({s}, 1, {end})"
+        start = (_int_literal(operands[2], "$indexOfCP")
+                 if len(operands) >= 3 else 0)
+        if start < 0:
+            raise DocumentQueryError("$indexOfCP start must be >= 0")
+        return (f"CAST((locate({_sql_lit(needle)}, {s}, {start + 1}) - 1) "
+                f"AS BIGINT)")
+    if op in ("$trim", "$ltrim", "$rtrim") and isinstance(operands, dict):
+        # Mongo's canonical {input, chars?} form; the chars set trims
+        # via an anchored character-class regexp_replace (codegen
+        # native). The bare-operand form is a plain function below.
+        if "input" not in operands:
+            raise DocumentQueryError(f"{op} needs input: {spec!r}")
+        s = sub(operands["input"])
+        chars = operands.get("chars")
+        if chars is None:
+            return f"{_SQL_FN1[op]}({s})"
+        if not isinstance(chars, str) or chars.startswith("$") or not chars:
+            raise DocumentQueryError(
+                f"{op} chars must be a non-empty literal string: {chars!r}"
+            )
+        cls = "[" + "".join(re.escape(c) for c in sorted(set(chars))) + "]+"
+        pat = {"$trim": f"^{cls}|{cls}$", "$ltrim": f"^{cls}",
+               "$rtrim": f"{cls}$"}[op]
+        return f"regexp_replace({s}, {_sql_lit(pat)}, '')"
     if op in ("$filter", "$map"):
         if not (isinstance(operands, dict) and "input" in operands):
             raise DocumentQueryError(f"Bad {op}: {spec!r}")
-        var = operands.get("as", "this")
         body_key = "cond" if op == "$filter" else "in"
         if body_key not in operands:
             raise DocumentQueryError(f"{op} needs {body_key!r}: {spec!r}")
-        inp = _ref(operands["input"], resolve)
-        body = operands[body_key]
-        is_filter = op == "$filter"
-
-        # a SINGLE-parameter closure: pyspark inspects the lambda's
-        # arity to decide between (x) and (x, i) forms, so default-arg
-        # captures would be mistaken for extra lambda parameters
-        def make_lam(_body, _var, _resolve, _is_filter):
-            def lam(x):
-                c = _ref(_body, _scoped_resolve(_resolve, {_var: x}))
-                return c.cast("boolean") if _is_filter else c
-
-            return lam
-
-        return (F.filter if is_filter else F.transform)(
-            inp, make_lam(body, var, resolve, is_filter)
-        )
+        inp = sub(operands["input"])
+        param = env.fresh()
+        body = _sql_of(operands[body_key],
+                       env.bind({operands.get("as", "this"): param}))
+        if op == "$filter":
+            return f"filter({inp}, {param} -> {_sql_bool(body)})"
+        return f"transform({inp}, {param} -> {body})"
     if op == "$reduce":
         if not (isinstance(operands, dict) and "input" in operands
                 and "initialValue" in operands and "in" in operands):
             raise DocumentQueryError(f"Bad $reduce: {spec!r}")
-        inp = _ref(operands["input"], resolve)
+        inp = sub(operands["input"])
         init_spec = operands["initialValue"]
         body = operands["in"]
+        acc, this = env.fresh(), env.fresh()
+        body_sql = _sql_of(body, env.bind({"value": acc, "this": this}))
         if isinstance(init_spec, (int, float)) and not isinstance(
                 init_spec, bool):
             # Mongo silently WIDENS the accumulator (int32 -> long ->
-            # double) as the fold proceeds; Spark's F.aggregate
-            # demands the init's type EQUAL the merge lambda's return
-            # type, so a bare `initialValue: 0` over a bigint array
-            # throws DATATYPE_MISMATCH (r11 judge find). Derive the
-            # init's type from the fold itself: get(arr, -1) is a
-            # guaranteed-null column OF THE ELEMENT TYPE (no ANSI
-            # error), a probe-compiled BODY (both lambda vars bound to
-            # the element probe) carries the merge's RESULT type (the
-            # r12 suite caught an int-literal array whose body
-            # references a LONG outer column — element type alone is
-            # not enough), when(False, ...) never evaluates either,
-            # and coalesce unifies the literal with both: the
-            # accumulator adopts the widest of (literal, element,
-            # body) exactly like Mongo's promotion ladder.
-            probe = F.get(inp, F.lit(-1))
-            body_probe = _ref(body, _scoped_resolve(
-                resolve, {"value": probe, "this": probe}))
-            init = F.coalesce(
-                F.when(F.lit(False), probe),
-                F.when(F.lit(False), body_probe),
-                F.lit(init_spec))
+            # double) as the fold proceeds; Spark's aggregate demands
+            # the init's type EQUAL the merge lambda's return type, so
+            # a bare `initialValue: 0` over a bigint array would throw
+            # DATATYPE_MISMATCH. Derive the init's type from the fold
+            # itself: get(arr, -1) is a guaranteed-null value OF THE
+            # ELEMENT TYPE (no ANSI error), a probe-compiled BODY (both
+            # lambda vars bound to the element probe) carries the
+            # merge's RESULT type (a body may reference a wider OUTER
+            # column than the element type), CASE WHEN FALSE never
+            # evaluates either, and coalesce unifies the literal with
+            # both: the accumulator adopts the widest of (literal,
+            # element, body) exactly like Mongo's promotion ladder.
+            probe = f"get({inp}, -1)"
+            body_probe = _sql_of(body, env.bind({"value": probe,
+                                                 "this": probe}))
+            init = (f"coalesce(CASE WHEN FALSE THEN {probe} END, "
+                    f"CASE WHEN FALSE THEN {body_probe} END, "
+                    f"{_sql_lit(init_spec)})")
         else:
-            init = _ref(init_spec, resolve)
-
-        def make_merge(_body, _resolve):
-            def merge(acc, x):
-                return _ref(_body, _scoped_resolve(
-                    _resolve, {"value": acc, "this": x}
-                ))
-
-            return merge
-
-        return F.aggregate(inp, init, make_merge(body, resolve))
-    if op == "$convert":
-        # {"input": e, "to": t, "onError": e?, "onNull": e?} — the
-        # general form of the $toX family (Mongo 4.0). `to` is a
-        # compile-time literal: a type name or Mongo's numeric code.
-        # Conversion failures are LOUD without onError (ANSI cast
-        # throws; Mongo errors there too); with onError the try_cast
-        # substitutes the fallback for failures ONLY — null INPUT is
-        # not a failure and follows onNull (default null), mirroring
-        # the $dateFromString precedence contract. to:"date" accepts
-        # both date-strings (parse) and numerics (MILLIS since epoch —
-        # Mongo's convention; a bare Spark cast would read seconds)
-        # via a try-parse cascade, and returns a timestamp.
-        # Documented divergences: string→bool follows Spark's cast
-        # table ('true'/'false'/'1'… convert; Mongo rejects every
-        # string), decimal is decimal(38,10) not decimal128, and a
-        # date→string render uses Spark's ISO form.
-        if not (isinstance(operands, dict) and "input" in operands
-                and "to" in operands):
-            raise DocumentQueryError(f"Bad $convert: {spec!r}")
-        to = operands["to"]
-        if isinstance(to, int) and not isinstance(to, bool):
-            to = _CONVERT_CODES.get(to, to)
-        if to == "timestamp":  # r9b alias — same cascade as "date"
-            to = "date"
-        if not isinstance(to, str) or to not in _CONVERT_TYPES:
-            raise DocumentQueryError(
-                f"$convert bad 'to' {operands['to']!r} "
-                f"(supported: {sorted(_CONVERT_TYPES)} or Mongo codes "
-                f"{sorted(_CONVERT_CODES)})"
-            )
-        # Mongo's onError/onNull may be ANY type (a heterogeneous
-        # result column) — a DataFrame column is single-typed, so a
-        # fallback literal outside the target's type family either
-        # runtime-crashes (ANSI casts 'missing' to double under
-        # when()-coercion), dies in analysis (int vs boolean has no
-        # common type), or SILENTLY RE-TYPES the whole column (an int
-        # fallback with to:"string" coerced every success row back to
-        # int) — all three shapes sweep-found (r12). Loud typed error
-        # for literal fallbacks outside the family; expression
-        # fallbacks must analyze to the target type.
-        for fb_key in ("onError", "onNull"):
-            fb = operands.get(fb_key)
-            if fb is None or isinstance(fb, dict) or (
-                    isinstance(fb, str) and fb.startswith("$")):
-                continue  # absent / expression / field path
-            if to == "date":
-                # the date cascade yields a TIMESTAMP column and no
-                # scalar literal is timestamp-typed: a bare string
-                # fallback would silently re-type the whole column to
-                # string under when()-coercion — the exact class this
-                # guard exists to block (r13 advice find). Use an
-                # expression fallback ({"$toDate": ...} / field path).
-                ok = False
-            elif to == "string":
-                ok = isinstance(fb, str)
-            elif to == "bool":
-                ok = isinstance(fb, bool)
-            else:
-                ok = isinstance(fb, (int, float)) and not isinstance(
-                    fb, bool)
-            if not ok:
-                raise DocumentQueryError(
-                    f"$convert {fb_key} {fb!r} does not match target "
-                    f"{to!r}: a DataFrame column is single-typed "
-                    "(Mongo's heterogeneous fallback has no Spark "
-                    "analog) — use a target-typed fallback"
-                )
-        x = _ref(operands["input"], resolve)
-        if to == "date":
-            s = x.cast("string")
-            conv = F.coalesce(
-                F.try_to_timestamp(s),
-                F.timestamp_millis(s.try_cast("long")),
-            )
-        elif "onError" in operands:
-            conv = x.try_cast(_CONVERT_TYPES[to])
-        else:
-            conv = x.cast(_CONVERT_TYPES[to])
-        failed = x.isNotNull() & conv.isNull()
-        if "onError" in operands:
-            conv = F.when(
-                failed, _ref(operands["onError"], resolve)
-            ).otherwise(conv)
-        elif to == "date":
-            # the loud no-onError contract for the cascade path, where
-            # try-parses would otherwise swallow the failure silently
-            conv = F.when(
-                failed,
-                F.raise_error(F.lit(
-                    "$convert: unparseable date input (use onError)")),
-            ).otherwise(conv)
-        if "onNull" in operands:
-            conv = F.when(
-                x.isNull(), _ref(operands["onNull"], resolve)
-            ).otherwise(conv)
-        return conv
+            init = sub(init_spec)
+        return f"aggregate({inp}, {init}, ({acc}, {this}) -> {body_sql})"
+    if op == "$let":
+        # {"vars": {name: e, …}, "in": body} — vars evaluate in the
+        # ENCLOSING scope (Mongo's rule: a var may not see its
+        # siblings); each binding's SQL text is inlined wherever
+        # '$$name' appears in the body
+        if not (isinstance(operands, dict)
+                and isinstance(operands.get("vars"), dict)
+                and "in" in operands):
+            raise DocumentQueryError(f"Bad $let: {spec!r}")
+        bound = {name: sub(val) for name, val in operands["vars"].items()}
+        return _sql_of(operands["in"], env.bind(bound))
     if op in ("$dateDiff", "$dateAdd", "$dateSubtract"):
         if not (isinstance(operands, dict) and "unit" in operands):
             raise DocumentQueryError(f"Bad {op}: {spec!r}")
         unit = operands["unit"]
         if op == "$dateDiff":
+            # Mongo counts unit BOUNDARY crossings for every unit, not
+            # elapsed spans: day → calendar days; week → Sunday-start
+            # weeks; hour/minute/second → both ends truncated to the
+            # unit first (10:59→11:01 is ONE hour boundary)
             if not ("startDate" in operands and "endDate" in operands):
                 raise DocumentQueryError(f"{op} needs startDate+endDate")
-            a = _ref(operands["startDate"], resolve)
-            b = _ref(operands["endDate"], resolve)
+            a = sub(operands["startDate"])
+            b = sub(operands["endDate"])
             if unit == "day":
-                # Mongo counts day BOUNDARY crossings, not 24h spans
-                return F.datediff(F.to_date(b), F.to_date(a)).cast("long")
+                return f"CAST(datediff(to_date({b}), to_date({a})) AS BIGINT)"
             if unit == "year":
-                return (F.year(b) - F.year(a)).cast("long")
+                return f"CAST((year({b}) - year({a})) AS BIGINT)"
             if unit == "month":
-                return (
-                    (F.year(b) - F.year(a)) * F.lit(12)
-                    + (F.month(b) - F.month(a))
-                ).cast("long")
+                return (f"CAST((((year({b}) - year({a})) * 12) + "
+                        f"(month({b}) - month({a}))) AS BIGINT)")
             if unit == "week":
-                # boundary-crossing count under the Sunday default
-                sow = _expr(
-                    {"$dateTrunc": {"date": operands["startDate"],
-                                    "unit": "week"}}, resolve)
-                eow = _expr(
-                    {"$dateTrunc": {"date": operands["endDate"],
-                                    "unit": "week"}}, resolve)
-                return (F.datediff(eow, sow) / F.lit(7)).cast("long")
+                sow, eow = (_sql_expr_text(
+                    {"$dateTrunc": {"date": operands[k], "unit": "week"}},
+                    env) for k in ("startDate", "endDate"))
+                return f"CAST((datediff({eow}, {sow}) / 7) AS BIGINT)"
             if unit in ("hour", "minute", "second"):
-                # Mongo counts unit BOUNDARY crossings for every unit,
-                # not elapsed spans — truncate both ends to the unit
-                # first (10:59→11:01 is ONE hour boundary, not zero;
-                # the r11 date property sweep's contract). For
-                # 'second' trunc-then-diff and span coincide.
                 secs = {"hour": 3600, "minute": 60, "second": 1}[unit]
-                ta = F.date_trunc(unit, a.cast("timestamp")).cast("long")
-                tb = F.date_trunc(unit, b.cast("timestamp")).cast("long")
-                return ((tb - ta) / F.lit(secs)).cast("long")
+                ta = (f"CAST(date_trunc('{unit}', "
+                      f"CAST({a} AS TIMESTAMP)) AS BIGINT)")
+                tb = (f"CAST(date_trunc('{unit}', "
+                      f"CAST({b} AS TIMESTAMP)) AS BIGINT)")
+                return f"CAST((({tb} - {ta}) / {secs}) AS BIGINT)"
             raise DocumentQueryError(f"{op} bad unit: {unit!r}")
         if "startDate" not in operands or "amount" not in operands:
             raise DocumentQueryError(f"{op} needs startDate+amount")
         amt = _int_literal(operands["amount"], op)
         if op == "$dateSubtract":
             amt = -amt
-        d = _ref(operands["startDate"], resolve)
+        d = sub(operands["startDate"])
         if unit not in ("year", "quarter", "month", "week", "day",
                         "hour", "minute", "second"):
             raise DocumentQueryError(f"{op} bad unit: {unit!r}")
         if unit == "quarter":
-            # Spark's interval literal has no 'quarter' unit — the
-            # bare f-string compiled a PARSE_SYNTAX_ERROR (caught by
-            # the r11 date property sweep); a quarter IS 3 calendar
-            # months, same clamping
+            # Spark's interval literal has no 'quarter' unit; a quarter
+            # IS 3 calendar months, same clamping
             unit, amt = "month", amt * 3
-        return d + F.expr(f"interval {amt} {unit}")
+        return f"({d} + interval {amt} {unit})"
     if op == "$dateToString":
         # {"format": "%Y-%m-%d…", "date": e, "onNull": e?} — rendered
         # PIECE-WISE: each %-specifier becomes its own date_format()
-        # and literal runs become plain lit()s, concatenated. One
+        # and literal runs become plain literals, concatenated. One
         # translated pattern would silently merge adjacent same-field
-        # specifiers ('%m%m' → 'MMMM' → 'March' — caught by the r9
-        # property sweep); the piece-wise concat has no such ambiguity
-        # and needs no literal quoting at all. Still one codegen
-        # projection. Default format is Mongo's ISO shape. "timezone"
-        # is refused (the engine normalizes timestamps to UTC on
-        # ingest — sources/parquet.py — so a per-expression zone would
-        # silently double-shift).
+        # specifiers ('%m%m' → 'MMMM' → 'March'). Default format is
+        # Mongo's ISO shape. "timezone" is refused (the engine
+        # normalizes timestamps to UTC on ingest — sources/parquet.py
+        # — so a per-expression zone would silently double-shift).
         if not (isinstance(operands, dict) and "date" in operands):
             raise DocumentQueryError(f"$dateToString needs date: {spec!r}")
         if "timezone" in operands:
@@ -2466,26 +1397,28 @@ def _expr(spec: dict[str, Any], resolve=None) -> Column:
         fmt = operands.get("format", "%Y-%m-%dT%H:%M:%S.%LZ")
         if not isinstance(fmt, str):
             raise DocumentQueryError(f"$dateToString bad format: {fmt!r}")
-        dcol = _ref(operands["date"], resolve)
+        d = sub(operands["date"])
         pieces = [
-            F.lit(text) if kind == "lit" else F.date_format(dcol, text)
+            _sql_lit(text) if kind == "lit"
+            else f"date_format({d}, {_sql_lit(text)})"
             for kind, text in _mongo_fmt_tokens(fmt, "$dateToString")
         ]
-        body = F.concat(*pieces) if pieces else F.lit("")
+        body = ("concat(" + ", ".join(pieces) + ")") if pieces else "''"
         # a literal-only format never nulls out on its own — gate on
         # the date so a null input still follows Mongo's null/onNull
         # contract
-        rendered = F.when(dcol.isNotNull(), body)
+        rendered = f"CASE WHEN ({d} IS NOT NULL) THEN {body}"
         if "onNull" in operands:
-            rendered = rendered.otherwise(_ref(operands["onNull"], resolve))
-        return rendered
+            rendered += f" ELSE {sub(operands['onNull'])}"
+        return rendered + " END"
     if op == "$dateFromString":
         # {"dateString": e, "format": literal?, "onError": e?,
         # "onNull": e?} → to_timestamp. Without onError the parse is
         # STRICT (ANSI to_timestamp raises on malformed input — Mongo
         # throws too); with onError the try_ variant substitutes the
-        # fallback for parse failures only. onNull handles null INPUT
-        # before the parse, mirroring Mongo's precedence.
+        # fallback for parse failures only. Null INPUT is not a parse
+        # failure: onNull (default null) takes precedence, gated
+        # before the onError coalesce can see the null-input miss.
         if not (isinstance(operands, dict) and "dateString" in operands):
             raise DocumentQueryError(
                 f"$dateFromString needs dateString: {spec!r}"
@@ -2495,7 +1428,8 @@ def _expr(spec: dict[str, Any], resolve=None) -> Column:
                 "$dateFromString timezone is not supported: timestamps "
                 "are UTC-normalized on ingest"
             )
-        s = _ref(operands["dateString"], resolve)
+        s = sub(operands["dateString"])
+        fn = "try_to_timestamp" if "onError" in operands else "to_timestamp"
         fmt = operands.get("format")
         if fmt is not None:
             if not isinstance(fmt, str) or fmt.startswith("$"):
@@ -2503,37 +1437,27 @@ def _expr(spec: dict[str, Any], resolve=None) -> Column:
                     f"$dateFromString format must be a literal: {fmt!r}"
                 )
             pat = _mongo_datetime_fmt(fmt, "$dateFromString")
-            parsed = (F.try_to_timestamp(s, F.lit(pat))
-                      if "onError" in operands
-                      else F.to_timestamp(s, pat))
+            parsed = f"{fn}({s}, {_sql_lit(pat)})"
         else:
-            parsed = (F.try_to_timestamp(s) if "onError" in operands
-                      else F.to_timestamp(s))
+            parsed = f"{fn}({s})"
         if "onError" in operands:
-            parsed = F.coalesce(parsed, _ref(operands["onError"], resolve))
+            parsed = f"coalesce({parsed}, {sub(operands['onError'])})"
         if "onError" in operands or "onNull" in operands:
-            # null INPUT is not a parse failure: Mongo's onNull —
-            # defaulting to null — takes precedence over onError, so
-            # gate before the coalesce above can see the null-input
-            # miss
-            on_null = (_ref(operands["onNull"], resolve)
-                       if "onNull" in operands
-                       else F.lit(None).cast("timestamp"))
-            parsed = F.when(s.isNull(), on_null).otherwise(parsed)
+            on_null = (sub(operands["onNull"]) if "onNull" in operands
+                       else "CAST(NULL AS TIMESTAMP)")
+            parsed = (f"CASE WHEN ({s} IS NULL) THEN {on_null} "
+                      f"ELSE {parsed} END")
         return parsed
     if op == "$dateFromParts":
-        # {"year": e, "month": e?, "day": e?, "hour": e?, "minute": e?,
-        # "second": e?, "millisecond": e?} → make_timestamp (ONE native
-        # Catalyst call; milliseconds ride the fractional-seconds
+        # {"year": e, "month": e?, …, "millisecond": e?} →
+        # make_timestamp (milliseconds ride the fractional-seconds
         # argument). STRICT by default: an out-of-range part (month 13)
         # throws under ANSI — a documented divergence from Mongo's
-        # carry-and-pin coercion (month 13 → January of year+1), which
-        # no single Catalyst expression reproduces. The engine-extension
-        # "onError"/"onNull" keys mirror the sibling $dateFromString
-        # contract: onError switches to try_make_timestamp + fallback
-        # for out-of-range parts; a null YEAR returns onNull (default
-        # null) first. The ISO week-date form and timezone are refused
-        # pointedly.
+        # carry-and-pin coercion. The engine-extension "onError"/
+        # "onNull" keys mirror $dateFromString: onError switches to
+        # try_make_timestamp + fallback; a null YEAR returns onNull
+        # (default null) first. ISO week-date fields and timezone are
+        # refused pointedly.
         if not isinstance(operands, dict):
             raise DocumentQueryError(f"$dateFromParts needs year: {spec!r}")
         if "timezone" in operands:
@@ -2557,108 +1481,73 @@ def _expr(spec: dict[str, Any], resolve=None) -> Column:
                 f"$dateFromParts unknown fields: {bad_keys}"
             )
         part = {
-            k: (_ref(operands[k], resolve) if k in operands else F.lit(d))
-            for k, d in (("year", 0), ("month", 1), ("day", 1),
-                         ("hour", 0), ("minute", 0), ("second", 0),
-                         ("millisecond", 0))
+            k: (sub(operands[k]) if k in operands else str(dflt))
+            for k, dflt in (("year", 0), ("month", 1), ("day", 1),
+                            ("hour", 0), ("minute", 0), ("second", 0),
+                            ("millisecond", 0))
         }
-        secs = (
-            part["second"].cast("decimal(16,6)")
-            + part["millisecond"].cast("decimal(16,6)") / F.lit(1000)
-        ).cast("decimal(16,6)")
-        made_args = [part["year"].cast("int"), part["month"].cast("int"),
-                     part["day"].cast("int"), part["hour"].cast("int"),
-                     part["minute"].cast("int"), secs]
+        secs = (f"CAST((CAST({part['second']} AS DECIMAL(16,6)) + "
+                f"(CAST({part['millisecond']} AS DECIMAL(16,6)) / 1000)) "
+                f"AS DECIMAL(16,6))")
+        made_args = ", ".join(
+            [f"CAST({part[k]} AS INT)"
+             for k in ("year", "month", "day", "hour", "minute")]
+            + [secs]
+        )
         if "onError" in operands:
-            made = F.coalesce(
-                F.try_make_timestamp(*made_args),
-                _ref(operands["onError"], resolve).cast("timestamp"),
-            )
+            made = (f"coalesce(try_make_timestamp({made_args}), "
+                    f"CAST({sub(operands['onError'])} AS TIMESTAMP))")
         else:
-            made = F.make_timestamp(*made_args)
+            made = f"make_timestamp({made_args})"
         if "onError" in operands or "onNull" in operands:
-            on_null = (_ref(operands["onNull"], resolve)
-                       if "onNull" in operands
-                       else F.lit(None).cast("timestamp"))
-            made = F.when(part["year"].isNull(), on_null).otherwise(made)
+            on_null = (sub(operands["onNull"]) if "onNull" in operands
+                       else "CAST(NULL AS TIMESTAMP)")
+            made = (f"CASE WHEN ({part['year']} IS NULL) THEN {on_null} "
+                    f"ELSE {made} END")
         return made
-    if op == "$regexMatch":
+    if op in ("$regexMatch", "$regexFind", "$regexFindAll"):
         inp, pattern = _regex_operands(op, operands)
-        return F.regexp_like(_ref(inp, resolve), F.lit(pattern))
-    if op == "$regexFind":
-        # First-match document {match, idx, captures} or null when
-        # nothing matches — Mongo's shape, all native regexp_* calls on
-        # ONE input expression (codegen CSEs the repeated pattern).
-        # idx is the 0-based CODE-POINT offset of the match — Mongo's
-        # contract ("the code point index of the matching string").
-        # regexp_instr would report Java UTF-16 units (diverging on
-        # astral-plane input); instead idx = length(s) -
+        s = sub(inp)
+        p_lit = _sql_lit(pattern)
+        if op == "$regexMatch":
+            return f"regexp_like({s}, {p_lit})"
+        # idx is the 0-based CODE-POINT offset of a match — Mongo's
+        # contract. regexp_instr would report Java UTF-16 units
+        # (diverging on astral-plane input); instead idx = length(s) -
         # length(regexp_replace(s, '(?s)^.*?(?=pat)', '')): the lazy
         # anchored prefix up to the first match is stripped and both
         # length() calls count code points. The lookahead evaluates
         # over the FULL string, so assertions keep their left context.
         # Documented divergence: a non-participating capture group
         # yields '' (regexp_extract's convention), not null.
-        import re as _re_mod
-
-        inp, pattern = _regex_operands(op, operands)
-        try:
-            n_groups = _re_mod.compile(_python_probe(pattern)).groups
-        except _re_mod.error as exc:
-            raise DocumentQueryError(
-                f"$regexFind bad pattern {pattern!r}: {exc}"
-            ) from exc
-        s = _ref(inp, resolve)
-        lit_pat = F.lit(pattern)
-        first_idx = (
-            F.length(s)
-            - F.length(
-                F.regexp_replace(s, F.lit(f"(?s)^.*?(?={pattern})"), F.lit(""))
-            )
-        )
-        doc = F.struct(
-            F.regexp_extract(s, pattern, 0).alias("match"),
-            first_idx.cast("long").alias("idx"),
-            F.array(*[
-                F.regexp_extract(s, pattern, g)
+        n_groups = re.compile(_python_probe(pattern)).groups
+        pref_lit = _sql_lit(f"(?s)^.*?(?={pattern})")
+        if op == "$regexFind":
+            # first-match document or null when nothing matches
+            caps = ", ".join(
+                f"regexp_extract({s}, {p_lit}, {g})"
                 for g in range(1, n_groups + 1)
-            ]).cast("array<string>").alias("captures"),
-        )
-        return F.when(F.regexp_like(s, lit_pat), doc)
-    if op == "$regexFindAll":
-        # Array of Mongo's {match, idx, captures} docs for EVERY match.
-        # regexp_extract_all pulls the full match and each capture
-        # group (the per-group arrays align by match ordinal — one
-        # codegen scan per group), and idx comes from a left-fold over
-        # the matches that re-searches the remaining suffix from the
-        # previous match's end (empty matches advance one position,
-        # Java's rule). Offsets are 0-based CODE-POINT indexes —
-        # Mongo's contract — via the $regexFind trick: the lazy
-        # anchored prefix up to the next match is stripped and the two
-        # length() calls count code points (regexp_instr would report
-        # UTF-16 units, diverging on astral-plane input; the property
-        # sweep pins code points with a non-BMP case). All native
-        # Catalyst lambdas — no UDF, no extra stage. Null input
-        # returns [] (the Mongo contract; $regexFind returns null).
-        # Patterns with left-context assertions are refused: the
-        # suffix re-search would see a spurious string-start and could
-        # misreport idx — $regexFind's full-string search stays exact
-        # for the first match. REMAINING DOCUMENTED DIVERGENCE: an
-        # EMPTY-MATCHABLE pattern (e.g. 'a*') over astral-plane input
-        # yields one extra zero-length match per astral char — Java's
-        # Matcher advances by UTF-16 code unit after an empty match and
-        # so also matches inside the surrogate pair, where Mongo's
-        # PCRE advances by code point. Non-empty matches and all BMP
-        # input are exact (sweep-pinned).
-        import re as _re_mod
-
-        inp, pattern = _regex_operands(op, operands)
-        try:
-            n_groups = _re_mod.compile(_python_probe(pattern)).groups
-        except _re_mod.error as exc:
-            raise DocumentQueryError(
-                f"$regexFindAll bad pattern {pattern!r}: {exc}"
-            ) from exc
+            )
+            doc = (
+                f"struct(regexp_extract({s}, {p_lit}, 0) AS `match`, "
+                f"CAST((length({s}) - length(regexp_replace({s}, "
+                f"{pref_lit}, ''))) AS BIGINT) AS `idx`, "
+                f"CAST(array({caps}) AS ARRAY<STRING>) AS `captures`)"
+            )
+            return f"CASE WHEN regexp_like({s}, {p_lit}) THEN {doc} END"
+        # $regexFindAll: regexp_extract_all pulls the full match and
+        # each capture group (the per-group arrays align by match
+        # ordinal), and idx comes from a left-fold over the matches
+        # that re-searches the remaining suffix from the previous
+        # match's end (empty matches advance one position, Java's
+        # rule). Null input returns [] (Mongo's contract). Patterns with
+        # left-context assertions are refused: the suffix re-search
+        # would see a spurious string-start. REMAINING DOCUMENTED
+        # DIVERGENCE: an EMPTY-MATCHABLE pattern (e.g. 'a*') over
+        # astral-plane input yields one extra zero-length match per
+        # astral char — Java's Matcher advances by UTF-16 code unit
+        # after an empty match, where Mongo's PCRE advances by code
+        # point. Non-empty matches and all BMP input are exact.
         if _has_left_context_assertion(pattern):
             raise DocumentQueryError(
                 "$regexFindAll cannot compute exact per-match offsets "
@@ -2666,141 +1555,143 @@ def _expr(spec: dict[str, Any], resolve=None) -> Column:
                 "\\B, lookbehind) — use $regexFind (first match) or "
                 "$regexMatch (predicate)"
             )
-        s = _ref(inp, resolve)
-        lit_pat = F.lit(pattern)
-        matches = F.regexp_extract_all(s, lit_pat, F.lit(0))
-
-        prefix_pat = F.lit(f"(?s)^.*?(?={pattern})")
-
-        def _idx_step(acc: Column, m: Column) -> Column:
-            suffix = s.substr(acc["pos"] + F.lit(1), F.length(s))
-            found = (
-                acc["pos"]
-                + F.length(suffix)
-                - F.length(F.regexp_replace(suffix, prefix_pat, F.lit("")))
-            ).cast("int")
-            return F.struct(
-                (found + F.greatest(F.length(m), F.lit(1))).alias("pos"),
-                F.concat(
-                    acc["out"], F.array(found.cast("long"))
-                ).alias("out"),
-            )
-
-        idxs = F.aggregate(
-            matches,
-            F.struct(
-                F.lit(0).cast("int").alias("pos"),
-                F.array().cast("array<long>").alias("out"),
-            ),
-            _idx_step,
-            lambda acc: acc["out"],
+        acc, m, i = env.fresh(), env.fresh(), env.fresh()
+        matches = f"regexp_extract_all({s}, {p_lit}, 0)"
+        suffix = f"substr({s}, ({acc}['pos'] + 1), length({s}))"
+        found = (f"CAST((({acc}['pos'] + length({suffix})) - "
+                 f"length(regexp_replace({suffix}, {pref_lit}, ''))) "
+                 f"AS INT)")
+        step = (f"struct(({found} + greatest(length({m}), 1)) AS `pos`, "
+                f"concat({acc}['out'], array(CAST({found} AS BIGINT))) "
+                f"AS `out`)")
+        idxs = (f"aggregate({matches}, "
+                f"struct(CAST(0 AS INT) AS `pos`, "
+                f"CAST(array() AS ARRAY<BIGINT>) AS `out`), "
+                f"({acc}, {m}) -> {step}, {acc} -> {acc}['out'])")
+        caps = ", ".join(
+            f"element_at(regexp_extract_all({s}, {p_lit}, {g}), ({i} + 1))"
+            for g in range(1, n_groups + 1)
         )
-        docs = F.transform(
-            matches,
-            lambda m, i: F.struct(
-                m.alias("match"),
-                F.element_at(idxs, i + F.lit(1)).alias("idx"),
-                F.array(*[
-                    F.element_at(
-                        F.regexp_extract_all(s, lit_pat, F.lit(g)),
-                        i + F.lit(1),
-                    )
-                    for g in range(1, n_groups + 1)
-                ]).cast("array<string>").alias("captures"),
-            ),
-        )
-        return F.coalesce(
-            docs,
-            F.array().cast(
-                "array<struct<match:string,idx:bigint,"
-                "captures:array<string>>>"
-            ),
-        )
-    if op == "$let":
-        # {"vars": {name: e, …}, "in": body} — vars evaluate in the
-        # ENCLOSING scope (Mongo's rule: a var may not see its
-        # siblings), then the body resolves '$$name' through the same
-        # scoped-resolver machinery the array lambdas use.
-        if not (isinstance(operands, dict)
-                and isinstance(operands.get("vars"), dict)
-                and "in" in operands):
-            raise DocumentQueryError(f"Bad $let: {spec!r}")
-        bindings = {
-            name: _ref(val, resolve)
-            for name, val in operands["vars"].items()
-        }
-        return _ref(operands["in"], _scoped_resolve(resolve, bindings))
-    if op == "$getField":
-        # {"field": literal, "input": e} pulls a struct field / map key;
-        # the string shorthand reads a top-level field of the current
-        # document (dots are LITERAL in Mongo's $getField — that is its
-        # reason to exist — so the shorthand refuses them rather than
-        # silently nesting).
-        if isinstance(operands, str):
-            if "." in operands:
-                raise DocumentQueryError(
-                    "$getField shorthand with a dotted name needs the "
-                    "{field, input} form"
-                )
-            return _ref("$" + operands, resolve)
-        if not (isinstance(operands, dict) and "field" in operands
-                and "input" in operands):
-            raise DocumentQueryError(f"Bad $getField: {spec!r}")
-        field = operands["field"]
-        if not isinstance(field, str) or field.startswith("$"):
-            raise DocumentQueryError(
-                f"$getField field must be a literal string: {field!r}"
-            )
-        return _ref(operands["input"], resolve)[field]
-    # NOTE: $convert compiles in the r12 branch above (millis-date
-    # cascade, single-typed fallback guard) — the earlier r9b cast
-    # form was folded into it.
-    if op == "$literal":
-        # verbatim value, no '$' interpretation — scalars, flat lists,
-        # and document literals compile to lit/array/struct of literals
-        def build(v: Any) -> Column:
-            if isinstance(v, dict):
-                if not v:
-                    raise DocumentQueryError("$literal: empty document")
-                return F.struct(*[build(x).alias(k) for k, x in v.items()])
-            if isinstance(v, list):
-                return F.array(*[build(x) for x in v])
-            return F.lit(v)
-
-        return build(operands)
-    if op in ("$trim", "$ltrim", "$rtrim") and isinstance(operands, dict):
-        # Mongo's canonical {input, chars?} form; the chars set trims
-        # via an anchored character-class regexp_replace (codegen
-        # native). The bare-operand form stays in _EXPR_OPS.
-        import re as _re_mod
-
-        if "input" not in operands:
-            raise DocumentQueryError(f"{op} needs input: {spec!r}")
-        s = _ref(operands["input"], resolve)
-        chars = operands.get("chars")
-        if chars is None:
-            return {"$trim": F.trim, "$ltrim": F.ltrim,
-                    "$rtrim": F.rtrim}[op](s)
-        if not isinstance(chars, str) or chars.startswith("$") or not chars:
-            raise DocumentQueryError(
-                f"{op} chars must be a non-empty literal string: {chars!r}"
-            )
-        cls = "[" + "".join(_re_mod.escape(c) for c in set(chars)) + "]+"
-        pat = {"$trim": f"^{cls}|{cls}$", "$ltrim": f"^{cls}",
-               "$rtrim": f"{cls}$"}[op]
-        return F.regexp_replace(s, pat, "")
-    if op == "$sortArray":
-        # {input, sortBy: 1|-1} — scalar element sort only; the
-        # field-spec sortBy form (document elements) is refused: a
-        # comparator over arbitrary struct shapes is not compilable
-        # without the element schema
+        docs = (f"transform({matches}, ({m}, {i}) -> "
+                f"struct({m} AS `match`, "
+                f"element_at({idxs}, ({i} + 1)) AS `idx`, "
+                f"CAST(array({caps}) AS ARRAY<STRING>) AS `captures`))")
+        return (f"coalesce({docs}, CAST(array() AS "
+                f"array<struct<match:string,idx:bigint,"
+                f"captures:array<string>>>))")
+    if op == "$convert":
+        # {"input": e, "to": t, "onError": e?, "onNull": e?} — the
+        # general form of the $toX family. `to` is a compile-time
+        # literal: a type name or Mongo's numeric code. Failures are
+        # LOUD without onError (ANSI cast throws; Mongo errors there
+        # too); with onError the try_cast substitutes the fallback for
+        # failures ONLY — null INPUT is not a failure and follows
+        # onNull (default null). to:"date" accepts both date-strings
+        # (parse) and numerics (MILLIS since epoch — Mongo's
+        # convention; a bare Spark cast would read seconds) via a
+        # try-parse cascade, and returns a timestamp. Documented
+        # divergences: string→bool follows Spark's cast table,
+        # decimal is decimal(38,10) not decimal128, and a date→string
+        # render uses Spark's ISO form.
         if not (isinstance(operands, dict) and "input" in operands
-                and operands.get("sortBy") in (1, -1)):
+                and "to" in operands):
+            raise DocumentQueryError(f"Bad $convert: {spec!r}")
+        to = operands["to"]
+        if isinstance(to, int) and not isinstance(to, bool):
+            to = _CONVERT_CODES.get(to, to)
+        if to == "timestamp":  # alias — same cascade as "date"
+            to = "date"
+        if not isinstance(to, str) or to not in _CONVERT_TYPES:
             raise DocumentQueryError(
-                f"$sortArray needs input + sortBy 1|-1: {spec!r}"
+                f"$convert bad 'to' {operands['to']!r} "
+                f"(supported: {sorted(_CONVERT_TYPES)} or Mongo codes "
+                f"{sorted(_CONVERT_CODES)})"
             )
-        arr = F.array_sort(_ref(operands["input"], resolve))
-        return arr if operands["sortBy"] == 1 else F.reverse(arr)
+        # Mongo's onError/onNull may be ANY type (a heterogeneous
+        # result column) — a DataFrame column is single-typed, so a
+        # fallback literal outside the target's type family either
+        # runtime-crashes (ANSI casts 'missing' to double under CASE
+        # coercion), dies in analysis (int vs boolean has no common
+        # type), or SILENTLY RE-TYPES the whole column. Loud typed
+        # error for literal fallbacks outside the family; expression
+        # fallbacks must analyze to the target type. The date cascade
+        # yields a TIMESTAMP and no scalar literal is timestamp-typed,
+        # so it takes expression fallbacks only.
+        for fb_key in ("onError", "onNull"):
+            fb = operands.get(fb_key)
+            if fb is None or isinstance(fb, dict) or (
+                    isinstance(fb, str) and fb.startswith("$")):
+                continue  # absent / expression / field path
+            if to == "date":
+                ok = False
+            elif to == "string":
+                ok = isinstance(fb, str)
+            elif to == "bool":
+                ok = isinstance(fb, bool)
+            else:
+                ok = isinstance(fb, (int, float)) and not isinstance(
+                    fb, bool)
+            if not ok:
+                raise DocumentQueryError(
+                    f"$convert {fb_key} {fb!r} does not match target "
+                    f"{to!r}: a DataFrame column is single-typed "
+                    "(Mongo's heterogeneous fallback has no Spark "
+                    "analog) — use a target-typed fallback"
+                )
+        x = sub(operands["input"])
+        if to == "date":
+            s = f"CAST({x} AS STRING)"
+            conv = (f"coalesce(try_to_timestamp({s}), "
+                    f"timestamp_millis(try_cast({s} AS BIGINT)))")
+        elif "onError" in operands:
+            conv = f"try_cast({x} AS {_CONVERT_TYPES[to]})"
+        else:
+            conv = f"CAST({x} AS {_CONVERT_TYPES[to]})"
+        failed = f"(({x} IS NOT NULL) AND ({conv} IS NULL))"
+        if "onError" in operands:
+            conv = (f"CASE WHEN {failed} THEN {sub(operands['onError'])} "
+                    f"ELSE {conv} END")
+        elif to == "date":
+            # the loud no-onError contract for the cascade path, where
+            # try-parses would otherwise swallow the failure silently
+            conv = (f"CASE WHEN {failed} THEN raise_error("
+                    f"'$convert: unparseable date input (use onError)') "
+                    f"ELSE {conv} END")
+        if "onNull" in operands:
+            conv = (f"CASE WHEN ({x} IS NULL) THEN {sub(operands['onNull'])} "
+                    f"ELSE {conv} END")
+        return conv
+    if op == "$dateToParts":
+        # {date} → Mongo's parts document (calendar form)
+        if not (isinstance(operands, dict) and "date" in operands):
+            raise DocumentQueryError(f"$dateToParts needs date: {spec!r}")
+        if operands.get("iso8601"):
+            raise DocumentQueryError(
+                "$dateToParts iso8601 form is not compiled — use "
+                "$isoWeek/$isoDayOfWeek/$isoWeekYear"
+            )
+        d = sub(operands["date"])
+        return (f"struct(year({d}) AS `year`, month({d}) AS `month`, "
+                f"dayofmonth({d}) AS `day`, hour({d}) AS `hour`, "
+                f"minute({d}) AS `minute`, second({d}) AS `second`, "
+                f"{_sql_millisecond(d)} AS `millisecond`)")
+    if op == "$zip":
+        # {"inputs": [a, b], "useLongestLength": bool} — pairs as
+        # 2-element arrays (Mongo's shape). Shortest-length truncation
+        # by default; longest pads with null via zip_with's own
+        # convention. Element types must share a common Spark type.
+        if not (isinstance(operands, dict)
+                and isinstance(operands.get("inputs"), list)
+                and len(operands["inputs"]) == 2):
+            raise DocumentQueryError(
+                f"$zip compiles exactly 2 inputs: {spec!r}"
+            )
+        a, b = (sub(x) for x in operands["inputs"])
+        if not operands.get("useLongestLength", False):
+            n = f"least(size({a}), size({b}))"
+            a, b = f"slice({a}, 1, {n})", f"slice({b}, 1, {n})"
+        x, y = env.fresh(), env.fresh()
+        return f"zip_with({a}, {b}, ({x}, {y}) -> array({x}, {y}))"
     if op == "$range":
         # [start, end, step?] — end-exclusive, literal nonzero step;
         # an empty range is [] (the CASE branch keeps sequence() from
@@ -2810,33 +1701,14 @@ def _expr(spec: dict[str, Any], resolve=None) -> Column:
         step = _int_literal(operands[2], "$range") if len(operands) == 3 else 1
         if step == 0:
             raise DocumentQueryError("$range step must be nonzero")
-        a = _ref(operands[0], resolve).cast("int")
-        b = _ref(operands[1], resolve).cast("int")
+        a = f"CAST({sub(operands[0])} AS INT)"
+        b = f"CAST({sub(operands[1])} AS INT)"
         if step > 0:
-            cond, stop = a < b, b - F.lit(1)
+            cond, stop = f"({a} < {b})", f"({b} - 1)"
         else:
-            cond, stop = a > b, b + F.lit(1)
-        return F.when(cond, F.sequence(a, stop, F.lit(step))).otherwise(
-            F.array().cast("array<int>")
-        )
-    if op == "$zip":
-        # {"inputs": [a, b], "useLongestLength": bool} — two inputs,
-        # pairs as 2-element arrays (Mongo's shape). Shortest-length
-        # truncation by default; longest pads with null via zip_with's
-        # own convention. Element types must share a common Spark type
-        # (heterogeneous zips fail analysis loudly).
-        if not (isinstance(operands, dict)
-                and isinstance(operands.get("inputs"), list)
-                and len(operands["inputs"]) == 2):
-            raise DocumentQueryError(
-                f"$zip compiles exactly 2 inputs: {spec!r}"
-            )
-        a = _ref(operands["inputs"][0], resolve)
-        b = _ref(operands["inputs"][1], resolve)
-        if not operands.get("useLongestLength", False):
-            n = F.least(F.size(a), F.size(b))
-            a, b = F.slice(a, 1, n), F.slice(b, 1, n)
-        return F.zip_with(a, b, lambda x, y: F.array(x, y))
+            cond, stop = f"({a} > {b})", f"({b} + 1)"
+        return (f"CASE WHEN {cond} THEN sequence({a}, {stop}, {step}) "
+                f"ELSE CAST(array() AS ARRAY<INT>) END")
     if op == "$replaceOne":
         # {input, find (literal), replacement} — locate the FIRST
         # occurrence, splice around it; no match returns the input
@@ -2850,70 +1722,14 @@ def _expr(spec: dict[str, Any], resolve=None) -> Column:
                 f"$replaceOne find must be a non-empty literal string: "
                 f"{find!r}"
             )
-        s = _ref(operands["input"], resolve)
-        repl = _ref(operands["replacement"], resolve)
-        pos = F.locate(find, s)
-        spliced = F.concat(
-            F.substring(s, F.lit(1), pos - F.lit(1)),
-            repl,
-            F.substring(s, pos + F.lit(len(find)), F.length(s)),
-        )
-        return F.when(pos == 0, s).otherwise(spliced)
-    if op == "$dateToParts":
-        # {date} → Mongo's parts document (calendar form; iso8601
-        # variant not compiled)
-        if not (isinstance(operands, dict) and "date" in operands):
-            raise DocumentQueryError(f"$dateToParts needs date: {spec!r}")
-        if operands.get("iso8601"):
-            raise DocumentQueryError(
-                "$dateToParts iso8601 form is not compiled — use "
-                "$isoWeek/$isoDayOfWeek/$isoWeekYear"
-            )
-        d = _ref(operands["date"], resolve)
-        return F.struct(
-            F.year(d).alias("year"), F.month(d).alias("month"),
-            F.dayofmonth(d).alias("day"), F.hour(d).alias("hour"),
-            F.minute(d).alias("minute"), F.second(d).alias("second"),
-            _EXPR_OPS["$millisecond"](d).alias("millisecond"),
-        )
-    if op == "$replaceAll":
-        # {"input", "find", "replacement"} — Mongo replaces LITERAL
-        # substrings; F.replace is the non-regex replacement (all three
-        # operands may be expressions).
-        if not (isinstance(operands, dict) and "input" in operands
-                and "find" in operands and "replacement" in operands):
-            raise DocumentQueryError(f"Bad $replaceAll: {spec!r}")
-        return F.replace(
-            _ref(operands["input"], resolve),
-            _ref(operands["find"], resolve),
-            _ref(operands["replacement"], resolve),
-        )
-    if op == "$indexOfCP":
-        # [string, substring, start?, end?] → 0-based index of the
-        # first occurrence, -1 when absent (locate's 0 → -1). The
-        # substring and bounds must be literals: locate() folds the
-        # needle into the codegen'd expression.
-        if not (isinstance(operands, list) and len(operands) in (2, 3, 4)):
-            raise DocumentQueryError(f"$indexOfCP needs 2-4 operands: {spec!r}")
-        needle = operands[1]
-        if not isinstance(needle, str) or needle.startswith("$"):
-            raise DocumentQueryError(
-                f"$indexOfCP substring must be a literal string: {needle!r}"
-            )
-        s = _ref(operands[0], resolve)
-        if len(operands) == 4:
-            end = _int_literal(operands[3], "$indexOfCP")
-            # Mongo's end bound is exclusive and CONTAINING: the whole
-            # match must lie within [start, end) — searching the
-            # end-length prefix reproduces that exactly
-            s = F.substring(s, 1, end)
-        start = (_int_literal(operands[2], "$indexOfCP")
-                 if len(operands) >= 3 else 0)
-        if start < 0:
-            raise DocumentQueryError("$indexOfCP start must be >= 0")
-        return (F.locate(needle, s, start + 1) - F.lit(1)).cast("long")
-    fn = _EXPR_OPS.get(op)
-    if fn is None:
+        s = sub(operands["input"])
+        repl = sub(operands["replacement"])
+        pos = f"locate({_sql_lit(find)}, {s})"
+        spliced = (f"concat(substring({s}, 1, ({pos} - 1)), {repl}, "
+                   f"substring({s}, ({pos} + {len(find)}), length({s})))")
+        return f"CASE WHEN ({pos} = 0) THEN {s} ELSE {spliced} END"
+    # ---- plain operators: every operand is a sub-expression
+    if op not in _ARITY:
         if op == "$function":
             raise DocumentQueryError(
                 "$function executes JavaScript, which this engine does "
@@ -2929,14 +1745,190 @@ def _expr(spec: dict[str, Any], resolve=None) -> Column:
             )
         raise DocumentQueryError(f"Unsupported expression operator: {op}")
     args = operands if isinstance(operands, list) else [operands]
-    try:
-        return fn(*[_ref(a, resolve) for a in args])
-    except TypeError as exc:
-        # a fixed-arity lambda called with the wrong operand count —
-        # surface the dialect's typed error, not a raw TypeError
+    xs = [sub(a) for a in args]
+    n = len(xs)
+    lo, hi = _ARITY[op]
+    if n < lo or (hi is not None and n > hi):
+        want = f"{lo}" if lo == hi else f"at least {lo}"
         raise DocumentQueryError(
-            f"{op}: bad operand count ({len(args)}): {exc}"
-        ) from exc
+            f"{op}: bad operand count ({n}): expects {want}"
+        )
+
+    def fold(sym: str) -> str:
+        out = xs[0]
+        for x in xs[1:]:
+            out = f"({out} {sym} {x})"
+        return out
+
+    if op in ("$eq", "$ne"):
+        eq = f"({xs[0]} <=> {xs[1]})"
+        return eq if op == "$eq" else f"(NOT {eq})"
+    if op in ("$gt", "$gte", "$lt", "$lte"):
+        sym = {"$gt": ">", "$gte": ">=", "$lt": "<", "$lte": "<="}[op]
+        return f"({xs[0]} {sym} {xs[1]})"
+    if op in ("$add", "$subtract", "$multiply", "$divide", "$mod",
+              "$bitAnd", "$bitOr", "$bitXor"):
+        return fold({"$add": "+", "$subtract": "-", "$multiply": "*",
+                     "$divide": "/", "$mod": "%", "$bitAnd": "&",
+                     "$bitOr": "|", "$bitXor": "^"}[op])
+    if op == "$pow":
+        return f"power({xs[0]}, {xs[1]})"
+    if op == "$atan2":
+        return f"atan2({xs[0]}, {xs[1]})"
+    if op == "$log":
+        # [num, base] — ln(x)/ln(b), the identity Mongo's and DuckDB's
+        # arbitrary-base logs use
+        return f"(ln({xs[0]}) / ln({xs[1]}))"
+    if op == "$bitNot":
+        return f"~{xs[0]}"
+    if op in _SQL_FN1:
+        return f"{_SQL_FN1[op]}({xs[0]})"
+    if op in _SQL_CASTS:
+        # $toBool/$toDecimal are Mongo's $convert shorthands; the ANSI
+        # cast is loud on unconvertible input (Mongo errors there too)
+        # — $convert's onError is the recovering form
+        return f"CAST({xs[0]} AS {_SQL_CASTS[op]})"
+    if op in ("$concat", "$concatArrays"):
+        return "concat(" + ", ".join(xs) + ")"
+    if op == "$ifNull":
+        return "coalesce(" + ", ".join(xs) + ")"
+    if op == "$size":
+        return f"CAST(size({xs[0]}) AS BIGINT)"
+    if op == "$binarySize":
+        # byte size of a string (UTF-8) or binary value; null for null
+        return f"CAST(octet_length({xs[0]}) AS BIGINT)"
+    if op == "$substrBytes":
+        # slices the UTF-8 BYTES; a slice that splits a multi-byte
+        # character yields replacement characters where Mongo errors
+        # (documented divergence — the binary→string cast does not
+        # validate)
+        s, start, cnt = xs
+        return (f"CAST(substring(CAST({s} AS BINARY), "
+                f"(CAST({start} AS INT) + 1), CAST({cnt} AS INT)) "
+                f"AS STRING)")
+    if op == "$in":
+        return f"array_contains({xs[1]}, {xs[0]})"
+    if op == "$not":
+        return f"(NOT {_sql_bool(xs[0])})"
+    if op in ("$cmp", "$strcasecmp"):
+        # -1/0/1; a null operand yields null (documented divergence —
+        # Mongo totally orders null below numbers, a per-type order no
+        # single Catalyst expression reproduces)
+        a, b = xs
+        if op == "$cmp":
+            return (f"CAST(CASE WHEN (({a} <=> {b}) AND ({a} IS NOT NULL)) "
+                    f"THEN 0 WHEN ({a} < {b}) THEN -1 "
+                    f"WHEN ({a} > {b}) THEN 1 END AS INT)")
+        return (f"CAST(CASE WHEN (lower({a}) = lower({b})) THEN 0 "
+                f"WHEN (lower({a}) < lower({b})) THEN -1 "
+                f"WHEN (lower({a}) > lower({b})) THEN 1 END AS INT)")
+    if op == "$indexOfArray":
+        return f"CAST((array_position({xs[0]}, {xs[1]}) - 1) AS BIGINT)"
+    if op == "$setEquals":
+        return (f"(array_sort(array_distinct({xs[0]})) = "
+                f"array_sort(array_distinct({xs[1]})))")
+    if op == "$setIsSubset":
+        return f"(size(array_except({xs[0]}, {xs[1]})) = 0)"
+    if op == "$setUnion":
+        return ("array_sort(array_distinct(concat("
+                + ", ".join(xs) + ")))")
+    if op == "$setIntersection":
+        return f"array_sort(array_intersect({xs[0]}, {xs[1]}))"
+    if op == "$setDifference":
+        return f"array_sort(array_except({xs[0]}, {xs[1]}))"
+    if op in ("$anyElementTrue", "$allElementsTrue"):
+        # Mongo TRUTHINESS in the element predicate: null (and 0/false)
+        # elements are FALSY — without the coalesce, Spark's 3VL
+        # exists/forall returns NULL for [1, null]
+        hof = "exists" if op == "$anyElementTrue" else "forall"
+        x = env.fresh()
+        return f"{hof}({xs[0]}, {x} -> coalesce(CAST({x} AS BOOLEAN), FALSE))"
+    if op in _SQL_DATE_FNS:
+        return f"{_SQL_DATE_FNS[op]}({xs[0]})"
+    if op == "$isoDayOfWeek":
+        # ISO weekday is Mon=1..Sun=7 (weekday() is 0-based Monday)
+        return f"(weekday({xs[0]}) + 1)"
+    if op == "$isoWeekYear":
+        # the calendar year of the ISO week's THURSDAY
+        a = xs[0]
+        return (f"CAST(year(date_add(to_date({a}), "
+                f"(4 - (weekday({a}) + 1)))) AS BIGINT)")
+    if op == "$week":
+        # Mongo's $week: Sunday-start, week 1 begins at the first
+        # Sunday, earlier days are week 0
+        a = xs[0]
+        return (f"CAST(floor(((((dayofyear({a}) - 1) - "
+                f"(dayofweek({a}) - 1)) + 7) / 7)) AS INT)")
+    if op == "$millisecond":
+        return _sql_millisecond(xs[0])
+    # ---- object/map ops: the doc plane's dynamic-key objects are MAP
+    # columns; struct inputs fail at analysis time with Spark's type
+    # error — dynamic keys belong in maps
+    if op == "$objectToArray":
+        # Mongo's [{k, v}, …] shape in the map's entry order
+        e = env.fresh()
+        return (f"transform(map_entries({xs[0]}), {e} -> "
+                f"struct({e}['key'] AS `k`, {e}['value'] AS `v`))")
+    if op == "$arrayToObject":
+        # duplicate keys follow Mongo's documented LAST-value-wins: an
+        # entry survives only when no later entry redefines its key —
+        # otherwise map_from_entries' duplicate-key policy would throw
+        a = xs[0]
+        e, e2, i, later = env.fresh(), env.fresh(), env.fresh(), env.fresh()
+        return (
+            f"map_from_entries(filter(transform({a}, {e} -> "
+            f"struct({e}['k'] AS `k`, {e}['v'] AS `v`)), "
+            f"({e2}, {i}) -> (NOT exists(slice({a}, ({i} + 2), "
+            f"greatest(size({a}), 1)), "
+            f"{later} -> ({later}['k'] = {e2}['k'])))))"
+        )
+    if op == "$mergeObjects":
+        # later-wins variadic merge over MAP columns: keep the left
+        # map's entries whose key the right map does not define, then
+        # append the right map's (no dependence on map_concat's
+        # duplicate-key policy); a null operand propagates null (Mongo
+        # skips nulls — $ifNull an empty map if that matters)
+        out = xs[0]
+        for b in xs[1:]:
+            e = env.fresh()
+            out = (f"map_from_entries(concat(filter(map_entries({out}), "
+                   f"{e} -> (NOT array_contains(map_keys({b}), "
+                   f"{e}['key']))), map_entries({b})))")
+        return out
+    # $isNumber/$type read the COLUMN type via typeof() (constant per
+    # expression — Catalyst folds it) plus a per-row null gate: in a
+    # typed columnar engine a value's BSON type is its column type, and
+    # null is the only per-row variation. Mongo's 'missing' is not
+    # representable (columns always exist) — documented.
+    x = xs[0]
+    if op == "$isNumber":
+        return (f"(({x} IS NOT NULL) AND (typeof({x}) RLIKE "
+                f"'^(tinyint|smallint|int|bigint|float|double)$"
+                f"|^decimal\\\\('))")
+    # $type, the last _ARITY operator: Spark typeof() names → BSON names
+    t = f"typeof({x})"
+    bson = (
+        f"CASE WHEN ({t} IN ('tinyint', 'smallint', 'int')) "
+        f"THEN 'int' "
+        f"WHEN ({t} = 'bigint') THEN 'long' "
+        f"WHEN ({t} IN ('float', 'double')) THEN 'double' "
+        f"WHEN startswith({t}, 'decimal') THEN 'decimal' "
+        f"WHEN ({t} = 'string') THEN 'string' "
+        f"WHEN ({t} = 'boolean') THEN 'bool' "
+        f"WHEN ({t} IN ('date', 'timestamp', 'timestamp_ntz')) "
+        f"THEN 'date' "
+        f"WHEN startswith({t}, 'array') THEN 'array' "
+        f"WHEN (startswith({t}, 'struct') OR startswith({t}, 'map')) "
+        f"THEN 'object' "
+        f"WHEN ({t} = 'binary') THEN 'binData' "
+        f"ELSE {t} END"
+    )
+    return f"CASE WHEN ({x} IS NULL) THEN 'null' ELSE {bson} END"
+
+
+def _sql_millisecond(d: str) -> str:
+    return (f"CAST(floor(((unix_micros(CAST({d} AS TIMESTAMP)) "
+            f"% 1000000) / 1000)) AS INT)")
 
 
 def _acc_selection_ops(
@@ -3398,7 +2390,12 @@ def _first_last_agg(
         merged = F.aggregate(
             F.slice(arr, 2, F.greatest(F.size(arr) - F.lit(1), F.lit(0))),
             F.get(arr, 0),
-            _merge_two_maps,
+            # later-wins merge (the $mergeObjects expression's rule)
+            lambda a, b: F.map_from_entries(F.concat(
+                F.filter(F.map_entries(a), lambda e: ~F.array_contains(
+                    F.map_keys(b), e["key"])),
+                F.map_entries(b),
+            )),
         )
         return merged.alias(alias)
     if n is None:

@@ -4,7 +4,9 @@ reference's find/aggregate/flatten/infer semantics
 
 from __future__ import annotations
 
+import datetime as dt
 import json
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -4180,14 +4182,14 @@ def test_binary_size(spark):
     assert rows[2]["bs"] is None and rows[2]["bb"] is None
 
 
-# ------------------------------------------------- r14: SQL fast path
-# The expression compiler's SQL-text emitter (documents._sql_of) must
-# produce the EXACT Catalyst tree the Column path builds — one parse
-# replaces a py4j roundtrip per node, nothing else may change. The
-# battery below covers every op family the emitter supports; for each
-# spec it asserts (a) the emitter fired (no silent fallback
-# regression), (b) canonicalized optimized plans are identical, and
-# (c) collected rows are identical.
+# ------------------------------------------- expression compiler battery
+# Mongo expression documents compile to one SQL string (documents._ref).
+# The pinned reference (tests/expr_compiler_reference.json, inputs in
+# tests/expr_battery.py) holds the canonicalized optimized plan and the
+# rows of every spec below, and of the correlated-$lookup shapes, as the
+# per-node Column compiler the SQL compiler replaced built them; the
+# compiler must reproduce both exactly. The reference is data from that
+# earlier compiler and is never regenerated from the current one.
 _FAST_PATH_SPECS = [
     # comparisons / boolean / cond
     {"$eq": ["$n_chars", 100]},
@@ -4366,59 +4368,165 @@ _FAST_PATH_SPECS = [
 ]
 
 
-def test_sql_fast_path_tree_equivalence(spark, sf_check):
-    import dbt_nlp_sqlizer_team04_spark.operators.documents as D
+def test_sql_fast_path_tree_equivalence(spark):
+    from dbt_nlp_sqlizer_team04_spark.operators.documents import (
+        _ref,
+        lookup_correlated,
+    )
+    from tests import expr_battery as B
 
-    df = load_table(spark, sf_check, "documents").withColumn(
-        "ts", F.to_timestamp(F.lit("2024-03-05 10:11:12"))
-    ).limit(50)
-    df = df.localCheckpoint()  # freeze lineage so plans compare cleanly
+    ref = B.load_reference()
+    pinned = {B.spec_key(e["spec"]): e for e in ref["battery"]}
+    df = B.battery_frame(spark)
     failures = []
     for spec in _FAST_PATH_SPECS:
-        sql = D._sql_of(spec, None)
-        if sql is None:
-            failures.append((spec, "emitter did not fire"))
-            continue
-        old = D._SQL_FAST_PATH
-        try:
-            D._SQL_FAST_PATH = False
-            col_slow = D._ref(spec)
-            D._SQL_FAST_PATH = True
-            col_fast = D._ref(spec)
-        finally:
-            D._SQL_FAST_PATH = old
-        slow_df = df.select(col_slow.alias("out"))
-        fast_df = df.select(col_fast.alias("out"))
-        p_slow = (slow_df._jdf.queryExecution().optimizedPlan()
-                  .canonicalized().toString())
-        p_fast = (fast_df._jdf.queryExecution().optimizedPlan()
-                  .canonicalized().toString())
-        if p_slow != p_fast:
+        want = pinned.get(B.spec_key(spec))
+        out = df.select(_ref(spec).alias("out"))
+        if want is None:
+            failures.append((spec, "no pinned reference"))
+        elif B.canonical_plan(out) != want["plan"]:
             failures.append((spec, "plan mismatch"))
-            continue
-        if slow_df.collect() != fast_df.collect():
+        elif B.rows_text(out) != want["rows"]:
             failures.append((spec, "row mismatch"))
+    # correlated $lookup: $expr conditions, let bindings and grouped
+    # accumulators compile through the side-binding resolver
+    cust, orders = B.lookup_frames(spark)
+    assert [e["label"] for e in ref["lookup"]] == list(B.LOOKUP_SPECS)
+    for want in ref["lookup"]:
+        spec = B.LOOKUP_SPECS[want["label"]]
+        assert B.spec_key(spec) == B.spec_key(want["spec"])
+        out = lookup_correlated(cust, orders, spec)
+        if B.canonical_plan(out) != want["plan"]:
+            failures.append((want["label"], "plan mismatch"))
+        elif B.rows_text(out) != want["rows"]:
+            failures.append((want["label"], "row mismatch"))
     assert not failures, failures
 
 
 def test_sql_fast_path_falls_back_not_breaks(spark):
-    """Typed-error parity: specs the emitter refuses must still raise
-    the Column path's DocumentQueryError, and unsupported-but-valid
-    shapes must still compile (fast path simply not firing)."""
+    """Typed-error contract: malformed specs raise DocumentQueryError
+    while the SQL text is rendered, never a raw Spark error later."""
     import dbt_nlp_sqlizer_team04_spark.operators.documents as D
+    from tests import expr_battery as B
 
-    # malformed specs → typed error (the emitter returns None first)
     for bad in [
         {"$cond": [1, 2]},                      # wrong arity
         {"$dateTrunc": {"date": "$ts", "unit": "fortnight"}},
         {"$split": ["$text", "$lang"]},         # field-path delimiter
         {"$rand": {}},
         {"$convert": {"input": "$x", "to": "date", "onError": "oops"}},
+        {"$eq": ["$a", "$b", "$c"]},            # operand count
+        {"$add": []},
     ]:
-        assert D._sql_of(bad, None) is None
         with pytest.raises(DocumentQueryError):
             D._ref(bad)
-    # unbound $$var must stay a typed error, not an emitted SQL ref
-    assert D._sql_of("$$loose", None) is None
-    with pytest.raises(DocumentQueryError):
+    # unbound $$var stays a typed error, not an emitted SQL ref
+    with pytest.raises(DocumentQueryError, match="Unbound"):
         D._ref("$$loose")
+    # a field under the compiler's lambda-parameter prefix is refused
+    # (Spark matches names case-insensitively), never silently
+    # shadowed by a lambda parameter
+    for bad in ["$__m_0", "$__M_3.k",
+                {"$map": {"input": "$xs", "in": {"$add": ["$$this",
+                                                          "$__m_0"]}}}]:
+        with pytest.raises(DocumentQueryError, match="reserved"):
+            D._ref(bad)
+    # correlated $lookup: an undefined $$var is refused by the resolver
+    cust, orders = B.lookup_frames(spark)
+    with pytest.raises(DocumentQueryError, match="not defined"):
+        D.lookup_correlated(cust, orders, {
+            "from": "orders", "let": {"cid": "$c_custkey"},
+            "pipeline": [{"$match": {"$expr": {"$eq": [
+                "$o_custkey", "$$nope"]}}}],
+            "as": "hits"})
+    with pytest.raises(DocumentQueryError, match="reserved"):
+        D.lookup_correlated(cust, orders, {
+            "from": "orders", "let": {"cid": "$__m_1"},
+            "pipeline": [{"$match": {"$expr": {"$eq": [
+                "$o_custkey", "$$cid"]}}}],
+            "as": "hits"})
+
+
+def test_expr_lambda_names_are_hygienic(spark):
+    """Every op that introduces a lambda ($map, $filter, $reduce, $let,
+    $arrayToObject, $objectToArray, $mergeObjects, $regexFindAll, $zip,
+    $anyElementTrue, $allElementsTrue), with the user's '$$name'
+    spliced into its operands, for each name the compiler's templates
+    once bound themselves (this, value, e, i, m, acc, later, x, y) —
+    bound by a $map 'as' and by $let 'vars'. Each must return the
+    pinned reference rows: a template parameter that captured the
+    user's variable failed analysis, failed at run time or silently
+    read the wrong value."""
+    from dbt_nlp_sqlizer_team04_spark.operators.documents import _ref
+    from tests import expr_battery as B
+
+    pinned = {e["label"]: e for e in B.load_reference()["hygiene"]}
+    specs = B.hygiene_specs()
+    assert set(specs) == set(pinned)
+    frame = B.hygiene_frame(spark)
+    failures = []
+    for label, spec in specs.items():
+        assert B.spec_key(spec) == B.spec_key(pinned[label]["spec"])
+        try:
+            got = B.rows_text(frame.select(_ref(spec).alias("out")))
+        except Exception as exc:  # noqa: BLE001 — report every label
+            failures.append((label, type(exc).__name__))
+            continue
+        if got != pinned[label]["rows"]:
+            failures.append((label, got))
+    assert not failures, failures
+    # the two reported captures, spelled out
+    assert pinned["repro/arrayToObject"]["rows"] == [
+        "Row(out=[{1: '1'}, {2: '1'}])"]
+    assert pinned["repro/regexFindAll"]["rows"] == [
+        "Row(out=[[Row(match='a', idx=0, captures=[]), "
+        "Row(match='b', idx=1, captures=[]), "
+        "Row(match='x', idx=2, captures=[])], "
+        "[Row(match='c', idx=0, captures=[]), "
+        "Row(match='d', idx=1, captures=[]), "
+        "Row(match='x', idx=2, captures=[])]])"]
+
+
+def test_expr_string_literals_are_not_substituted(spark):
+    """The SQL parser substitutes ${var} references in its input text;
+    user strings must come back verbatim, and identifiers that would
+    carry one are refused."""
+    from dbt_nlp_sqlizer_team04_spark.operators.documents import _ref
+
+    txt = "x${spark.app.name}|${env:HOME}|a\\{b}"
+    row = spark.range(1).select(
+        _ref({"$concat": [txt, {"$literal": txt}]}).alias("s"),
+        _ref({"$regexMatch": {"input": txt, "regex": "^x\\$\\{spark"}})
+        .alias("m"),
+    ).collect()[0]
+    assert row["s"] == txt + txt and row["m"] is True
+    with pytest.raises(DocumentQueryError, match="may not contain"):
+        _ref("$a.${env:HOME}")
+    with pytest.raises(DocumentQueryError, match="may not contain"):
+        _ref({"k": 1, "a${env:HOME}": 2})
+
+
+@pytest.mark.parametrize("value", [
+    dt.date(2024, 1, 2),
+    dt.datetime(2024, 1, 2, 3, 4, 5),
+    b"\x00\x01",
+    float("nan"),
+    float("inf"),
+    float("-inf"),
+    "tab\there",
+    "line\nbreak",
+    2**63,
+    -(2**63) - 1,
+    Decimal("1.5"),
+], ids=["date", "datetime", "bytes", "nan", "inf", "-inf", "tab",
+        "newline", "int64+1", "int64-1", "decimal"])
+def test_expr_literal_kinds_without_rendering_are_typed_errors(value):
+    """Literal kinds the SQL compiler has no exact F.lit-typed rendering
+    for are refused at compile time, in operand and $literal position."""
+    from dbt_nlp_sqlizer_team04_spark.operators.documents import _ref
+
+    for spec in ({"$eq": ["$x", value]}, {"$literal": [value]},
+                 {"$ifNull": ["$x", {"k": value, "n": 1}]}):
+        with pytest.raises(DocumentQueryError,
+                           match="no expression-dialect rendering"):
+            _ref(spec)

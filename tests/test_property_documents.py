@@ -1,6 +1,7 @@
 """Property-based differential test of the Mongo aggregation expression
-dialect (operators/documents._expr): random expression trees must
-evaluate identically under the compiled Catalyst Column and a direct
+dialect (operators/documents._ref, which compiles an expression document
+to one SQL expression): random expression trees must evaluate
+identically under the compiled Catalyst expression and a direct
 Python reference interpreter of the Mongo semantics. The unit tests pin
 hand-picked shapes; this sweeps the composition space ($cond over
 comparisons over arithmetic over string ops, arbitrary nesting)."""
