@@ -49,17 +49,17 @@ def select_relevant_collections(
     """A10 — fuzzy collection/field pruning with ``_id`` kept
     (nl2mongo.py:37-59 parity)."""
     scored = []
+    field_scores: dict[str, dict[str, float]] = {}
     for coll, fields in schema.items():
-        s = max(
-            partial_ratio(coll, question),
-            max((partial_ratio(f, question) for f in fields), default=0.0),
-        )
+        field_scores[coll] = scores = {f: partial_ratio(f, question) for f in fields}
+        s = max(partial_ratio(coll, question), max(scores.values(), default=0.0))
         scored.append((coll, s))
     scored.sort(key=lambda x: (-x[1], x[0]))
     out: dict[str, list[str]] = {}
     for coll, _ in scored[:k_collections]:
         fields = schema[coll]
-        best = sorted(fields, key=lambda f: (-partial_ratio(f, question), f))[:k_fields]
+        scores = field_scores[coll]
+        best = sorted(fields, key=lambda f: (-scores[f], f))[:k_fields]
         if "_id" in fields and "_id" not in best:
             best.insert(0, "_id")
         out[coll] = best

@@ -18,6 +18,7 @@ oracle running the same SQL.
 from __future__ import annotations
 
 import re
+import threading
 from dataclasses import dataclass, field
 from functools import partial
 
@@ -336,6 +337,16 @@ class NL2SQLEngine:
             from ..models.inference import SemanticLinker
 
             self._linker = SemanticLinker(model)
+        # per thread: the server's request threads share one engine
+        self._last = threading.local()
+
+    @property
+    def last_method(self) -> str | None:
+        """Which ladder tier (llm / template / template_join / ...) won
+        this thread's latest :meth:`query_df`; None before one succeeds.
+        The parity harness records it per question so the LLM→template
+        fallback path is measurable."""
+        return getattr(self._last, "method", None)
 
     @classmethod
     def from_sf_dir(cls, spark: SparkSession, sf_dir: str, tables=None, **kw):
@@ -2171,7 +2182,7 @@ class NL2SQLEngine:
         linked = linked or self.link(question)
         relevant = linked[0]
         last_err: Exception | None = None
-        self.last_method: str | None = None
+        self._last.method = None
         for cand in self.generate(question, linked=linked):
             try:
                 final = validate(
@@ -2183,10 +2194,7 @@ class NL2SQLEngine:
                 )
                 df = self.spark.sql(final)
                 df.schema  # force analysis so bad candidates fall through
-                # which ladder tier won (llm / template / template_join):
-                # the parity harness records this per question so the
-                # LLM→template fallback path is measurable
-                self.last_method = cand.method
+                self._last.method = cand.method
                 return df, final
             except Exception as e:  # noqa: BLE001
                 last_err = e

@@ -106,6 +106,12 @@ def get_spark(
 _EVENT_CONFS_SENTINEL = "_dbt_nlp_event_confs_pinned"
 
 
+# Free tmpfs space below which scratch goes to disk instead. A fixed,
+# conservative floor rather than a per-run estimate: a small or busy
+# tmpfs (e.g. a container's 64 MB default) never gets the staging.
+_SHM_MIN_FREE_BYTES = 4 << 30
+
+
 def scratch_dir_base() -> str:
     """Fast local scratch for per-run streaming work dirs (file-drop
     stages, checkpoints, staged snapshots). These are EPHEMERAL
@@ -117,13 +123,20 @@ def scratch_dir_base() -> str:
     snapshots passes explicit paths to the operators (run_cdc_stream
     and the export sinks take them as parameters); this helper only
     picks where the REGISTRY entries put their throwaway work.
-    Override via SPARK_GRAFT_SCRATCH."""
+    tmpfs is capped (typically half of RAM), so it is chosen only with
+    at least ``_SHM_MIN_FREE_BYTES`` free; otherwise the disk-backed
+    ``tempfile.gettempdir()``. Override via SPARK_GRAFT_SCRATCH."""
+    import shutil
     import tempfile
 
     env = os.environ.get("SPARK_GRAFT_SCRATCH")
     if env:
         return env
-    if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
+    if (
+        os.path.isdir("/dev/shm")
+        and os.access("/dev/shm", os.W_OK)
+        and shutil.disk_usage("/dev/shm").free >= _SHM_MIN_FREE_BYTES
+    ):
         return "/dev/shm"
     return tempfile.gettempdir()
 

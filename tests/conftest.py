@@ -40,3 +40,25 @@ def sf_smoke() -> str:
 @pytest.fixture(scope="session")
 def sf_check() -> str:
     return SF_CHECK
+
+
+@pytest.fixture()
+def matcher_count(monkeypatch):
+    """Count ``difflib.SequenceMatcher`` constructions for the rest of the
+    test; returns a callable reading the count. The fuzzy scorer's memo
+    starts empty."""
+    import difflib
+
+    from dbt_nlp_sqlizer_team04_spark.plans import linking
+
+    made = [0]
+
+    class Counting(difflib.SequenceMatcher):
+        def __init__(self, *args, **kwargs):
+            made[0] += 1
+            super().__init__(*args, **kwargs)
+
+    monkeypatch.setattr(difflib, "SequenceMatcher", Counting)
+    monkeypatch.setattr(linking, "SequenceMatcher", Counting)
+    linking.partial_ratio.cache_clear()
+    return lambda: made[0]

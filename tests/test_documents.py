@@ -180,6 +180,25 @@ def test_nl2doc_template_grouped_count(store):
     assert sum(rows.values()) == 10000 and len(rows) == 5
 
 
+def test_nl2doc_repeated_question_does_no_fuzzy_work(store, matcher_count):
+    """Collection linking and field scoring are memoized: a question the
+    engine has seen constructs no SequenceMatcher the second time."""
+    from dbt_nlp_sqlizer_team04_spark.plans.nl2doc import NL2DocEngine
+
+    eng = NL2DocEngine(store)
+    for q in (
+        "how many events per event_type",
+        "count of documents with text containing spark per lang",
+        "documents with n_chars over 200",
+    ):
+        before = matcher_count()
+        first = eng.template_query(q)
+        assert matcher_count() > before, q
+        before = matcher_count()
+        assert eng.template_query(q) == first
+        assert matcher_count() == before, q
+
+
 def test_nl2doc_template_global_count(store):
     from dbt_nlp_sqlizer_team04_spark.plans.nl2doc import NL2DocEngine
 

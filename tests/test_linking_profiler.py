@@ -2,9 +2,16 @@
 
 from __future__ import annotations
 
+import random
+import sys
+from concurrent.futures import ThreadPoolExecutor
+from difflib import SequenceMatcher
+
 from dbt_nlp_sqlizer_team04_spark.catalog.metadata import SchemaMetadata, generate_schema_id
 from dbt_nlp_sqlizer_team04_spark.operators.profiler import crawl_schema
 from dbt_nlp_sqlizer_team04_spark.plans.linking import (
+    MEMO_MAX_CHARS,
+    MEMO_MAX_ENTRIES,
     keyword_match,
     partial_ratio,
     select_relevant,
@@ -30,6 +37,230 @@ def test_select_relevant_prunes():
     assert "orders" in rel
     assert len(rel) == 2
     assert len(rel["orders"]) <= 9  # 8 + id fallback
+
+
+# --------------------------------------------- partial_ratio memo
+def _reference_partial_ratio(a: str, b: str) -> float:
+    """Frozen copy of the uncached scorer, before the memo: the memoized
+    ``partial_ratio`` must equal it on every input."""
+    a, b = a.lower(), b.lower()
+    if not a or not b:
+        return 0.0
+    shorter, longer = (a, b) if len(a) <= len(b) else (b, a)
+    sm = SequenceMatcher(None, shorter, longer, autojunk=False)
+    best = 0.0
+    for block in sm.get_matching_blocks():
+        start = max(block.b - block.a, 0)
+        window = longer[start : start + len(shorter)]
+        r = SequenceMatcher(None, shorter, window, autojunk=False).ratio()
+        if r > best:
+            best = r
+            if best == 1.0:
+                break
+    return best * 100.0
+
+
+def _reference_select_relevant(schema, question, k_tables=4, k_columns=8):
+    """Frozen copy of ``select_relevant`` before it kept the first
+    pass's column scores (each column was scored twice)."""
+    table_scores = []
+    for t, cols in schema.items():
+        best_name, score = t, _reference_partial_ratio(t, question)
+        for c in cols:
+            s = _reference_partial_ratio(c, question)
+            if s > score or (s == score and len(c) > len(best_name)):
+                best_name, score = c, s
+        table_scores.append((t, score, len(best_name)))
+    table_scores.sort(key=lambda x: (-x[1], -x[2], x[0]))
+    out = {}
+    for t in [t for t, _, _ in table_scores[:k_tables]]:
+        cols = schema[t]
+        best = sorted(cols, key=lambda c: (-_reference_partial_ratio(c, question), c))
+        best = best[:k_columns]
+        for fallback in ("id", f"{t}_id"):
+            if fallback in cols and fallback not in best:
+                best.append(fallback)
+        out[t] = best
+    return out
+
+
+TPCH = {
+    "region": ["r_regionkey", "r_name", "r_comment"],
+    "nation": ["n_nationkey", "n_name", "n_regionkey", "n_comment"],
+    "customer": ["c_custkey", "c_name", "c_address", "c_nationkey", "c_phone",
+                 "c_acctbal", "c_mktsegment", "c_comment"],
+    "orders": ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
+               "o_orderdate", "o_orderpriority", "o_clerk", "o_shippriority",
+               "o_comment"],
+    "lineitem": ["l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
+                 "l_quantity", "l_extendedprice", "l_discount", "l_tax",
+                 "l_returnflag", "l_linestatus", "l_shipdate", "l_commitdate",
+                 "l_receiptdate", "l_shipinstruct", "l_shipmode", "l_comment"],
+    "part": ["p_partkey", "p_name", "p_mfgr", "p_brand", "p_type", "p_size",
+             "p_container", "p_retailprice", "p_comment"],
+    "supplier": ["s_suppkey", "s_name", "s_address", "s_nationkey", "s_phone",
+                 "s_acctbal", "s_comment"],
+    "events": ["event_id", "user_id", "event_type", "ts", "value"],
+    "documents": ["_id", "doc_id", "text", "source", "lang", "n_chars"],
+    "id_table": ["id", "id_table_id", "name"],
+}
+
+QUESTIONS = [
+    "count of orders per orderpriority",
+    "average acctbal per mktsegment in customer",
+    "top 5 orders by totalprice",
+    "how many lineitem rows are there",
+    "count of customers per region name",
+    "count of orders per month",
+    "sum of totalprice per orderstatus in orders",
+    "unique mktsegment values from customer",
+    "count of orders with orderstatus F per orderpriority",
+    "average totalprice of urgent orders",
+    "count of customers per nation name",
+    "count of orders with totalprice over 400000 per orderpriority",
+    "number of BUILDING segment customers per nation name",
+    "top 3 mktsegments by average acctbal",
+    "customers with no orders",
+    "share of lineitem quantity per shipmode",
+    "how many events per event_type",
+    "count of documents with text containing spark per lang",
+]
+
+ODD = [
+    "", "a", "A", "id", "ID", "Straße", "STRASSE", "İstanbul", "ǅemal",
+    "ÉCOLE école", "naïve café", "数据 查询 订单", "emoji 🙂 orders 🙂",
+    "ΣΊΣΥΦΟΣ", "o_ORDERkey", "   ", "order_", "_order",
+]
+
+
+def _exactness_pairs() -> list[tuple[str, str]]:
+    rng = random.Random(7)
+
+    def mixed(s: str) -> str:
+        return "".join(ch.upper() if rng.random() < 0.3 else ch for ch in s)
+
+    idents = sorted({x for t, cols in TPCH.items() for x in (t, *cols)})
+    words = sorted({w for q in QUESTIONS for w in q.split()})
+    texts = QUESTIONS + words + ODD
+    pairs = []
+    for ident in idents + ODD:
+        for text in texts:
+            pairs.append((ident, text))
+            pairs.append((mixed(text), mixed(ident)))
+    # equal-length pairs, in both orders
+    by_len: dict[int, list[str]] = {}
+    for s in idents + words:
+        by_len.setdefault(len(s), []).append(s)
+    for group in by_len.values():
+        for a in group[:12]:
+            for b in group[:12]:
+                pairs.append((a, b))
+    # above the memo's length bypass
+    long_q = " and ".join(QUESTIONS)
+    assert len(long_q) > MEMO_MAX_CHARS
+    for ident in idents:
+        pairs.append((ident, long_q))
+        pairs.append((long_q[:MEMO_MAX_CHARS - len(ident)], ident))
+        pairs.append((long_q[:MEMO_MAX_CHARS - len(ident) + 1], ident))
+    return pairs
+
+
+def test_partial_ratio_memo_matches_frozen_reference():
+    pairs = _exactness_pairs()
+    assert len(pairs) >= 10_000
+    partial_ratio.cache_clear()
+    want = [_reference_partial_ratio(a, b) for a, b in pairs]
+    # twice: the first pass fills the memo, the second answers from it
+    assert [partial_ratio(a, b) for a, b in pairs] == want
+    assert [partial_ratio(a, b) for a, b in pairs] == want
+    assert partial_ratio.cache_info().hits > 0
+
+
+def test_partial_ratio_memo_is_bounded():
+    partial_ratio.cache_clear()
+    n = MEMO_MAX_ENTRIES + 500
+    for i in range(n):
+        partial_ratio(f"c{i}", "orders")
+    info = partial_ratio.cache_info()
+    assert info.maxsize == MEMO_MAX_ENTRIES
+    assert info.misses == n
+    assert info.currsize == MEMO_MAX_ENTRIES
+
+
+def test_partial_ratio_long_pair_bypasses_memo():
+    partial_ratio.cache_clear()
+    question = "orders " * 40
+    assert len(question) + len("o_orderkey") > MEMO_MAX_CHARS
+    assert partial_ratio("o_orderkey", question) == _reference_partial_ratio(
+        "o_orderkey", question
+    )
+    info = partial_ratio.cache_info()
+    assert (info.currsize, info.hits, info.misses) == (0, 0, 0)
+    # the bound is on the lower-cased lengths, and it is inclusive
+    at_bound = "x" * (MEMO_MAX_CHARS - len("ab"))
+    partial_ratio("AB", at_bound.upper())
+    assert partial_ratio.cache_info().currsize == 1
+
+
+def test_partial_ratio_memo_concurrent_matches_serial():
+    pairs = _exactness_pairs()[:4000]
+    partial_ratio.cache_clear()
+    serial = [partial_ratio(a, b) for a, b in pairs]
+    partial_ratio.cache_clear()
+    chunks = [pairs[i::8] for i in range(8)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # switch threads often: races show sooner
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            scored = pool.map(
+                lambda ps: [partial_ratio(a, b) for a, b in ps], chunks, timeout=300
+            )
+            got = list(scored)
+    finally:
+        sys.setswitchinterval(interval)
+    assert got == [serial[i::8] for i in range(8)]
+
+
+def test_select_relevant_matches_frozen_reference():
+    for q in QUESTIONS + ["orders " * 40, ""]:
+        for k in (1, 2, 4):
+            assert select_relevant(TPCH, q, k_tables=k) == _reference_select_relevant(
+                TPCH, q, k_tables=k
+            )
+
+
+def _reference_select_relevant_collections(schema, question, k_collections=4, k_fields=8):
+    """Frozen copy of ``nl2doc.select_relevant_collections`` before it
+    kept the first pass's field scores."""
+    scored = []
+    for coll, fields in schema.items():
+        s = max(
+            _reference_partial_ratio(coll, question),
+            max((_reference_partial_ratio(f, question) for f in fields), default=0.0),
+        )
+        scored.append((coll, s))
+    scored.sort(key=lambda x: (-x[1], x[0]))
+    out = {}
+    for coll, _ in scored[:k_collections]:
+        fields = schema[coll]
+        best = sorted(fields, key=lambda f: (-_reference_partial_ratio(f, question), f))
+        best = best[:k_fields]
+        if "_id" in fields and "_id" not in best:
+            best.insert(0, "_id")
+        out[coll] = best
+    return out
+
+
+def test_select_relevant_collections_matches_frozen_reference():
+    from dbt_nlp_sqlizer_team04_spark.plans.nl2doc import select_relevant_collections
+
+    schema = {**TPCH, "empty": []}
+    for q in QUESTIONS + ["documents " * 30, ""]:
+        for k in (1, 2, 4):
+            got = select_relevant_collections(schema, q, k_collections=k, k_fields=3)
+            assert got == _reference_select_relevant_collections(
+                schema, q, k_collections=k, k_fields=3
+            )
 
 
 def test_keyword_match():

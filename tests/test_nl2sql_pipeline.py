@@ -762,3 +762,53 @@ def test_equidepth_template(spark, sf_smoke):
 
     _df, sql4 = eng.query_df("quartile distribution of acctbal in customer")
     assert "NTILE(4)" in sql4
+
+
+def test_repeated_generate_does_no_fuzzy_work(engine, matcher_count):
+    """Fuzzy scoring is memoized: once a question has been generated,
+    generating it again constructs no SequenceMatcher at all."""
+    for q in EVAL_QUESTIONS:
+        before = matcher_count()
+        first = [c.sql for c in engine.generate(q)]
+        assert matcher_count() > before, q  # the counter sees a cold question
+        before = matcher_count()
+        assert [c.sql for c in engine.generate(q)] == first
+        assert matcher_count() == before, q
+
+
+def test_last_method_is_per_thread(engine):
+    """``last_method`` reports the tier that won the calling thread's
+    own ``query_df``: 8 threads all finish their ``query_df`` before any
+    reads it back, and each still reads the serial run's tier."""
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    questions = [
+        "count of orders per orderpriority",
+        "unique mktsegment values from customer",
+        "show me all customers",
+        "top 5 orders by totalprice",
+        "how many lineitem rows are there",
+        "count of orders per month",
+        "top 3 mktsegments by average acctbal",
+        "sum of totalprice per orderstatus in orders",
+    ]
+    serial = {}
+    for q in questions:
+        engine.query_df(q)
+        serial[q] = engine.last_method
+    assert len(set(serial.values())) >= 6  # distinct tiers, or the test shows nothing
+
+    # each pool worker runs one request per round; all 8 meet here
+    # between their query_df and their read of last_method
+    barrier = threading.Barrier(8, timeout=300)
+
+    def winner(q):
+        engine.query_df(q)
+        barrier.wait()
+        return engine.last_method
+
+    work = questions * 3
+    with ThreadPoolExecutor(8) as pool:
+        got = list(pool.map(winner, work, timeout=600))
+    assert got == [serial[q] for q in work]

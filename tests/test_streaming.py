@@ -515,3 +515,37 @@ def test_rocksdb_state_store_parity(spark, sf_smoke):
         load_table(spark, sf_smoke, "events"), streaming=False
     ).collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
+def test_scratch_dir_base_checks_shm_free_space(monkeypatch):
+    """ADVICE(low): tmpfs is chosen for scratch only with at least the
+    fixed free-space floor; a nearly full /dev/shm falls back to the
+    disk-backed temp dir."""
+    import os
+    import shutil
+    import tempfile
+    from collections import namedtuple
+
+    from dbt_nlp_sqlizer_team04_spark import session
+
+    monkeypatch.delenv("SPARK_GRAFT_SCRATCH", raising=False)
+    usage = namedtuple("usage", "total used free")
+    seen = []
+
+    def fake_disk_usage(free):
+        def disk_usage(path):
+            seen.append(path)
+            return usage(free, 0, free)
+
+        return disk_usage
+
+    floor = session._SHM_MIN_FREE_BYTES
+    monkeypatch.setattr(shutil, "disk_usage", fake_disk_usage(floor - 1))
+    assert session.scratch_dir_base() == tempfile.gettempdir()
+    shm_usable = os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK)
+    assert seen == (["/dev/shm"] if shm_usable else [])
+    monkeypatch.setattr(shutil, "disk_usage", fake_disk_usage(floor))
+    want = "/dev/shm" if shm_usable else tempfile.gettempdir()
+    assert session.scratch_dir_base() == want
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH", "/elsewhere")
+    assert session.scratch_dir_base() == "/elsewhere"
