@@ -15,9 +15,11 @@ Result cache. ``run_readonly(..., cache=ResultCache(data_dir))`` reuses
 earlier answers; every caller passes one (``SQLizerService`` owns the
 service's). The contract:
 
-- ``validate`` (SELECT-only, the denylist, the table allowlist, LIMIT
-  injection) runs on every call, before the lookup, so a hit is never
-  served for SQL the current allowlist refuses.
+- ``validate``'s memoized, pure verdict (SELECT-only, the denylist, the
+  table allowlist, LIMIT injection; keyed on the SQL, the question, the
+  allowlist, the row cap and the schema context, see ``safety``) is
+  checked on every call, before the lookup, so a hit is never served for
+  SQL the current allowlist refuses.
 - The key is the validated SQL, ``limit``, ``max_estimated_rows``, the
   :func:`~..sources.parquet.data_fingerprint` of ``data_dir`` (path,
   size and ``mtime_ns`` of every file under it) and the session's

@@ -13,14 +13,35 @@ Determinism contract for cross-engine checks: template aggregates are
 wrapped in ROUND (4dp for AVG, 2dp for SUM) with predictable aliases
 (``avg_<col>``, ``sum_<col>``, ``cnt``), so results hash-match a DuckDB
 oracle running the same SQL.
+
+Front-end memo. The deterministic front end of a question (the
+:meth:`NL2SQLEngine.link` result, the intent analysis and the
+template-tier candidates) is memoized per engine, so a repeated
+question skips linking, intent and the template tier:
+
+- Keys: ``link`` keys on the exact question string; the intent analysis
+  and the template tier key on the question and its frozen link result.
+  ``metadata`` is fixed per engine, so nothing else feeds them.
+- Bound: each memo is an LRU of ``FRONT_MEMO_MAX_ENTRIES`` (1,024)
+  entries. A question longer than ``FRONT_MEMO_MAX_CHARS`` (1,024)
+  characters bypasses both, so a huge posted question cannot grow them.
+- Invalidation: :meth:`NL2SQLEngine.attach_model` replaces both memos
+  (the linker changes; ``clear_memo`` does the same by hand).
+- Every call hands out fresh copies (slice dicts, score dicts, the
+  ``IntentAnalysis`` and its lists, ``Candidate`` objects), so mutating
+  an answer never changes a stored entry. Exceptions are not stored.
+- Per request still run: the LLM tier, :meth:`NL2SQLEngine.rank`, the
+  candidate ladder and, through the executor, the safety verdict and
+  the result-cache key.
 """
 
 from __future__ import annotations
 
+import copy
 import re
 import threading
-from dataclasses import dataclass, field
-from functools import partial
+from dataclasses import dataclass, field, replace
+from functools import lru_cache, partial
 
 from pyspark.sql import SparkSession
 
@@ -312,6 +333,22 @@ def parse_llm_candidates(resp: str, max_candidates: int = MAX_LLM_CANDIDATES) ->
 # (schema slice, per-table column scores) of one question: NL2SQLEngine.link
 Linked = tuple[dict[str, list[str]], dict[str, dict[str, float]]]
 
+FRONT_MEMO_MAX_ENTRIES = 1024
+FRONT_MEMO_MAX_CHARS = 1024
+
+
+def _freeze_linked(linked: Linked) -> tuple:
+    slice_, scores = linked
+    return (
+        tuple((t, tuple(cols)) for t, cols in slice_.items()),
+        tuple((t, tuple(cs.items())) for t, cs in scores.items()),
+    )
+
+
+def _thaw_linked(frozen: tuple) -> Linked:
+    slice_, scores = frozen
+    return {t: list(cols) for t, cols in slice_}, {t: dict(cs) for t, cs in scores}
+
 
 @dataclass
 class Candidate:
@@ -339,6 +376,18 @@ class NL2SQLEngine:
             self._linker = SemanticLinker(model)
         # per thread: the server's request threads share one engine
         self._last = threading.local()
+        self.clear_memo()
+
+    def clear_memo(self) -> None:
+        """Start empty front-end memos (module docstring). The old ones
+        are dropped whole, so a call already running can only store into
+        a memo no later call reads."""
+        self._link_memo = lru_cache(maxsize=FRONT_MEMO_MAX_ENTRIES)(
+            lambda question: _freeze_linked(self._link(question))
+        )
+        self._front_memo = lru_cache(maxsize=FRONT_MEMO_MAX_ENTRIES)(
+            lambda question, frozen: self._front(question, *_thaw_linked(frozen))
+        )
 
     @property
     def last_method(self) -> str | None:
@@ -363,6 +412,7 @@ class NL2SQLEngine:
 
         self.model = model
         self._linker = SemanticLinker(model)
+        self.clear_memo()
 
     def link(self, question: str) -> Linked:
         """Linking ladder: trained semantic tier (top-20 cosine ≥ 0.3,
@@ -372,8 +422,13 @@ class NL2SQLEngine:
         Returns (slice, column scores): the scores are the linker's raw
         per-column cosines (empty without a model), so the template tier
         can rank columns on semantic evidence even when it fell below the
-        linking threshold. Nothing is stored on the engine, which
-        concurrent requests share."""
+        linking threshold. Memoized on the question; every call returns
+        new dicts (module docstring)."""
+        if len(question) > FRONT_MEMO_MAX_CHARS:
+            return self._link(question)
+        return _thaw_linked(self._link_memo(question))
+
+    def _link(self, question: str) -> Linked:
         if self._linker is not None:
             rel = self._linker.relevant(question)
             slice_ = rel.as_slice() or select_relevant(self.schema, question)
@@ -2147,7 +2202,9 @@ class NL2SQLEngine:
 
     def rank(self, candidates: list[Candidate], relevant: dict[str, list[str]]) -> list[Candidate]:
         """Confidence heuristics port (inference.py:283-313): +0.1 per
-        relevant table referenced, +0.1 for JOIN, sort desc."""
+        relevant table referenced, +0.1 for JOIN, sort desc. Returns
+        re-scored copies; the input candidates are left unchanged."""
+        scored = []
         for cand in candidates:
             s = cand.sql.lower()
             score = cand.confidence
@@ -2156,18 +2213,39 @@ class NL2SQLEngine:
                     score += 0.1
             if "join" in s:
                 score += 0.1
-            cand.confidence = min(score, 1.0)
-        return sorted(candidates, key=lambda c: -c.confidence)
+            scored.append(replace(cand, confidence=min(score, 1.0)))
+        return sorted(scored, key=lambda c: -c.confidence)
+
+    def _front(
+        self,
+        question: str,
+        relevant: dict[str, list[str]],
+        col_scores: dict[str, dict[str, float]],
+    ) -> tuple[IntentAnalysis, list[Candidate]]:
+        analysis = analyze_query_intent(question, relevant)
+        return analysis, self.template_candidates(question, analysis, relevant, col_scores)
 
     def generate(
         self, question: str, max_candidates: int = 5, linked: Linked | None = None
     ) -> list[Candidate]:
         """Ranked candidates; ``linked`` is this question's :meth:`link`
-        result when the caller already has it."""
-        relevant, col_scores = linked or self.link(question)
-        analysis = analyze_query_intent(question, relevant)
+        result when the caller already has it. The intent analysis and
+        the template tier are memoized (module docstring)."""
+        relevant, col_scores = linked = linked or self.link(question)
+        if len(question) > FRONT_MEMO_MAX_CHARS:
+            analysis, templates = self._front(question, relevant, col_scores)
+        else:
+            analysis, stored = self._front_memo(question, _freeze_linked(linked))
+            analysis = replace(
+                analysis,
+                all_intents=list(analysis.all_intents),
+                required_clauses=list(analysis.required_clauses),
+                required_functions=list(analysis.required_functions),
+                hints=list(analysis.hints),
+            )
+            templates = [replace(c, meta=copy.deepcopy(c.meta)) for c in stored]
         cands = self.llm_candidates(question, analysis, relevant)
-        cands += self.template_candidates(question, analysis, relevant, col_scores)
+        cands += templates
         return self.rank(cands, relevant)[:max_candidates]
 
     def query_df(

@@ -18,12 +18,28 @@ Behavioral parity targets (tested in tests/test_safety.py):
 - LIMIT injected when absent at the top level (nl2sql.py:299-306);
 - every referenced table must be in the allowed context (:292-297);
 - question-driven aggregation/DISTINCT requirements enforced (:178-278).
+
+``validate``'s verdict is memoized. The gate reads nothing but its
+arguments, so the verdict is a pure function of ``(sql, question,
+tuple(allowed_tables), max_rows, schema_context)``, with the
+schema-context dict frozen to ``((table, (column, ...)), ...)``; the
+memo never needs invalidation. One module-level LRU of
+``VERDICT_MEMO_MAX_ENTRIES`` (4,096) entries stores either the finalized
+SQL or the ``SQLSafetyError`` message, and a refused call raises a fresh
+``SQLSafetyError`` with that message. Other exceptions propagate and are
+not stored. A call whose ``sql`` and ``question`` together exceed
+``VERDICT_MEMO_MAX_CHARS`` (4,096) characters runs the gate without the
+memo, so a huge posted statement cannot grow it. The key is built from copies, so a
+caller that later mutates its allowlist or schema context cannot change
+a stored verdict. ``validate.cache_info``/``cache_clear`` expose the
+memo.
 """
 
 from __future__ import annotations
 
 import re
 from dataclasses import dataclass
+from functools import lru_cache
 
 
 class SQLSafetyError(Exception):
@@ -444,8 +460,8 @@ def validate_query_structure(question: str, sql: str, schema_context=None) -> No
         raise SQLSafetyError("Question asks for unique values but SQL has no DISTINCT")
 
 
-def validate(sql: str, question: str | None = None, allowed_tables=None,
-             max_rows: int = 100, schema_context=None) -> str:
+def _validate(sql: str, question: str | None = None, allowed_tables=None,
+              max_rows: int = 100, schema_context=None) -> str:
     """Full gate: S1 → S2 → S4 → S5 → S3; returns the finalized SQL."""
     ensure_select_only(sql)
     if allowed_tables is not None:
@@ -454,3 +470,45 @@ def validate(sql: str, question: str | None = None, allowed_tables=None,
         validate_aggregation_requirements(question, sql, schema_context)
         validate_query_structure(question, sql, schema_context)
     return enforce_limit(sql, max_rows)
+
+
+VERDICT_MEMO_MAX_ENTRIES = 4096
+VERDICT_MEMO_MAX_CHARS = 4096
+
+
+def _verdict(sql, question, allowed_tables, max_rows, schema_context):
+    """(True, finalized SQL) or (False, refusal message) of the frozen
+    arguments :func:`validate` keys its memo on."""
+    if schema_context is not None:
+        schema_context = {t: list(cols) for t, cols in schema_context}
+    try:
+        return True, _validate(sql, question, allowed_tables, max_rows, schema_context)
+    except SQLSafetyError as e:
+        return False, str(e)
+
+
+# typed: max_rows 100 and 100.0 inject different LIMIT text
+_verdict_memo = lru_cache(maxsize=VERDICT_MEMO_MAX_ENTRIES, typed=True)(_verdict)
+
+
+def validate(sql: str, question: str | None = None, allowed_tables=None,
+             max_rows: int = 100, schema_context=None) -> str:
+    """Full gate: S1 → S2 → S4 → S5 → S3; returns the finalized SQL.
+    The verdict is memoized (contract in the module docstring)."""
+    if len(sql) + len(question or "") > VERDICT_MEMO_MAX_CHARS:
+        return _validate(sql, question, allowed_tables, max_rows, schema_context)
+    ok, out = _verdict_memo(
+        sql,
+        question,
+        None if allowed_tables is None else tuple(allowed_tables),
+        max_rows,
+        None if schema_context is None
+        else tuple((t, tuple(cols)) for t, cols in schema_context.items()),
+    )
+    if ok:
+        return out
+    raise SQLSafetyError(out)
+
+
+validate.cache_info = _verdict_memo.cache_info
+validate.cache_clear = _verdict_memo.cache_clear

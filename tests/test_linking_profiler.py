@@ -289,6 +289,31 @@ def test_profiler_crawl(spark, sf_smoke):
     assert "orders" in meta.synonyms
 
 
+def test_concurrent_crawl_matches_serial_profile_loop(spark, sf_smoke):
+    """crawl_schema profiles tables on a thread pool, largest first; the
+    result equals a serial profile_table loop field for field, in
+    ``tables`` order, with a missing table skipped."""
+    from dbt_nlp_sqlizer_team04_spark.operators.profiler import (
+        extract_synonyms,
+        infer_relationships,
+        profile_table,
+    )
+    from dbt_nlp_sqlizer_team04_spark.sources.parquet import TABLES, load_table
+
+    tables = TABLES + ("no_such_table",)
+    meta = crawl_schema(spark, sf_smoke, tables, sample_size=5)
+    infos = {t: profile_table(load_table(spark, sf_smoke, t), t, sample_size=5)
+             for t in TABLES}
+    serial = SchemaMetadata(tables=infos)
+    serial.relationships = infer_relationships(infos)
+    for t, info in infos.items():
+        info.foreign_keys = [r for r in serial.relationships if r.from_table == t]
+    serial.synonyms = extract_synonyms(serial)
+    assert list(meta.tables) == list(TABLES)
+    assert meta == serial
+    assert meta.to_json() == serial.to_json()
+
+
 def test_metadata_roundtrip(spark, sf_smoke):
     meta = crawl_schema(spark, sf_smoke, ("region", "nation"), sample_size=2)
     again = SchemaMetadata.from_json(meta.to_json())

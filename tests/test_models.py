@@ -183,6 +183,25 @@ def test_concurrent_generate_matches_serial(spark, metadata, model):
     assert [serial[q] for q in work] == got
 
 
+def test_attach_model_clears_front_memo(spark, metadata, model):
+    """An engine that memoized its questions without a model answers,
+    once a model is attached, exactly like a fresh engine built with it."""
+    from dbt_nlp_sqlizer_team04_spark.plans.nl2sql import NL2SQLEngine
+
+    def out(eng, q):
+        return [(c.sql, c.method, c.confidence) for c in eng.generate(q)]
+
+    eng = NL2SQLEngine(spark, metadata)
+    before = {q: out(eng, q) for q in RACE_QUESTIONS}
+    eng.attach_model(model)
+    after = {q: out(eng, q) for q in RACE_QUESTIONS}
+    fresh = {q: out(NL2SQLEngine(spark, metadata, model=model), q)
+             for q in RACE_QUESTIONS}
+    assert after == fresh
+    assert after != before  # the model changes some answer, or this shows nothing
+    assert {q: out(eng, q) for q in RACE_QUESTIONS} == fresh
+
+
 # ------------------------------------------------- A19 LLM training data
 def test_llm_training_examples_tolerant_parse(metadata):
     """Canned LLM response: prose around a JSON array → parsed pairs,

@@ -764,16 +764,42 @@ def test_equidepth_template(spark, sf_smoke):
     assert "NTILE(4)" in sql4
 
 
-def test_repeated_generate_does_no_fuzzy_work(engine, matcher_count):
+def test_repeated_generate_does_no_fuzzy_work(spark, engine, matcher_count):
     """Fuzzy scoring is memoized: once a question has been generated,
-    generating it again constructs no SequenceMatcher at all."""
+    generating it again constructs no SequenceMatcher at all. A fresh
+    engine over the same metadata: the shared one has the questions in
+    its front-end memo already."""
+    cold = NL2SQLEngine(spark, engine.metadata)
     for q in EVAL_QUESTIONS:
         before = matcher_count()
-        first = [c.sql for c in engine.generate(q)]
+        first = [c.sql for c in cold.generate(q)]
         assert matcher_count() > before, q  # the counter sees a cold question
         before = matcher_count()
-        assert [c.sql for c in engine.generate(q)] == first
+        assert [c.sql for c in cold.generate(q)] == first
         assert matcher_count() == before, q
+
+
+def test_rank_is_pure(engine):
+    """Ranking returns re-scored copies: the input list and its
+    candidates are unchanged, so ranking the same list twice gives the
+    same confidences and order."""
+    from dbt_nlp_sqlizer_team04_spark.plans.nl2sql import Candidate
+
+    relevant = {"orders": ["o_orderkey"], "customer": ["c_custkey"]}
+    cands = [
+        Candidate("SELECT * FROM orders LIMIT 100", "template", 0.5),
+        Candidate("SELECT * FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey",
+                  "template_join", 0.6),
+        Candidate("SELECT COUNT(*) AS cnt FROM customer", "template_count", 0.9),
+    ]
+    before = [(c.sql, c.method, c.confidence) for c in cands]
+    first = [(c.sql, c.method, c.confidence) for c in engine.rank(cands, relevant)]
+    second = [(c.sql, c.method, c.confidence) for c in engine.rank(cands, relevant)]
+    assert first == second
+    assert [(c.sql, c.method, c.confidence) for c in cands] == before
+    # +0.1 per relevant table referenced, +0.1 for JOIN
+    assert [m for _s, m, _c in first] == ["template_count", "template_join", "template"]
+    assert [c for _s, _m, c in first] == pytest.approx([1.0, 0.9, 0.6])
 
 
 def test_last_method_is_per_thread(engine):

@@ -5,7 +5,10 @@ from __future__ import annotations
 
 import pytest
 
+from dbt_nlp_sqlizer_team04_spark.plans import safety
 from dbt_nlp_sqlizer_team04_spark.plans.safety import (
+    VERDICT_MEMO_MAX_CHARS,
+    VERDICT_MEMO_MAX_ENTRIES,
     SQLSafetyError,
     enforce_limit,
     ensure_select_only,
@@ -184,3 +187,99 @@ def test_enforce_limit_clamps_oversized_and_all():
     # equal to the cap is fine too
     out = enforce_limit("SELECT * FROM orders LIMIT 100", max_rows=100)
     assert "__bounded" not in out
+
+
+# ------------------------------------------------------ verdict memo
+def _verdict(fn, *args, **kwargs):
+    try:
+        return "ok", fn(*args, **kwargs)
+    except SQLSafetyError as e:
+        assert type(e) is SQLSafetyError
+        return "refused", str(e)
+
+
+def test_validate_memo_matches_unmemoized(spark, sf_smoke):
+    """The memoized verdict equals the gate run without the memo, on the
+    first and the second call, over refusal SQL, the adversarial probes,
+    bounding cases and every generated candidate of the corpus questions
+    (with the question, allowlist and schema context the ladder passes)."""
+    from dbt_nlp_sqlizer_team04_spark.plans.nl2sql import NL2SQLEngine
+    from tests.test_front_memo import _perfbench_workload
+    from tests.test_nl2sql_pipeline import EVAL_QUESTIONS
+
+    refusals = [tpl.format(n=n) for tpl in _perfbench_workload()._REFUSALS for n in (1, 77)]
+    allowed = ["orders", "customer", "lineitem", "nation", "region"]
+    cases = [((sql,), {"allowed_tables": allowed}) for sql in refusals + ADVERSARIAL]
+    cases += [((sql,), {}) for sql in ADVERSARIAL]
+    cases += [
+        (("SELECT * FROM orders",), {"max_rows": 7}),
+        (("SELECT * FROM orders",), {"max_rows": 7.0}),
+        (("SELECT * FROM orders LIMIT 100000000",), {"max_rows": 100}),
+        (("SELECT * FROM orders LIMIT 5 UNION SELECT * FROM orders",), {}),
+        (("SELECT o_orderkey FROM orders",), {"question": "average totalprice"}),
+    ]
+    engine = NL2SQLEngine.from_sf_dir(spark, sf_smoke, sample_size=5)
+    questions = EVAL_QUESTIONS + [
+        "count of orders and average totalprice per orderpriority",
+        "unique mktsegment values from customer",
+        "orders with their customers",
+        "give me everything in customer",
+    ]
+    for q in questions:
+        relevant = engine.link(q)[0]
+        for cand in engine.generate(q):
+            cases.append(((cand.sql,), {
+                "question": q, "allowed_tables": list(engine.schema),
+                "max_rows": 100, "schema_context": relevant,
+            }))
+    validate.cache_clear()
+    for _ in range(2):
+        for args, kwargs in cases:
+            assert _verdict(validate, *args, **kwargs) == _verdict(
+                safety._validate, *args, **kwargs
+            ), (args, kwargs)
+    info = validate.cache_info()
+    assert info.hits >= len(cases) and info.maxsize == VERDICT_MEMO_MAX_ENTRIES
+    verdicts = {_verdict(validate, *a, **kw)[0] for a, kw in cases}
+    assert verdicts == {"ok", "refused"}
+
+
+def test_validate_memo_copies_mutable_arguments():
+    """The key is built from copies: mutating the caller's allowlist or
+    schema context after a call does not leak into the memo."""
+    allowed = ["orders", "customer"]
+    sql = "SELECT * FROM customer"
+    assert validate(sql, allowed_tables=allowed).startswith(sql)
+    allowed.remove("customer")
+    with pytest.raises(SQLSafetyError, match="Table not allowed in context: customer"):
+        validate(sql, allowed_tables=allowed)
+    allowed.append("customer")
+    assert validate(sql, allowed_tables=allowed).startswith(sql)
+
+    q = "orders with their customers"
+    join_sql = "SELECT * FROM orders, customer"
+    ctx = {"orders": ["o_orderkey"], "customer": ["c_custkey"]}
+    with pytest.raises(SQLSafetyError, match="no JOIN"):
+        validate(join_sql, question=q, schema_context=ctx)
+    ctx.pop("customer")
+    assert validate(join_sql, question=q, schema_context=ctx).startswith(join_sql)
+    ctx["customer"] = ["c_custkey"]
+    with pytest.raises(SQLSafetyError, match="no JOIN"):
+        validate(join_sql, question=q, schema_context=ctx)
+
+
+def test_validate_memo_bypass_and_errors():
+    """Over-long input is gated without the memo; exceptions other than
+    SQLSafetyError propagate and are not stored."""
+    validate.cache_clear()
+    long_sql = "SELECT " + ", ".join(f"{i} AS c{i}" for i in range(800))
+    assert len(long_sql) > VERDICT_MEMO_MAX_CHARS
+    for _ in range(2):
+        assert validate(long_sql) == safety._validate(long_sql)
+        with pytest.raises(SQLSafetyError, match="Multiple statements"):
+            validate(long_sql + "; DROP TABLE orders")
+    assert validate.cache_info().currsize == 0
+    for _ in range(2):
+        with pytest.raises(TypeError):
+            validate("SELECT 1 LIMIT 5", max_rows="many")
+    assert validate.cache_info().currsize == 0

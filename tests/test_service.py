@@ -45,6 +45,55 @@ def test_ask_full_pipeline(svc):
     assert out["ok"] and out["rowcount"] == 5
 
 
+def test_repeated_ask_does_no_front_end_work(svc, monkeypatch, matcher_count):
+    """A repeated ask reuses the engine's front-end memo and the safety
+    verdict memo: no intent analysis, no template tier, no SQL
+    tokenizing and no fuzzy scoring. Clearing both memos brings the work
+    back, so the counters do see it."""
+    from collections import Counter
+
+    from dbt_nlp_sqlizer_team04_spark.plans import nl2sql, safety
+
+    q = "count of orders with orderstatus F per orderpriority"
+    first = svc.ask(q)
+    assert first["ok"]
+    calls = Counter()
+
+    def counted(name, fn):
+        def wrapper(*args, **kwargs):
+            calls[name] += 1
+            return fn(*args, **kwargs)
+        return wrapper
+
+    monkeypatch.setattr(nl2sql, "analyze_query_intent",
+                        counted("intent", nl2sql.analyze_query_intent))
+    monkeypatch.setattr(nl2sql.NL2SQLEngine, "template_candidates",
+                        counted("templates", nl2sql.NL2SQLEngine.template_candidates))
+    monkeypatch.setattr(safety, "tokenize", counted("tokenize", safety.tokenize))
+    before = matcher_count()
+    second = svc.ask(q)
+    assert calls == Counter() and matcher_count() == before
+    assert second["cached"] and second["rows"] == first["rows"]
+    assert second["sql"] == first["sql"]
+
+    svc._engine.clear_memo()
+    safety.validate.cache_clear()
+    assert svc.ask(q)["rows"] == first["rows"]
+    assert calls["intent"] and calls["templates"] and calls["tokenize"]
+
+
+def test_nl2sql_slice_is_a_copy(svc):
+    """Mutating a response's slice cannot change a later response."""
+    q = "count of orders per orderpriority"
+    first = svc.nl2sql(q)
+    expected = {t: list(cols) for t, cols in first["slice"].items()}
+    for cols in first["slice"].values():
+        cols.append("bogus_col")
+    first["slice"]["bogus_table"] = ["x"]
+    again = svc.nl2sql(q)
+    assert again["slice"] == expected and again["sql"] == first["sql"]
+
+
 def test_train_lifecycle(svc):
     # synchronous first train (use_llm off: deterministic templates)
     r = svc.train(use_llm_for_training=False, background=False)
