@@ -12,7 +12,23 @@ no-LLM path answers the reference's eval questions (FIXTURES.md §6).
 Determinism contract for cross-engine checks: template aggregates are
 wrapped in ROUND (4dp for AVG, 2dp for SUM) with predictable aliases
 (``avg_<col>``, ``sum_<col>``, ``cnt``), so results hash-match a DuckDB
-oracle running the same SQL.
+oracle running the same SQL (one renderer, ``_agg_expr``).
+
+Rule table. The template tier is :data:`TEMPLATE_RULES`, an ordered
+tuple of (method, rule) pairs in the style of Catalyst's rule batches
+(Spark SQL, SIGMOD 2015):
+
+- A rule is a pure function of one :class:`Evidence` (the question, its
+  intent analysis and linked slice, the anchor table and the
+  score-bound column helpers) returning its (sql, confidence) pairs,
+  possibly none. Every candidate a rule emits carries its method name.
+- :meth:`NL2SQLEngine.template_candidates` concatenates the rules'
+  candidates in table order. That order is the tie-break: ``rank``
+  sorts stably, so between equal scores the earlier rule wins.
+- Confidences are the named ``CONF_*`` levels; the comment above
+  :meth:`NL2SQLEngine.rank` explains the inflation they are set against.
+- tests/nl2sql_template_reference.json pins every rule's output, from
+  before the table existed, over the repository's question corpus.
 
 Front-end memo. The deterministic front end of a question (the
 :meth:`NL2SQLEngine.link` result, the intent analysis and the
@@ -40,8 +56,9 @@ from __future__ import annotations
 import copy
 import re
 import threading
+from collections.abc import Callable
 from dataclasses import dataclass, field, replace
-from functools import lru_cache, partial
+from functools import cached_property, lru_cache, partial
 
 from pyspark.sql import SparkSession
 
@@ -58,6 +75,7 @@ from .linking import partial_ratio, select_relevant
 from .llm import LLMNotConfigured, chat_complete
 from .safety import extract_sql_from_response
 
+# crawler.py:255's numeric-type substring set, extended with Spark's names.
 _NUMERIC_SUBSTR = ("int", "numeric", "decimal", "float", "double", "real", "long")
 
 _GRAIN_RE = re.compile(
@@ -285,6 +303,96 @@ _CASE_BUCKET_RE = re.compile(
     r"([a-z_]+?)s?\s+as\s+([a-z_]+)\s+or\s+([a-z_]+)\b"
 )
 
+# "orders with totalprice greater than …": the entity before 'with'
+_ENTITY_WITH_RE = re.compile(r"\b([a-z_]+?)s?\s+with\b")
+
+# calendar trends: "month over month change" (LAG) and "running /
+# cumulative total" (SUM OVER) window over a calendar rollup
+_TREND_RE = re.compile(
+    r"\b(month|week|year|day) over \1\b"
+    r"|\bchange (?:from|vs|versus|over) (?:the )?previous "
+    r"(month|week|year|day)\b"
+)
+_RUNNING_RE = re.compile(r"\b(?:running|cumulative)\s+(?:total|sum|count)\b")
+
+# "histogram/distribution of <m> in buckets of N" — equi-width buckets
+_HISTOGRAM_RE = re.compile(
+    r"\b(?:histogram|distribution) of (\w+)\b.*?"
+    r"\b(?:buckets|bins|steps) of (\d+)\b"
+)
+
+# "decile/quintile/quartile (breakdown/distribution) of <m>" — equi-depth
+_NTILE_RE = re.compile(
+    r"\b(decile|quintile|quartile)s?\b"
+    r"(?: breakdown| distribution)? of (\w+)\b"
+)
+_NTILES = {"decile": 10, "quintile": 5, "quartile": 4}
+
+# Template confidences, before rank's inflation (NL2SQLEngine.rank).
+CONF_ENTITY_JOIN = 0.9  # entity listing through an FK-linked predicate table
+CONF_SHAPE = 0.85  # the compiled shape is the whole ask: facets, ratio, trends,
+# histogram, equi-depth tiles, CASE buckets, a window asked "along with"
+CONF_INTENT = 0.8  # an intent template: ties the FK-join fallback, wins on order
+CONF_JOIN_AGG = 0.78  # FK-join grouped aggregate, on clear foreign evidence only
+CONF_SINGLE_AGG = 0.75  # single-key grouped aggregate; bare-grain count
+CONF_PLAIN = 0.7  # ungrouped aggregate, distinct values, a window as a hint
+CONF_WEAK = 0.6  # unbounded sort; the FK-join fallback (template_join)
+CONF_LISTING = 0.5  # the reference's first-five-columns listing
+
+
+def _sql_str(v: str) -> str:
+    """A single-quoted SQL string literal."""
+    return "'" + v.replace("'", "''") + "'"
+
+
+def _where(conds: list[str]) -> str:
+    return " WHERE " + " AND ".join(conds) if conds else ""
+
+
+def _limit(n: int | None) -> str:
+    return f" LIMIT {n}" if n else ""
+
+
+def _agg_expr(func: str, col: str | None) -> tuple[str, str]:
+    """(expression, alias) of one template aggregate: the module
+    docstring's determinism contract (AVG rounded to 4 places, SUM to 2,
+    a row count as ``cnt``)."""
+    if func == "COUNT":
+        return "COUNT(*)", "cnt"
+    if func == "AVG":
+        return f"ROUND(AVG({col}), 4)", f"avg_{col}"
+    if func == "SUM":
+        return f"ROUND(SUM({col}), 2)", f"sum_{col}"
+    return f"{func}({col})", f"{func.lower()}_{col}"
+
+
+def _join_path_sql(path: list[tuple[str, str, str, str]]) -> str:
+    """``JOIN … ON …`` clauses along an FK path of (tbl_a, col_a, tbl_b,
+    col_b) edges (:meth:`NL2SQLEngine._fk_path`)."""
+    return " ".join(f"JOIN {tb} ON {ta}.{ca} = {tb}.{cb}" for ta, ca, tb, cb in path)
+
+
+def _grain_key(grain: str, dcol: str) -> str:
+    """Calendar bucket key of a date column: ISO week starts for weeks."""
+    if grain == "week":
+        return f"date_format(date_trunc('week', {dcol}), 'yyyy-MM-dd')"
+    fmt = {"month": "yyyy-MM", "year": "yyyy", "day": "yyyy-MM-dd"}[grain]
+    return f"date_format({dcol}, '{fmt}')"
+
+
+def _is_numeric(col) -> bool:
+    return any(s in col.type_str.lower() for s in _NUMERIC_SUBSTR)
+
+
+def _is_string(col) -> bool:
+    ts = col.type_str.lower()
+    return "string" in ts or "char" in ts or "text" in ts
+
+
+def _names_table(table: str, tokens: set[str]) -> bool:
+    """The question tokens name ``table`` (singular or plural)."""
+    return table in tokens or table.rstrip("s") in tokens or f"{table}s" in tokens
+
 
 def _temporal_grain(question: str) -> str | None:
     """Calendar grain the question groups on, if any ("per month",
@@ -293,7 +401,7 @@ def _temporal_grain(question: str) -> str | None:
     if not m:
         return None
     return m.group(1) or _GRAIN_WORDS[m.group(2)]
-# crawler.py:255's numeric-type substring set, extended with Spark's names.
+
 
 SYS_PROMPT = (
     "Generate ONLY SQL SELECT queries. NO explanations, NO markdown. "
@@ -476,14 +584,9 @@ class NL2SQLEngine:
         non-numeric types."""
         best, best_score = None, -1.0
         for c in self._cols(table):
-            is_num = any(s in c.type_str.lower() for s in _NUMERIC_SUBSTR)
-            if numeric is True and not is_num:
+            if numeric is not None and _is_numeric(c) != numeric:
                 continue
-            if numeric is False and is_num:
-                continue
-            fuzzy = partial_ratio(c.name, question)
-            for syn in self.metadata.synonyms.get(c.name, []):
-                fuzzy = max(fuzzy, partial_ratio(syn, question))
+            fuzzy = self._fuzzy(c.name, question)
             score = self._column_score(table, c.name, fuzzy, preferred, scores)
             if score > best_score:
                 best, best_score = c.name, score
@@ -554,15 +657,9 @@ class NL2SQLEngine:
         for c in self._cols(table):
             if exclude is not None and c.name == exclude:
                 continue
-            if numeric is not None:
-                is_num = any(
-                    s in c.type_str.lower() for s in _NUMERIC_SUBSTR
-                )
-                if is_num != numeric:
-                    continue
-            fuzzy = partial_ratio(c.name, question)
-            for syn in self.metadata.synonyms.get(c.name, []):
-                fuzzy = max(fuzzy, partial_ratio(syn, question))
+            if numeric is not None and _is_numeric(c) != numeric:
+                continue
+            fuzzy = self._fuzzy(c.name, question)
             score = self._column_score(table, c.name, fuzzy, preferred, scores)
             if c.unique_values is not None:  # profiled categorical
                 score += 15.0
@@ -654,7 +751,7 @@ class NL2SQLEngine:
         bar — the phrase is then ignored, the no-guessing rule."""
         best, best_score = None, -1.0
         for c in self._cols(table):
-            if not any(s in c.type_str.lower() for s in _NUMERIC_SUBSTR):
+            if not _is_numeric(c):
                 continue
             if c.name.lower().endswith("key"):
                 continue  # surrogate keys are never the asked measure
@@ -691,29 +788,58 @@ class NL2SQLEngine:
         out.extend(self._extract_year_filters(table, question))
         return out
 
-    def _entity_table(self, word: str) -> str | None:
-        """Resolve a question word to a TABLE by stem equality or high
-        fuzzy affinity (the shared convention of the entity-anchored
-        templates)."""
+    def _entity_table(self, word: str, among=None) -> str | None:
+        """Resolve a question word to a TABLE (of ``among``, default every
+        crawled table) by stem equality or fuzzy affinity ≥ 90 (the
+        shared convention of the entity-anchored templates)."""
         w = word.strip()
-        for c_t in self.metadata.tables:
+        for c_t in self.metadata.tables if among is None else among:
             if c_t.rstrip("s") == w.rstrip("s") or partial_ratio(c_t, w) >= 90.0:
                 return c_t
         return None
 
-    def _best_numeric_column(self, table: str, word: str) -> str | None:
-        """Fuzzy-resolve a question word to a NUMERIC column (≥70, the
-        shared comparison-filter convention)."""
+    def _remote_measure(self, entity: str, phrase: str) -> tuple | None:
+        """The numeric column ``phrase`` names in another table that
+        reaches ``entity`` in at most two FK hops, best name match first:
+        (table, column, path to ``entity``), or None."""
+        best = None
+        for cand_t in self.metadata.tables:
+            if cand_t == entity:
+                continue
+            col = self._best_numeric_column(cand_t, phrase.strip())
+            if col is None:
+                continue
+            path = self._fk_path(cand_t, entity, max_hops=2)
+            if path is None:
+                continue
+            score = partial_ratio(col, phrase)
+            if best is None or score > best[0]:
+                best = (score, cand_t, col, path)
+        return best and best[1:]
+
+    def _fuzzy(self, name: str, text: str) -> float:
+        """Fuzzy affinity of a column name, or of its best profiled
+        synonym (the A8 map), to ``text``."""
+        return max(
+            [partial_ratio(name, text)]
+            + [partial_ratio(syn, text) for syn in self.metadata.synonyms.get(name, [])]
+        )
+
+    def _resolve_column(self, table: str, word: str, accept=lambda c: True) -> str | None:
+        """The column of ``table`` passing ``accept`` that a question word
+        names: best fuzzy affinity, if it clears the shared ≥70 bar —
+        otherwise None, the no-guessing rule."""
         best, best_score = None, -1.0
         for c in self._cols(table):
-            if not any(s in c.type_str.lower() for s in _NUMERIC_SUBSTR):
+            if not accept(c):
                 continue
-            f = partial_ratio(c.name, word)
-            for syn in self.metadata.synonyms.get(c.name, []):
-                f = max(f, partial_ratio(syn, word))
+            f = self._fuzzy(c.name, word)
             if f > best_score:
                 best, best_score = c.name, f
         return best if best is not None and best_score >= 70.0 else None
+
+    def _best_numeric_column(self, table: str, word: str) -> str | None:
+        return self._resolve_column(table, word, _is_numeric)
 
     def _extract_year_filters(self, table: str, question: str) -> list[str]:
         """Calendar-year predicates against the fuzzy-best date column:
@@ -767,17 +893,8 @@ class NL2SQLEngine:
         numeric-filter convention); otherwise the phrase is ignored."""
         out: list[str] = []
         for word, mode, tok in _LIKE_RE.findall(question.lower()):
-            best, best_score = None, -1.0
-            for c in self._cols(table):
-                ts = c.type_str.lower()
-                if not ("string" in ts or "char" in ts or "text" in ts):
-                    continue
-                f = partial_ratio(c.name, word)
-                for syn in self.metadata.synonyms.get(c.name, []):
-                    f = max(f, partial_ratio(syn, word))
-                if f > best_score:
-                    best, best_score = c.name, f
-            if best is None or best_score < 70.0:
+            best = self._resolve_column(table, word, _is_string)
+            if best is None:
                 continue
             tok = tok.replace("'", "''")
             pat = {
@@ -802,14 +919,7 @@ class NL2SQLEngine:
         def resolve(word: str) -> str | None:
             if not word or self._entity_table(word) is not None:
                 return None
-            best, best_score = None, -1.0
-            for c in self._cols(table):
-                f = partial_ratio(c.name, word)
-                for syn in self.metadata.synonyms.get(c.name, []):
-                    f = max(f, partial_ratio(syn, word))
-                if f > best_score:
-                    best, best_score = c.name, f
-            return best if best is not None and best_score >= 70.0 else None
+            return self._resolve_column(table, word)
 
         # NOT-null first, then mask, so "is not null" can't also feed
         # the IS NULL pass (whose regex would otherwise match a
@@ -827,6 +937,28 @@ class NL2SQLEngine:
                     seen.add(col)
                     out.append(f"{col} IS NULL")
         return out
+
+    def _equality_predicates(
+        self, table: str, question: str, exclude: set | None = None
+    ) -> list[str]:
+        return [
+            f"{c} = {_sql_str(v)}"
+            for c, v in self._extract_filters(table, question, exclude)
+        ]
+
+    def _predicates(
+        self, table: str, question: str, exclude: set | None = None
+    ) -> list[str]:
+        """Every predicate the question grounds on ``table``: domain
+        equality (``exclude`` bars the measure), numeric comparison,
+        calendar, substring and nullability filters."""
+        return (
+            self._equality_predicates(table, question, exclude)
+            + self._extract_numeric_filters(table, question)
+            + self._extract_year_filters(table, question)
+            + self._extract_like_filters(table, question)
+            + self._extract_null_filters(table, question)
+        )
 
     def _date_column(self, table: str, question: str) -> str | None:
         """Best date/timestamp-typed column, fuzzy-ranked against the
@@ -850,1340 +982,36 @@ class NL2SQLEngine:
         col_scores: dict[str, dict[str, float]],
     ) -> list[Candidate]:
         """Deterministic intent-compiled templates (extends
-        inference.py:215-246's two templates). ``col_scores`` are the
-        linker's per-column cosines for this question (see :meth:`link`)."""
-        best_column = partial(self._best_column, scores=col_scores)
-        group_column = partial(self._group_column, scores=col_scores)
-        group_column_scored = partial(self._group_column_scored, scores=col_scores)
-        out: list[Candidate] = []
+        inference.py:215-246's two templates): the candidates of every
+        rule in :data:`TEMPLATE_RULES`, in table order (module
+        docstring). ``col_scores`` are the linker's per-column cosines
+        for this question (see :meth:`link`)."""
         tables = list(relevant)
         if not tables:
-            return out
-        t = tables[0]
-        # "count of orders per customer name": the counted entity is
-        # the base/fact table even when the pruner ranked a dimension
-        # first on other word matches
+            return []
+        # "count of orders per customer name": the counted entity is the
+        # base/fact table even when the pruner ranked a dimension first
+        # on other word matches
         em = _MEASURE_ENTITY_RE.search(question.lower())
-        if em:
-            entity = em.group(1).rstrip("s")
-            for cand_t in tables:
-                if cand_t.rstrip("s") == entity or partial_ratio(
-                    cand_t, entity
-                ) >= 90.0:
-                    t = cand_t
-                    break
-        all_cols = [c.name for c in self._cols(t)]
-        limit_n = analysis.limit_n
-
-        def order_clause(col: str | None) -> str:
-            if col is None:
-                return ""
-            return f" ORDER BY {col}" + (" DESC" if analysis.sort_desc else "")
-
-        # --- multi-facet breakdown → GROUPING SETS -------------------
-        # "break down orders by status and by priority": each 'by
-        # <word>' resolves to a categorical column; N facets compile to
-        # ONE grouping-sets pass (one scan + one shuffle, the q118
-        # lattice — the SQL twin of NL2Doc's $facet tier)
-        if _BREAKDOWN_RE.search(question.lower()):
-            keys: list[str] = []
-            for w in _BY_WORD_RE.findall(question.lower()):
-                sc = group_column_scored(t, w, numeric=False)
-                if sc is not None and sc[0] not in keys:
-                    keys.append(sc[0])
-            if len(keys) >= 2:
-                facet_case = "CASE " + " ".join(
-                    f"WHEN GROUPING({k}) = 0 THEN 'by_{k}'" for k in keys
-                ) + " END"
-                coal = ", ".join(f"CAST({k} AS STRING)" for k in keys)
-                sets = ", ".join(f"({k})" for k in keys)
-                sql = (
-                    f"SELECT {facet_case} AS facet, "
-                    f"COALESCE({coal}) AS grp, COUNT(*) AS n "
-                    f"FROM {t} GROUP BY GROUPING SETS ({sets}) "
-                    f"ORDER BY facet, grp"
-                )
-                out.append(Candidate(sql, "template_facet_breakdown", 0.85))
-
-        # --- share-of-total: "percentage of X per g" ----------------
-        if _PERCENT_RE.search(question.lower()):
-            # predicate ratio: "what percentage of orders are urgent" —
-            # a percent cue with NO "per <g>" breakdown but with exactly
-            # one domain-grounded value match compiles to an ungrouped
-            # CASE ratio (the grouped share would pick some categorical
-            # column and leave the reader to find the row; the question
-            # asks ONE number about ONE predicate)
-            if not _PER_PHRASE_RE.search(question.lower()):
-                flt = self._extract_filters(t, question)
-                if len(flt) == 1:
-                    fc, fv = flt[0]
-                    fv_esc = fv.replace(chr(39), chr(39) * 2)
-                    hit = f"CASE WHEN {fc} = '{fv_esc}' THEN 1 ELSE 0 END"
-                    sql = (
-                        f"SELECT COUNT(*) AS n_total, "
-                        f"SUM({hit}) AS n_match, "
-                        f"CAST(ROUND(100.0 * SUM({hit}) / COUNT(*), 4) "
-                        f"AS DOUBLE) AS pct FROM {t}"
-                    )
-                    out.append(
-                        Candidate(sql, "template_predicate_ratio", 0.85)
-                    )
-            # the group phrase can name a DIMENSION one FK hop away
-            # ("share of customers per nation name" groups by
-            # nation.n_name, not a customer column)
-            pmp = _PER_PHRASE_RE.search(question.lower())
-            if pmp:
-                g_ph = pmp.group(1)
-                best_pd = None
-                for cand_t in self.metadata.tables:
-                    if cand_t == t:
-                        continue
-                    if partial_ratio(cand_t, g_ph) < 70.0:
-                        continue
-                    dsc = group_column_scored(
-                        cand_t, g_ph, numeric=False
-                    )
-                    if dsc is None:
-                        continue
-                    path = self._fk_path(t, cand_t, max_hops=2)
-                    if path is None:
-                        continue
-                    if best_pd is None or dsc[1] > best_pd[0]:
-                        best_pd = (dsc[1], cand_t, dsc[0], path)
-                if best_pd is not None:
-                    _s, dim_t, dim_c, path = best_pd
-                    joins = " ".join(
-                        f"JOIN {tb} ON {ta}.{ca} = {tb}.{cb}"
-                        for ta, ca, tb, cb in path
-                    )
-                    sql = (
-                        f"SELECT {dim_c}, COUNT(*) AS cnt, "
-                        f"CAST(ROUND(100.0 * COUNT(*) / SUM(COUNT(*)) "
-                        f"OVER (), 4) AS DOUBLE) AS pct "
-                        f"FROM {t} {joins} GROUP BY {dim_c} "
-                        f"ORDER BY {dim_c}"
-                    )
-                    out.append(
-                        Candidate(sql, "template_pct_of_total", 0.8)
-                    )
-            g0 = group_column(t, question, preferred=relevant.get(t))
-            if g0 is not None:
-                # comparison-filtered share (r11, nl74's surface): a
-                # "<col> over <n>" / "before <year>" phrase narrows
-                # BOTH the numerator and the denominator — share
-                # within the filtered set, the nl73 doc-plane contract
-                where = self._share_comparison_filters(t, question)
-                wsql = f" WHERE {' AND '.join(where)}" if where else ""
-                # CAST to DOUBLE: ANSI decimal literal arithmetic would
-                # type pct as DECIMAL(..,4) and serialize '33.9200'
-                sql = (
-                    f"SELECT {g0}, COUNT(*) AS cnt, "
-                    f"CAST(ROUND(100.0 * COUNT(*) / SUM(COUNT(*)) OVER (), 4)"
-                    f" AS DOUBLE) AS pct FROM {t}{wsql} "
-                    f"GROUP BY {g0} ORDER BY {g0}"
-                )
-                out.append(Candidate(sql, "template_pct_of_total", 0.8))
-
-        # --- FK anti-join: "<base> without <sub>" -------------------
-        wm = _WITHOUT_RE.search(question.lower())
-        if wm:
-            base_w, sub_w = wm.groups()
-
-            def resolve_table(word: str) -> str | None:
-                for cand_t in self.metadata.tables:
-                    if cand_t.rstrip("s") == word.rstrip("s") or partial_ratio(
-                        cand_t, word
-                    ) >= 90.0:
-                        return cand_t
-                return None
-
-            base_t, sub_t = resolve_table(base_w), resolve_table(sub_w)
-            if base_t and sub_t and base_t != sub_t:
-                rel_edge = next(
-                    (
-                        r
-                        for r in self.metadata.relationships
-                        if r.from_table == sub_t and r.to_table == base_t
-                    ),
-                    None,
-                )
-                if rel_edge is not None:
-                    bcols = [c.name for c in self._cols(base_t)][:5]
-                    sql = (
-                        f"SELECT {', '.join(bcols)} FROM {base_t} "
-                        f"WHERE NOT EXISTS (SELECT 1 FROM {sub_t} "
-                        f"WHERE {sub_t}.{rel_edge.from_column} = "
-                        f"{base_t}.{rel_edge.to_column}) "
-                        f"ORDER BY {bcols[0]} LIMIT {limit_n or 100}"
-                    )
-                    out.append(Candidate(sql, "template_anti_join", 0.8))
-
-        # --- "top N <group> by <func> <measure>" ranked aggregate ----
-        tm = _TOPN_GROUP_RE.search(question.lower())
-        if tm:
-            n_top, g_phrase, f_word, m_phrase = tm.groups()
-            func2 = _FUNC_WORDS[f_word]
-            # the group phrase can name an ENTITY TABLE ("top 5 parts
-            # by average retailprice"): own-table measure → entity-level
-            # sort (each row is its own group); measure one FK hop away
-            # → grouped aggregate over the join ("top 5 nations by
-            # average acctbal")
-            ent_t5 = self._entity_table(g_phrase)
-            if ent_t5 is not None:
-                m6 = self._best_numeric_column(ent_t5, m_phrase.strip())
-                if m6 is not None:
-                    # PK-grain aggregate: semantically the entity sort
-                    # (one row per entity) but SHAPED as the aggregate
-                    # the question names, so the S4 semantic gate's
-                    # asked-aggregate check passes
-                    cols5 = [c.name for c in self._cols(ent_t5)]
-                    pk5 = next(
-                        (
-                            c.name
-                            for c in self._cols(ent_t5)
-                            if c.is_primary_key
-                        ),
-                        cols5[0],
-                    )
-                    label5 = next(
-                        (c for c in cols5 if c not in (pk5, m6)), pk5
-                    )
-                    if func2 == "AVG":
-                        expr6, alias6 = f"ROUND(AVG({m6}), 4)", f"avg_{m6}"
-                    elif func2 == "SUM":
-                        expr6, alias6 = f"ROUND(SUM({m6}), 2)", f"sum_{m6}"
-                    else:
-                        expr6 = f"{func2}({m6})"
-                        alias6 = f"{func2.lower()}_{m6}"
-                    sql = (
-                        f"SELECT {pk5}, {label5}, {expr6} AS {alias6} "
-                        f"FROM {ent_t5} GROUP BY {pk5}, {label5} "
-                        f"ORDER BY {alias6} DESC, {pk5} LIMIT {int(n_top)}"
-                    )
-                    out.append(
-                        Candidate(sql, "template_topn_entity", 0.8)
-                    )
-                else:
-                    best_e = None
-                    for cand_t in self.metadata.tables:
-                        if cand_t == ent_t5:
-                            continue
-                        mc7 = self._best_numeric_column(
-                            cand_t, m_phrase.strip()
-                        )
-                        if mc7 is None:
-                            continue
-                        p7 = self._fk_path(cand_t, ent_t5, max_hops=2)
-                        if p7 is None:
-                            continue
-                        msc7 = partial_ratio(mc7, m_phrase)
-                        if best_e is None or msc7 > best_e[0]:
-                            best_e = (msc7, cand_t, mc7, p7)
-                    ge = group_column_scored(
-                        ent_t5, g_phrase, numeric=False
-                    )
-                    if best_e is not None and ge is not None:
-                        _s7, m_tbl, m7, p7 = best_e
-                        if func2 == "AVG":
-                            expr7 = f"ROUND(AVG({m7}), 4)"
-                            alias7 = f"avg_{m7}"
-                        elif func2 == "SUM":
-                            expr7 = f"ROUND(SUM({m7}), 2)"
-                            alias7 = f"sum_{m7}"
-                        else:
-                            expr7 = f"{func2}({m7})"
-                            alias7 = f"{func2.lower()}_{m7}"
-                        joins7 = " ".join(
-                            f"JOIN {tb} ON {ta}.{ca} = {tb}.{cb}"
-                            for ta, ca, tb, cb in p7
-                        )
-                        # compose measure-table predicates ("top 5
-                        # courses by average score in 2024" filters the
-                        # fact rows before ranking)
-                        conds7 = (
-                            [
-                                f"{c} = '{v.replace(chr(39), chr(39)*2)}'"
-                                for c, v in self._extract_filters(
-                                    m_tbl, question, exclude={m7}
-                                )
-                            ]
-                            + self._extract_year_filters(m_tbl, question)
-                        )
-                        where7 = (
-                            f" WHERE {' AND '.join(conds7)}" if conds7 else ""
-                        )
-                        sql = (
-                            f"SELECT {ge[0]}, {expr7} AS {alias7} "
-                            f"FROM {m_tbl} {joins7}{where7} "
-                            f"GROUP BY {ge[0]} "
-                            f"ORDER BY {alias7} DESC, {ge[0]} "
-                            f"LIMIT {int(n_top)}"
-                        )
-                        out.append(
-                            Candidate(sql, "template_topn_entity", 0.8)
-                        )
-            best_fit = None  # (score, table, g, m)
-            for cand_t in self.metadata.tables:
-                gsc = group_column_scored(cand_t, g_phrase)
-                if gsc is None:
-                    continue
-                m2 = self._best_numeric_column(cand_t, m_phrase.strip())
-                if m2 is None or m2 == gsc[0]:
-                    continue
-                msc = partial_ratio(m2, m_phrase)
-                fit = gsc[1] + msc
-                if best_fit is None or fit > best_fit[0]:
-                    best_fit = (fit, cand_t, gsc[0], m2)
-            if best_fit is not None:
-                _fit, t2, g2, m2 = best_fit
-                if func2 == "AVG":
-                    expr2, alias2 = f"ROUND(AVG({m2}), 4)", f"avg_{m2}"
-                elif func2 == "SUM":
-                    expr2, alias2 = f"ROUND(SUM({m2}), 2)", f"sum_{m2}"
-                else:
-                    expr2, alias2 = f"{func2}({m2})", f"{func2.lower()}_{m2}"
-                sql = (
-                    f"SELECT {g2}, {expr2} AS {alias2} FROM {t2} "
-                    f"GROUP BY {g2} ORDER BY {alias2} DESC, {g2} "
-                    f"LIMIT {int(n_top)}"
-                )
-                # 0.8 cap-tie convention: generated before every
-                # fallback, so it wins the tie at 1.0
-                out.append(Candidate(sql, "template_topn_grouped", 0.8))
-
-        # --- "top N <dim>s by number of <entity>s" ranked count ------
-        tcm = _TOPN_COUNT_RE.search(question.lower())
-        if tcm:
-            n_top, dim_w, ent_w = tcm.groups()
-            ent_t = next(
-                (
-                    c_t
-                    for c_t in self.metadata.tables
-                    if c_t.rstrip("s") == ent_w.rstrip("s")
-                    or partial_ratio(c_t, ent_w) >= 90.0
-                ),
-                None,
-            )
-            dim_t = next(
-                (
-                    c_t
-                    for c_t in self.metadata.tables
-                    if c_t.rstrip("s") == dim_w.rstrip("s")
-                    or partial_ratio(c_t, dim_w) >= 90.0
-                ),
-                None,
-            )
-            if ent_t is not None and dim_t is not None and ent_t != dim_t:
-                gd = group_column_scored(dim_t, dim_w, numeric=False)
-                path_tc = self._fk_path(ent_t, dim_t, max_hops=2)
-                if gd is not None and path_tc:
-                    joins_tc = " ".join(
-                        f"JOIN {tb} ON {ta}.{ca} = {tb}.{cb}"
-                        for ta, ca, tb, cb in path_tc
-                    )
-                    sql = (
-                        f"SELECT {gd[0]}, COUNT(*) AS n_{ent_t} "
-                        f"FROM {ent_t} {joins_tc} GROUP BY {gd[0]} "
-                        f"ORDER BY n_{ent_t} DESC, {gd[0]} "
-                        f"LIMIT {int(n_top)}"
-                    )
-                    out.append(Candidate(sql, "template_topn_count", 0.8))
-
-        # --- "which <group> has the most/fewest <rows>" superlative --
-        sm = _SUPERLATIVE_RE.search(question.lower())
-        if sm:
-            g_phrase, direction = sm.groups()
-            gsc = group_column_scored(
-                t, g_phrase, preferred=relevant.get(t)
-            )
-            if gsc is not None:
-                order = "DESC" if direction == "most" else "ASC"
-                sql = (
-                    f"SELECT {gsc[0]}, COUNT(*) AS cnt FROM {t} "
-                    f"GROUP BY {gsc[0]} ORDER BY cnt {order}, {gsc[0]} "
-                    f"LIMIT 1"
-                )
-                out.append(Candidate(sql, "template_superlative", 0.8))
-
-        # --- "lowest 5 orders by totalprice" bottom-N listing --------
-        bm = _BOTTOM_N_RE.search(question.lower())
-        if bm:
-            _word, n_b, ent_w, m_word = bm.groups()
-            ent_t = next(
-                (
-                    c_t
-                    for c_t in self.metadata.tables
-                    if c_t.rstrip("s") == ent_w.rstrip("s")
-                    or partial_ratio(c_t, ent_w) >= 90.0
-                ),
-                None,
-            )
-            if ent_t is not None:
-                mb = self._best_numeric_column(ent_t, m_word)
-                if mb is not None:
-                    cols_b = [c.name for c in self._cols(ent_t)][:5]
-                    sql = (
-                        f"SELECT {', '.join(cols_b)} FROM {ent_t} "
-                        f"ORDER BY {mb}, {cols_b[0]} LIMIT {int(n_b)}"
-                    )
-                    out.append(Candidate(sql, "template_bottom_n", 0.8))
-
-        # --- "<entity> with <m> greater than the average <m>" (B15) --
-        scm = _SCALAR_CMP_RE.search(question.lower())
-        if scm:
-            m_w1, dir_w, m_w2 = scm.groups()
-            # entity before 'with' anchors the table; fall back to t
-            ent_m = re.search(r"\b([a-z_]+?)s?\s+with\b", question.lower())
-            t_s = (
-                self._entity_table(ent_m.group(1)) if ent_m else None
-            ) or t
-            m1 = self._best_numeric_column(t_s, m_w1)
-            m2s = self._best_numeric_column(t_s, m_w2)
-            if m1 is not None and m2s is not None:
-                op_s = ">" if dir_w in ("greater", "more", "higher", "larger") else "<"
-                cols_s = [c.name for c in self._cols(t_s)][:5]
-                sql = (
-                    f"SELECT {', '.join(cols_s)} FROM {t_s} "
-                    f"WHERE {m1} {op_s} (SELECT AVG({m2s}) FROM {t_s}) "
-                    f"ORDER BY {cols_s[0]} LIMIT {limit_n or 100}"
-                )
-                out.append(Candidate(sql, "template_scalar_subquery", 0.8))
-
-        # --- "customers or suppliers named like mall" (B14 UNION) ----
-        um = _UNION_NAMED_RE.search(question.lower())
-        if um:
-            w_a, w_b, tok = um.groups()
-            t_a, t_b = self._entity_table(w_a), self._entity_table(w_b)
-            if t_a and t_b and t_a != t_b:
-                n_a = best_column(t_a, "name", numeric=False)
-                n_b = best_column(t_b, "name", numeric=False)
-                if n_a and n_b:
-                    sql = (
-                        f"SELECT {n_a} AS name FROM {t_a} "
-                        f"WHERE {n_a} ILIKE '%{tok}%' "
-                        f"UNION "
-                        f"SELECT {n_b} AS name FROM {t_b} "
-                        f"WHERE {n_b} ILIKE '%{tok}%' "
-                        f"ORDER BY name LIMIT {limit_n or 100}"
-                    )
-                    out.append(Candidate(sql, "template_union_named", 0.8))
-
-        # --- "rank orders by totalprice descending" (B10 RANK) -------
-        rm = _RANK_RE.search(question.lower())
-        if rm and QueryIntent.RANKING in analysis.all_intents:
-            ent_w8, m_w8, desc8 = rm.groups()
-            t_r = self._entity_table(ent_w8) or t
-            m8 = self._best_numeric_column(t_r, m_w8)
-            if m8 is not None:
-                d8 = " DESC" if (desc8 or analysis.sort_desc) else ""
-                cols_r = [c.name for c in self._cols(t_r)][:4]
-                sql = (
-                    f"SELECT {', '.join(cols_r)}, "
-                    f"RANK() OVER (ORDER BY {m8}{d8}) AS rnk "
-                    f"FROM {t_r} "
-                    f"ORDER BY rnk, {cols_r[0]} LIMIT {limit_n or 100}"
-                )
-                out.append(Candidate(sql, "template_rank", 0.8))
-
-        # --- "which nation has the highest average acctbal": the
-        # superlative measure may live one FK hop from the entity -----
-        sam = _SUPERLATIVE_AGG_RE.search(question.lower())
-        if sam:
-            ent_w, dir_word, f_word, m_word = sam.groups()
-            direction = "DESC" if dir_word in ("highest", "largest") else "ASC"
-            func4 = (
-                _FUNC_WORDS[f_word]
-                if f_word
-                else ("MAX" if direction == "DESC" else "MIN")
-            )
-            ent_t = next(
-                (
-                    c_t
-                    for c_t in self.metadata.tables
-                    if c_t.rstrip("s") == ent_w.rstrip("s")
-                    or partial_ratio(c_t, ent_w) >= 90.0
-                ),
-                None,
-            )
-            if ent_t is None:
-                # the entity names a COLUMN, not a table ("which
-                # orderpriority has the highest average totalprice"):
-                # pick the table where BOTH the group word and the
-                # measure word resolve
-                best_c = None
-                for cand_t in self.metadata.tables:
-                    gc6 = group_column_scored(
-                        cand_t, ent_w, numeric=False
-                    )
-                    mc6 = self._best_numeric_column(cand_t, m_word)
-                    if gc6 is None or mc6 is None:
-                        continue
-                    if partial_ratio(gc6[0], ent_w) < 70.0:
-                        continue
-                    fit6 = gc6[1] + partial_ratio(mc6, m_word)
-                    if best_c is None or fit6 > best_c[0]:
-                        best_c = (fit6, cand_t)
-                if best_c is not None:
-                    ent_t = best_c[1]
-            if ent_t is not None:
-                gsc5 = group_column_scored(
-                    ent_t, ent_w, numeric=False
-                )
-                m5 = self._best_numeric_column(ent_t, m_word)
-                m_t = ent_t
-                path5: list | None = []
-                if m5 is None:
-                    # the measure lives elsewhere — find the table whose
-                    # numeric column matches, reachable over the FK graph
-                    best_m = None
-                    for cand_t in self.metadata.tables:
-                        if cand_t == ent_t:
-                            continue
-                        mc = self._best_numeric_column(cand_t, m_word)
-                        if mc is None:
-                            continue
-                        p5 = self._fk_path(cand_t, ent_t, max_hops=2)
-                        if p5 is None:
-                            continue
-                        msc5 = partial_ratio(mc, m_word)
-                        if best_m is None or msc5 > best_m[0]:
-                            best_m = (msc5, cand_t, mc, p5)
-                    if best_m is not None:
-                        _s5, m_t, m5, path5 = best_m
-                if gsc5 is not None and m5 is not None:
-                    if func4 == "AVG":
-                        expr5 = f"ROUND(AVG({m5}), 4)"
-                        alias5 = f"avg_{m5}"
-                    elif func4 == "SUM":
-                        expr5 = f"ROUND(SUM({m5}), 2)"
-                        alias5 = f"sum_{m5}"
-                    else:
-                        expr5 = f"{func4}({m5})"
-                        alias5 = f"{func4.lower()}_{m5}"
-                    joins5 = " ".join(
-                        f"JOIN {tb} ON {ta}.{ca} = {tb}.{cb}"
-                        for ta, ca, tb, cb in (path5 or [])
-                    )
-                    frm = f"{m_t} {joins5}".strip()
-                    sql = (
-                        f"SELECT {gsc5[0]}, {expr5} AS {alias5} "
-                        f"FROM {frm} GROUP BY {gsc5[0]} "
-                        f"ORDER BY {alias5} {direction}, {gsc5[0]} LIMIT 1"
-                    )
-                    out.append(
-                        Candidate(sql, "template_superlative_agg", 0.8)
-                    )
-
-        # --- HAVING tier 1: "<groups> with more than N <entity>s" ----
-        hm = _HAVING_COUNT_RE.search(question.lower())
-        if hm:
-            g_phrase, op_word, n_str, ent_w = hm.groups()
-            op = _HAVING_OPS[op_word]
-            ent_t = next(
-                (
-                    c_t
-                    for c_t in self.metadata.tables
-                    if c_t.rstrip("s") == ent_w.rstrip("s")
-                    or partial_ratio(c_t, ent_w) >= 90.0
-                ),
-                None,
-            )
-            if ent_t is not None:
-                conds_h = [
-                    f"{c} = '{v.replace(chr(39), chr(39) * 2)}'"
-                    for c, v in self._extract_filters(ent_t, question)
-                ]
-                where_h = (
-                    " WHERE " + " AND ".join(conds_h) if conds_h else ""
-                )
-                # same-table grouping first ("priorities with … orders"
-                # groups orders itself)...
-                gsc = group_column_scored(ent_t, g_phrase)
-                best_dim = None  # (score, dim_t, dim_col, join path)
-                # ...but a DIMENSION whose group column matches the
-                # phrase better wins ("nations with … customers" must
-                # group by nation.n_name through the FK, not by a
-                # customer column)
-                for cand_t in self.metadata.tables:
-                    if cand_t == ent_t:
-                        continue
-                    dsc = group_column_scored(
-                        cand_t, g_phrase, numeric=False
-                    )
-                    if dsc is None:
-                        continue
-                    if partial_ratio(cand_t, g_phrase) < 70.0:
-                        continue  # the phrase must name the dimension
-                    path = self._fk_path(ent_t, cand_t, max_hops=2)
-                    if path is None:
-                        continue
-                    if best_dim is None or dsc[1] > best_dim[0]:
-                        best_dim = (dsc[1], cand_t, dsc[0], path)
-                if best_dim is not None:
-                    _s, dim_t, dim_c, path = best_dim
-                    joins = " ".join(
-                        f"JOIN {tb} ON {ta}.{ca} = {tb}.{cb}"
-                        for ta, ca, tb, cb in path
-                    )
-                    sql = (
-                        f"SELECT {dim_c}, COUNT(*) AS n_{ent_t} "
-                        f"FROM {ent_t} {joins}{where_h} "
-                        f"GROUP BY {dim_c} "
-                        f"HAVING COUNT(*) {op} {int(n_str)} "
-                        f"ORDER BY {dim_c}"
-                    )
-                    out.append(Candidate(sql, "template_having_count", 0.8))
-                elif gsc is not None:
-                    sql = (
-                        f"SELECT {gsc[0]}, COUNT(*) AS n_{ent_t} "
-                        f"FROM {ent_t}{where_h} GROUP BY {gsc[0]} "
-                        f"HAVING COUNT(*) {op} {int(n_str)} "
-                        f"ORDER BY {gsc[0]}"
-                    )
-                    out.append(Candidate(sql, "template_having_count", 0.8))
-
-        # --- bare entity + calendar grain ("orders per week"): no agg
-        # keyword, but the grain implies a count rollup — without this
-        # the listing fallback emits ungrouped SQL that S4 rightly
-        # rejects (question asks grouping, SQL has none)
-        grain0 = _temporal_grain(question)
-        if grain0 is not None and analysis.agg_func is None:
-            dcol0 = self._date_column(t, question)
-            if dcol0 is not None:
-                if grain0 == "week":
-                    key_expr0 = (
-                        f"date_format(date_trunc('week', {dcol0}), "
-                        f"'yyyy-MM-dd')"
-                    )
-                else:
-                    fmt0 = {"month": "yyyy-MM", "year": "yyyy",
-                            "day": "yyyy-MM-dd"}[grain0]
-                    key_expr0 = f"date_format({dcol0}, '{fmt0}')"
-                sql = (
-                    f"SELECT {key_expr0} AS {grain0}_key, "
-                    f"COUNT(*) AS cnt FROM {t} "
-                    f"GROUP BY {grain0}_key ORDER BY {grain0}_key"
-                )
-                out.append(Candidate(sql, "template_time_count", 0.75))
-
-        # --- calendar-trend tier: "month over month change" → LAG over
-        # a calendar rollup; "running/cumulative total" → SUM OVER the
-        # rollup. Both compile to a window OVER an aggregate — a
-        # compositional shape none of the single-layer templates emit
-        # (the reference's DATE_TIME intent, query_intent.py:183-195,
-        # only ever detected the grain; it never generated trend SQL).
-        ql = question.lower()
-        tm = re.search(
-            r"\b(month|week|year|day) over \1\b"
-            r"|\bchange (?:from|vs|versus|over) (?:the )?previous "
-            r"(month|week|year|day)\b",
-            ql,
+        t = (em and self._entity_table(em.group(1).rstrip("s"), among=tables)) or tables[0]
+        ev = Evidence(
+            eng=self,
+            question=question,
+            ql=question.lower(),
+            analysis=analysis,
+            relevant=relevant,
+            t=t,
+            all_cols=[c.name for c in self._cols(t)],
+            limit_n=analysis.limit_n,
+            best_column=partial(self._best_column, scores=col_scores),
+            group_column=partial(self._group_column, scores=col_scores),
+            group_scored=partial(self._group_column_scored, scores=col_scores),
         )
-        rt = re.search(r"\b(?:running|cumulative)\s+(?:total|sum|count)\b", ql)
-        if tm or rt:
-            grain_t = (
-                (tm.group(1) or tm.group(2)) if tm else _temporal_grain(ql)
-            )
-            dcol_t = self._date_column(t, question) if grain_t else None
-            if grain_t and dcol_t:
-                if grain_t == "week":
-                    key_t = (
-                        f"date_format(date_trunc('week', {dcol_t}), "
-                        f"'yyyy-MM-dd')"
-                    )
-                else:
-                    fmt_t = {"month": "yyyy-MM", "year": "yyyy",
-                             "day": "yyyy-MM-dd"}[grain_t]
-                    key_t = f"date_format({dcol_t}, '{fmt_t}')"
-                m_t = self._best_numeric_column(t, question)
-                if analysis.agg_func == "COUNT" or m_t is None:
-                    inner_agg, total_sel = "COUNT(*)", "total"
-                else:
-                    inner_agg = f"{analysis.agg_func or 'SUM'}({m_t})"
-                    total_sel = "ROUND(total, 2) AS total"
-                inner = (
-                    f"SELECT {key_t} AS {grain_t}_key, {inner_agg} AS total "
-                    f"FROM {t} GROUP BY {grain_t}_key"
-                )
-                if tm:
-                    sql = (
-                        f"SELECT {grain_t}_key, {total_sel}, "
-                        f"ROUND(total - LAG(total) OVER "
-                        f"(ORDER BY {grain_t}_key), 2) AS delta "
-                        f"FROM ({inner}) ORDER BY {grain_t}_key"
-                    )
-                    out.append(Candidate(sql, "template_time_trend", 0.85))
-                else:
-                    sql = (
-                        f"SELECT {grain_t}_key, {total_sel}, "
-                        f"ROUND(SUM(total) OVER (ORDER BY {grain_t}_key "
-                        f"ROWS UNBOUNDED PRECEDING), 2) AS running_total "
-                        f"FROM ({inner}) ORDER BY {grain_t}_key"
-                    )
-                    out.append(
-                        Candidate(sql, "template_time_cumulative", 0.85)
-                    )
-
-        # --- histogram tier: "histogram/distribution of <m> in buckets
-        # of N" → equi-width floor-division buckets labeled by their
-        # lower bound (the SQL twin of NL2Doc's $bucket tier). One
-        # aggregate, map-side combine; the bucket id is a codegen
-        # projection, never a join against a boundary table.
-        hm = re.search(
-            r"\b(?:histogram|distribution) of (\w+)\b.*?"
-            r"\b(?:buckets|bins|steps) of (\d+)\b",
-            ql,
-        )
-        if hm:
-            m_word, width_s = hm.groups()
-            m_h = self._best_numeric_column(t, m_word)
-            width = int(width_s)
-            if m_h is not None and width > 0:
-                sql = (
-                    f"SELECT CAST(FLOOR({m_h} / {width}) * {width} AS BIGINT)"
-                    f" AS bucket_lo, COUNT(*) AS cnt "
-                    f"FROM {t} GROUP BY bucket_lo ORDER BY bucket_lo"
-                )
-                out.append(Candidate(sql, "template_histogram", 0.85))
-
-        # --- equi-depth tier: "decile/quintile/quartile (breakdown/
-        # distribution) of <m>" → NTILE over a PK-tie-pinned order
-        # (the q153 shape from NL; equi-DEPTH complements the
-        # equi-width histogram tier above). The tiebreak uses the
-        # crawled primary key so both engines assign identical tiles.
-        dm = re.search(
-            r"\b(decile|quintile|quartile)s?\b"
-            r"(?: breakdown| distribution)? of (\w+)\b",
-            ql,
-        )
-        if dm:
-            tile_word, m_word = dm.groups()
-            n_tiles = {"decile": 10, "quintile": 5, "quartile": 4}[tile_word]
-            m_d = self._best_numeric_column(t, m_word)
-            pk = self.metadata.tables[t].primary_key
-            if m_d is not None and pk:
-                order = f"{m_d}, {pk[0]}"
-                sql = (
-                    f"SELECT tile, COUNT(*) AS cnt, "
-                    f"MIN({m_d}) AS lo, MAX({m_d}) AS hi "
-                    f"FROM (SELECT {m_d}, NTILE({n_tiles}) OVER "
-                    f"(ORDER BY {order}) AS tile FROM {t}) "
-                    f"GROUP BY tile ORDER BY tile"
-                )
-                out.append(Candidate(sql, "template_equidepth", 0.85))
-
-        # --- HAVING tier 2: "<groups> with avg <measure> above N" ----
-        am = _HAVING_AGG_RE.search(question.lower())
-        if am:
-            g_phrase, f_word, m_word, op_word, n_str = am.groups()
-            func3 = _FUNC_WORDS[f_word]
-            op = _HAVING_OPS[op_word]
-            best_fit = None  # (score, table, g, m)
-            for cand_t in self.metadata.tables:
-                m3 = self._best_numeric_column(cand_t, m_word)
-                if m3 is None:
-                    continue
-                msc = partial_ratio(m3, m_word)
-                if msc < 70.0:
-                    continue  # the measure must really match a column
-                gsc3 = group_column_scored(
-                    cand_t, g_phrase, exclude=m3
-                )
-                if gsc3 is None:
-                    continue
-                fit = gsc3[1] + msc
-                if best_fit is None or fit > best_fit[0]:
-                    best_fit = (fit, cand_t, gsc3[0], m3)
-            if best_fit is not None:
-                _f, t3, g3, m3 = best_fit
-                if func3 == "AVG":
-                    expr3, alias3 = f"ROUND(AVG({m3}), 4)", f"avg_{m3}"
-                elif func3 == "SUM":
-                    expr3, alias3 = f"ROUND(SUM({m3}), 2)", f"sum_{m3}"
-                else:
-                    expr3, alias3 = f"{func3}({m3})", f"{func3.lower()}_{m3}"
-                sql = (
-                    f"SELECT {g3}, {expr3} AS {alias3} FROM {t3} "
-                    f"GROUP BY {g3} "
-                    f"HAVING {func3}({m3}) {op} {n_str} "
-                    f"ORDER BY {g3}"
-                )
-                out.append(Candidate(sql, "template_having_agg", 0.8))
-
-        # --- COUNT(DISTINCT c) — "count of distinct X" asks for the
-        # cardinality, not the value list
-        if (
-            analysis.agg_func == "COUNT"
-            and QueryIntent.DISTINCT in analysis.all_intents
-        ):
-            c0 = best_column(t, question, preferred=relevant.get(t))
-            if c0 is not None:
-                sql = (
-                    f"SELECT COUNT(DISTINCT {c0}) AS n_distinct_{c0} FROM {t}"
-                )
-                out.append(Candidate(sql, "template_count_distinct", 0.8))
-
-        # --- grouped aggregation: SELECT g, F(c) FROM t GROUP BY g ---
-        if analysis.agg_func and (
-            QueryIntent.GROUPED_AGGREGATION in analysis.all_intents
-            or QueryIntent.AGGREGATION in analysis.all_intents
-        ):
-            # measure first, THEN the group key excluding the measure —
-            # "max acctbal per nation" must not GROUP BY the measure
-            func = analysis.agg_func
-            measure = None
-            if func == "COUNT":
-                expr, alias = "COUNT(*)", "cnt"
-            else:
-                c = best_column(t, question, numeric=True, preferred=relevant.get(t))
-                if c is None:
-                    expr, alias = "COUNT(*)", "cnt"
-                    func = "COUNT"
-                else:
-                    measure = c
-                    if func == "AVG":
-                        expr, alias = f"ROUND(AVG({c}), 4)", f"avg_{c}"
-                    elif func == "SUM":
-                        expr, alias = f"ROUND(SUM({c}), 2)", f"sum_{c}"
-                    else:
-                        expr, alias = f"{func}({c})", f"{func.lower()}_{c}"
-            g = (
-                group_column(
-                    t, question, preferred=relevant.get(t), exclude=measure
-                )
-                if QueryIntent.GROUPED_AGGREGATION in analysis.all_intents
-                else None
-            )
-            # --- domain-grounded equality filters ("orderstatus F",
-            # "urgent orders") shared by every aggregate variant below
-            conds = (
-                [
-                    f"{c} = '{v.replace(chr(39), chr(39) * 2)}'"
-                    for c, v in self._extract_filters(
-                        t, question, exclude={measure} if measure else None
-                    )
-                ]
-                + self._extract_numeric_filters(t, question)
-                + self._extract_year_filters(t, question)
-                + self._extract_like_filters(t, question)
-                + self._extract_null_filters(t, question)
-            )
-            where = " WHERE " + " AND ".join(conds) if conds else ""
-
-            # --- temporal grouping: "per month"/"yearly"/... means a
-            # calendar grain, not a categorical column — truncate the
-            # best date column (the reference's DATE_TIME intent,
-            # query_intent.py:183-195, never generated the GROUP BY)
-            grain = _temporal_grain(question)
-            if grain is not None:
-                dcol = self._date_column(t, question)
-                if dcol is not None:
-                    key = f"{grain}_key"
-                    if grain == "week":
-                        key_expr = (
-                            f"date_format(date_trunc('week', {dcol}), "
-                            f"'yyyy-MM-dd')"
-                        )
-                    else:
-                        fmt = {"month": "yyyy-MM", "year": "yyyy",
-                               "day": "yyyy-MM-dd"}[grain]
-                        key_expr = f"date_format({dcol}, '{fmt}')"
-                    sql = (
-                        f"SELECT {key_expr} AS {key}, "
-                        f"{expr} AS {alias} FROM {t}{where} "
-                        f"GROUP BY {key} ORDER BY {key}"
-                    )
-                    if limit_n:
-                        sql += f" LIMIT {limit_n}"
-                    out.append(Candidate(sql, "template_time_grouped_agg", 0.8))
-
-            # --- FK-join grouped agg: the group phrase resolves to a
-            # DIFFERENT relevant table reachable over the crawled FK
-            # graph ("count of customers per region name" → customer
-            # JOIN nation JOIN region GROUP BY r_name). Only outranks
-            # the single-table template when the foreign group column
-            # scores strictly higher than any local candidate.
-            join_cand = None
-            if QueryIntent.GROUPED_AGGREGATION in analysis.all_intents:
-                pm_loc = _PER_PHRASE_RE.search(question.lower())
-                local = group_column_scored(
-                    t,
-                    pm_loc.group(1) if pm_loc else question,
-                    preferred=relevant.get(t),
-                    exclude=measure,
-                )
-                pm2 = _PER_PHRASE_RE.search(question.lower())
-                group_text = pm2.group(1) if pm2 else question
-                g_tokens = set(re.findall(r"[a-z_]+", group_text))
-                # a calendar-grain group phrase ("per month") belongs to
-                # the temporal template — never a dimension join
-                if grain is not None and group_text.split()[:1] in (
-                    ["month"], ["year"], ["day"], ["week"],
-                ):
-                    g_tokens = set()
-                    group_text = ""
-                q_tokens = set(re.findall(r"[a-z_]+", question.lower()))
-                # the base table gets the SAME name-affinity bonus when
-                # the question names it ("max acctbal per nation IN
-                # CUSTOMER" must stay local to customer)
-                local_bonus = (
-                    50.0
-                    if (t in q_tokens or t.rstrip("s") in q_tokens
-                        or f"{t}s" in q_tokens)
-                    else 0.0
-                )
-                if local is not None:
-                    local = (local[0], local[1] + local_bonus)
-                for other in (tables if group_text else []):
-                    if other == t:
-                        continue
-                    path = self._fk_path(t, other)
-                    if not path:
-                        continue
-                    # dimension keys are non-numeric by construction;
-                    # a numeric foreign column is a measure, not a key.
-                    # Score against the GROUP PHRASE ("per customer
-                    # name"), not the whole question — other question
-                    # words must not pull in an unrelated dimension —
-                    # and a phrase that NAMES the table ("per customer
-                    # name") is decisive evidence for that table's
-                    # column over a same-fuzzy column elsewhere
-                    scored = group_column_scored(
-                        other,
-                        group_text,
-                        preferred=relevant.get(other),
-                        numeric=False,
-                    )
-                    if scored is None:
-                        continue
-                    tbonus = (
-                        50.0
-                        if (
-                            other in g_tokens
-                            or other.rstrip("s") in g_tokens
-                            or f"{other}s" in g_tokens
-                        )
-                        else 0.0
-                    )
-                    score2 = scored[1] + tbonus
-                    if join_cand is None or score2 > join_cand[1]:
-                        join_cand = (scored[0], score2, other, path)
-                # the join only fires on CLEAR foreign evidence — a
-                # near-tie must not turn a one-table question into a
-                # two-table plan
-                if join_cand is not None and (
-                    local is not None and join_cand[1] <= local[1] + 10.0
-                ):
-                    join_cand = None
-            if join_cand is not None:
-                g2, _s, other, path = join_cand
-                joins = " ".join(
-                    f"JOIN {b} ON {a}.{ca} = {b}.{cb}" for a, ca, b, cb in path
-                )
-                sql = (
-                    f"SELECT {other}.{g2} AS {g2}, {expr} AS {alias} "
-                    f"FROM {t} {joins}{where} GROUP BY {other}.{g2}"
-                )
-                if QueryIntent.SORTED in analysis.all_intents:
-                    sql += f" ORDER BY {alias}" + (" DESC" if analysis.sort_desc else "")
-                else:
-                    sql += f" ORDER BY {g2}"
-                if limit_n:
-                    sql += f" LIMIT {limit_n}"
-                out.append(Candidate(sql, "template_join_grouped_agg", 0.78))
-
-            # --- multiple aggregate functions in one question ("count
-            # of orders AND average totalprice per X") — the intent
-            # layer carries a single agg_func, so without this branch
-            # the second ask is dropped and S4 rejects every candidate
-            if g:
-                hits = [
-                    (m.start(), fn)
-                    for pat, fn in _AGG_KEYWORDS
-                    for m in [re.search(pat, question.lower())]
-                    if m
-                ]
-                funcs = [fn for _pos, fn in sorted(hits)]
-                if len(funcs) >= 2:
-                    # re-anchor check: the pruner ranks tables by WHOLE-
-                    # question affinity, which can pick a table whose
-                    # columns match other words; the (group, measure)
-                    # pair must fit TOGETHER ("min and max acctbal per
-                    # mktsegment" belongs to customer even when the
-                    # pruner ranked events first)
-                    t_m, g_m = t, g
-                    pm3 = _PER_PHRASE_RE.search(question.lower())
-                    if pm3:
-                        best4 = None
-                        for cand_t in self.metadata.tables:
-                            m4 = self._best_numeric_column(cand_t, question)
-                            if m4 is None:
-                                continue
-                            gsc4 = group_column_scored(
-                                cand_t, pm3.group(1), exclude=m4
-                            )
-                            if gsc4 is None:
-                                continue
-                            fit = gsc4[1] + partial_ratio(m4, question)
-                            if best4 is None or fit > best4[0]:
-                                best4 = (fit, cand_t, gsc4[0], m4)
-                        if best4 is not None and best4[1] != t:
-                            local_m = best_column(
-                                t, question, numeric=True,
-                                preferred=relevant.get(t),
-                            )
-                            lg = group_column_scored(
-                                t, pm3.group(1), exclude=local_m
-                            )
-                            local_fit = (lg[1] if lg else 0.0) + (
-                                partial_ratio(local_m, question)
-                                if local_m
-                                else 0.0
-                            )
-                            # decisive-margin rule, as the FK-join
-                            # template: a near-tie stays local
-                            if best4[0] > local_fit + 20.0:
-                                t_m, g_m = best4[1], best4[2]
-                    mcol = best_column(
-                        t_m, question, numeric=True,
-                        preferred=relevant.get(t_m),
-                    )
-                    sel: list[str] = []
-                    for fn2 in funcs:
-                        if fn2 == "COUNT":
-                            sel.append("COUNT(*) AS cnt")
-                        elif mcol is not None and mcol != g_m:
-                            if fn2 == "AVG":
-                                sel.append(f"ROUND(AVG({mcol}), 4) AS avg_{mcol}")
-                            elif fn2 == "SUM":
-                                sel.append(f"ROUND(SUM({mcol}), 2) AS sum_{mcol}")
-                            else:
-                                sel.append(
-                                    f"{fn2}({mcol}) AS {fn2.lower()}_{mcol}"
-                                )
-                    if len(sel) >= 2:
-                        where_m = where
-                        if t_m != t:
-                            conds_m = (
-                                [
-                                    f"{c} = '{v.replace(chr(39), chr(39) * 2)}'"
-                                    for c, v in self._extract_filters(
-                                        t_m, question,
-                                        exclude={mcol} if mcol else None,
-                                    )
-                                ]
-                                + self._extract_numeric_filters(t_m, question)
-                                + self._extract_year_filters(t_m, question)
-                                + self._extract_like_filters(t_m, question)
-                            )
-                            where_m = (
-                                " WHERE " + " AND ".join(conds_m)
-                                if conds_m
-                                else ""
-                            )
-                        sql = (
-                            f"SELECT {g_m}, {', '.join(sel)} "
-                            f"FROM {t_m}{where_m} "
-                            f"GROUP BY {g_m} ORDER BY {g_m}"
-                        )
-                        if limit_n:
-                            sql += f" LIMIT {limit_n}"
-                        # 0.8: the every-ask-answered candidate must
-                        # outrank the single-agg template (0.75), which
-                        # S4 rejects anyway when the question names two
-                        out.append(
-                            Candidate(sql, "template_multi_agg", 0.8)
-                        )
-
-            # --- compound group phrase: "per X and Y" groups on BOTH
-            # resolved keys (the reference's intent layer saw only one)
-            if QueryIntent.GROUPED_AGGREGATION in analysis.all_intents:
-                pm = _PER_PHRASE_RE.search(question.lower())
-                if pm and " and " in pm.group(1):
-                    parts = [p.strip() for p in pm.group(1).split(" and ")]
-                    keys: list[str] | None = []
-                    for part in parts:
-                        gc = group_column(
-                            t, part, preferred=relevant.get(t), exclude=measure
-                        )
-                        if gc is None or gc in (keys or []):
-                            keys = None
-                            break
-                        keys.append(gc)
-                    if keys and len(keys) >= 2:
-                        klist = ", ".join(keys)
-                        sql = (
-                            f"SELECT {klist}, {expr} AS {alias} FROM {t}"
-                            f"{where} GROUP BY {klist} ORDER BY {klist}"
-                        )
-                        if limit_n:
-                            sql += f" LIMIT {limit_n}"
-                        # 0.8: must outrank the single-key template (0.75)
-                        # whose group column only captures ONE of the
-                        # asked-for keys
-                        out.append(
-                            Candidate(sql, "template_multi_grouped_agg", 0.8)
-                        )
-
-            # the single-table variants stay in the ladder as fallbacks
-            # below the join candidate's 0.78
-            if g:
-                sql = f"SELECT {g}, {expr} AS {alias} FROM {t}{where} GROUP BY {g}"
-                if QueryIntent.SORTED in analysis.all_intents:
-                    sql += f" ORDER BY {alias}" + (" DESC" if analysis.sort_desc else "")
-                else:
-                    sql += f" ORDER BY {g}"
-                if limit_n:
-                    sql += f" LIMIT {limit_n}"
-                out.append(Candidate(sql, "template_grouped_agg", 0.75))
-            elif join_cand is None:
-                sql = f"SELECT {expr} AS {alias} FROM {t}{where}"
-                out.append(Candidate(sql, "template_global_agg", 0.7))
-
-        # --- window function: rows alongside partitioned aggregate ---
-        if QueryIntent.WINDOW_FUNCTION in analysis.all_intents and analysis.agg_func:
-            c = best_column(t, question, numeric=True, preferred=relevant.get(t))
-            # exclude the measure from the partition-key pick — the
-            # fuzzy-best group otherwise IS the measure ("average
-            # acctbal per nation" scored acctbal highest for both)
-            g = group_column(
-                t, question, preferred=relevant.get(t), exclude=c
-            )
-            if g and c and g != c:
-                sql = (
-                    f"SELECT {', '.join(all_cols[:4])}, "
-                    f"ROUND({analysis.agg_func}({c}) OVER (PARTITION BY {g}), 4) "
-                    f"AS {analysis.agg_func.lower()}_{c}_per_{g} FROM {t} "
-                    f"ORDER BY {all_cols[0]}"
-                )
-                out.append(
-                    Candidate(
-                        sql,
-                        "template_window",
-                        # "along with" = the WINDOW surface is the ask;
-                        # as a secondary hint it stays under grouped agg
-                        0.85
-                        if analysis.intent == QueryIntent.WINDOW_FUNCTION
-                        else 0.7,
-                    )
-                )
-
-        # --- distinct values ---
-        if QueryIntent.DISTINCT in analysis.all_intents:
-            c = best_column(t, question, numeric=False, preferred=relevant.get(t)) or all_cols[0]
-            sql = f"SELECT DISTINCT {c} FROM {t} ORDER BY {c}"
-            out.append(Candidate(sql, "template_distinct", 0.7))
-
-        # --- ranking / sorted top-N ---
-        if (
-            QueryIntent.RANKING in analysis.all_intents
-            or QueryIntent.SORTED in analysis.all_intents
-        ) and analysis.intent not in (QueryIntent.GROUPED_AGGREGATION,):
-            ql = question.lower()
-            recency = (
-                "desc"
-                if any(w in ql for w in _RECENCY_DESC)
-                else "asc"
-                if any(w in ql for w in _RECENCY_ASC)
-                else None
-            )
-            if recency is not None:
-                # "most recent orders" sorts on the date column; the
-                # numeric-best pick would order by a surrogate key
-                c = self._date_column(t, question) or best_column(
-                    t, question, numeric=True, preferred=relevant.get(t)
-                )
-            else:
-                c = best_column(
-                    t, question, numeric=True, preferred=relevant.get(t)
-                )
-            eff_limit = limit_n
-            if eff_limit is None:
-                nm = _RECENCY_N_RE.search(ql)
-                if nm:
-                    eff_limit = int(nm.group(1))
-            if c:
-                direction = (
-                    " DESC"
-                    if (recency == "desc" or (recency is None and analysis.sort_desc))
-                    else ""
-                )
-                sql = (
-                    f"SELECT {', '.join(all_cols[:5])} FROM {t}"
-                    f" ORDER BY {c}{direction}, {all_cols[0]}"
-                    f" LIMIT {eff_limit or 100}"
-                )
-                # an explicit "top N" is a stronger signal than the
-                # generic FK-join fallback, whose rank self-inflates by
-                # +0.1 per table it itself joins — 0.8 ties it at the
-                # cap and wins on candidate order (intent templates are
-                # generated before fallbacks)
-                out.append(
-                    Candidate(
-                        sql,
-                        "template_sorted",
-                        # explicit bound or recency phrasing both beat
-                        # the self-inflating join fallback (cap-tie)
-                        0.8 if (eff_limit or recency) else 0.6,
-                    )
-                )
-
-        # --- CASE-bucket grouped count: "categorize orders as big or
-        # small with totalprice over 150000" → CASE WHEN threshold
-        # buckets + per-bucket counts. Threshold comes from the
-        # question's own comparator when present; otherwise the corpus
-        # mean via a scalar subquery ("above average" phrasing). 0.85 so
-        # the compiled CASE outranks the 0.8 filtered listing the same
-        # comparator evidence would also produce.
-        cm = _CASE_BUCKET_RE.search(question.lower())
-        if cm and QueryIntent.CONDITIONAL in analysis.all_intents:
-            ent_w, lab_hi, lab_lo = cm.groups()
-            case_t = self._entity_table(ent_w) or t
-            cexpr = None
-            for word, cmp_word, num in _CMP_RE.findall(question.lower()):
-                ccol = self._best_numeric_column(case_t, word)
-                if ccol is not None:
-                    cexpr = (
-                        f"CASE WHEN {ccol} {_CMP_OPS[cmp_word]} "
-                        f"{num.replace(',', '')} THEN '{lab_hi}' "
-                        f"ELSE '{lab_lo}' END"
-                    )
-                    break
-            if cexpr is None:
-                ccol = self._best_numeric_column(case_t, question)
-                if ccol is not None:
-                    cexpr = (
-                        f"CASE WHEN {ccol} >= (SELECT AVG({ccol}) FROM "
-                        f"{case_t}) THEN '{lab_hi}' ELSE '{lab_lo}' END"
-                    )
-            if cexpr is not None:
-                sql = (
-                    f"SELECT category, COUNT(*) AS cnt FROM "
-                    f"(SELECT {cexpr} AS category FROM {case_t}) "
-                    f"AS bucketed GROUP BY category ORDER BY category"
-                )
-                out.append(Candidate(sql, "template_case_bucket", 0.85))
-
-        # --- entity listing with fact-table predicates: "list students
-        # who received a C with score above 75" — the head entity (t)
-        # carries no predicate evidence itself, but an FK-linked
-        # relevant table does; compile the reference's own demo shape
-        # (README.md:168-179 gold): entity PK + label joined to the
-        # predicate table's detail columns. 0.9 pre-rank so the +0.3
-        # two-table/JOIN rank boost can't let the generic join fallback
-        # tie it.
-        if analysis.intent not in (
-            QueryIntent.AGGREGATION,
-            QueryIntent.GROUPED_AGGREGATION,
-        ):
-            t_cols = {c.name for c in self._cols(t)}
-            t_own_conds = (
-                self._extract_filters(t, question)
-                or self._extract_numeric_filters(t, question)
-                or self._extract_year_filters(t, question)
-                or self._extract_like_filters(t, question)
-                or self._extract_null_filters(t, question)
-            )
-            for ft in tables[1:] if not t_own_conds else []:
-                edge = next(
-                    (
-                        r
-                        for r in self.metadata.relationships
-                        if r.from_table == ft and r.to_table == t
-                    ),
-                    None,
-                )
-                if edge is None:
-                    continue
-                ft_conds = (
-                    [
-                        f"{c} = '{v.replace(chr(39), chr(39) * 2)}'"
-                        for c, v in self._extract_filters(ft, question)
-                    ]
-                    + self._extract_numeric_filters(ft, question)
-                    + self._extract_year_filters(ft, question)
-                    + self._extract_like_filters(ft, question)
-                    + self._extract_null_filters(ft, question)
-                )
-                # unqualified predicates must be unambiguous post-join
-                if not ft_conds or any(
-                    cond.split()[0] in t_cols for cond in ft_conds
-                ):
-                    continue
-                ecols = [c.name for c in self._cols(t)]
-                pk_e = next(
-                    (c.name for c in self._cols(t) if c.is_primary_key),
-                    ecols[0],
-                )
-                label_e = next(
-                    (
-                        c.name
-                        for c in self._cols(t)
-                        if c.name != pk_e
-                        and "string" in c.type_str.lower()
-                    ),
-                    None,
-                )
-                proj = [f"{t}.{pk_e}"] + (
-                    [f"{t}.{label_e}"] if label_e else []
-                ) + [
-                    f"{ft}.{c.name}"
-                    for c in self._cols(ft)
-                    if c.name != edge.from_column
-                ]
-                sql = (
-                    f"SELECT {', '.join(proj)} FROM {ft} "
-                    f"JOIN {t} ON {ft}.{edge.from_column} = "
-                    f"{t}.{edge.to_column} "
-                    f"WHERE {' AND '.join(ft_conds)} "
-                    f"ORDER BY {t}.{pk_e} LIMIT {limit_n or 100}"
-                )
-                out.append(Candidate(sql, "template_entity_join_listing", 0.9))
-                break
-
-        # --- filtered listing: extracted predicate evidence without an
-        # aggregate intent compiles to a WHERE'd projection (PK-ordered
-        # for a deterministic result set)
-        if analysis.intent not in (
-            QueryIntent.AGGREGATION,
-            QueryIntent.GROUPED_AGGREGATION,
-        ):
-            conds = (
-                [
-                    f"{c} = '{v.replace(chr(39), chr(39) * 2)}'"
-                    for c, v in self._extract_filters(t, question)
-                ]
-                + self._extract_numeric_filters(t, question)
-                + self._extract_year_filters(t, question)
-                + self._extract_like_filters(t, question)
-                + self._extract_null_filters(t, question)
-            )
-            if conds:
-                sql = (
-                    f"SELECT {', '.join(all_cols[:5])} FROM {t}"
-                    f" WHERE {' AND '.join(conds)}"
-                    f" ORDER BY {all_cols[0]} LIMIT {limit_n or 100}"
-                )
-                # 0.8: the template_sorted convention — predicate
-                # evidence must outrank the FK-join fallback, whose
-                # rank() self-inflates +0.1 per table + 0.1 for JOIN;
-                # at the 1.0 cap ties break on generation order
-                out.append(Candidate(sql, "template_filtered_select", 0.8))
-
-        # --- reference parity templates (inference.py:215-246) ---
-        cols5 = ", ".join(all_cols[:5])
-        out.append(Candidate(f"SELECT {cols5} FROM {t} LIMIT 100", "template", 0.5))
-        if len(tables) >= 2 and self.metadata.relationships:
-            for rel in self.metadata.relationships:
-                if rel.from_table in tables and rel.to_table in tables:
-                    sql = (
-                        f"SELECT * FROM {rel.from_table} f "
-                        f"JOIN {rel.to_table} t ON f.{rel.from_column} = t.{rel.to_column} "
-                        f"LIMIT 100"
-                    )
-                    out.append(Candidate(sql, "template_join", 0.6))
-                    break
-        return out
+        return [
+            Candidate(sql, method, conf)
+            for method, rule in TEMPLATE_RULES
+            for sql, conf in rule(ev)
+        ]
 
     def llm_candidates(
         self, question: str, analysis: IntentAnalysis, relevant: dict[str, list[str]]
@@ -2200,6 +1028,20 @@ class NL2SQLEngine:
             for sql in parse_llm_candidates(resp, MAX_LLM_CANDIDATES)
         ]
 
+    # Rank inflation, which the CONF_* levels are set against. Every
+    # candidate gains +0.1 for each linked table its SQL names and +0.1
+    # when it contains a JOIN, capped at 1.0; the sort is stable, so
+    # equal scores keep generation order (LLM candidates first, then
+    # TEMPLATE_RULES order). The FK-join fallback names two linked
+    # tables and joins them, so it inflates itself from CONF_WEAK (0.6)
+    # to 0.9. A one-table intent template at CONF_INTENT (0.8) reaches
+    # the same 0.9 and wins the tie because intent rules come before the
+    # fallback; two-table intent templates meet it at the cap. The
+    # entity-join listing starts at CONF_ENTITY_JOIN (0.9) for the same
+    # reason: its own two tables and JOIN take it to the cap, where the
+    # fallback cannot pass it. The FK-join grouped aggregate (0.78) ranks
+    # above the single-table grouped aggregate (0.75), which stays in
+    # the ladder as its fallback.
     def rank(self, candidates: list[Candidate], relevant: dict[str, list[str]]) -> list[Candidate]:
         """Confidence heuristics port (inference.py:283-313): +0.1 per
         relevant table referenced, +0.1 for JOIN, sort desc. Returns
@@ -2310,6 +1152,1085 @@ class NL2SQLEngine:
                 return res
             last = res
         return last or ExecutionResult(ok=False, sql="", error="no candidates generated")
+
+
+# ---------------- the template tier: an ordered rule table ----------------
+# (sql, confidence) pairs: what one rule emits for one question
+Emitted = list[tuple[str, float]]
+
+
+@dataclass(frozen=True)
+class Evidence:
+    """What the template rules know about one question: the question
+    as asked and lower-cased, its intent analysis and linked slice, the
+    anchor table ``t`` (the counted entity's table when the question
+    names one, else the first linked table), its columns, the asked
+    row bound and the column helpers bound to this question's linker
+    scores. Derived facts that several rules share are computed once,
+    on first use."""
+
+    eng: NL2SQLEngine
+    question: str
+    ql: str
+    analysis: IntentAnalysis
+    relevant: dict[str, list[str]]
+    t: str
+    all_cols: list[str]
+    limit_n: int | None
+    best_column: Callable[..., str | None]
+    group_column: Callable[..., str | None]
+    group_scored: Callable[..., tuple[str, float] | None]
+
+    @property
+    def tables(self) -> list[str]:
+        return list(self.relevant)
+
+    def has(self, intent: QueryIntent) -> bool:
+        return intent in self.analysis.all_intents
+
+    @property
+    def aggregate_ask(self) -> bool:
+        """The primary intent is an aggregate: the listing rules stay out."""
+        return self.analysis.intent in (
+            QueryIntent.AGGREGATION, QueryIntent.GROUPED_AGGREGATION,
+        )
+
+    @cached_property
+    def predicates(self) -> list[str]:
+        """Every predicate the question grounds on the anchor table."""
+        return self.eng._predicates(self.t, self.question)
+
+    @cached_property
+    def agg(self) -> _AggPlan | None:
+        return _agg_plan(self)
+
+
+@dataclass(frozen=True)
+class _AggPlan:
+    """The decisions the grouped-aggregation rules share: the measure
+    (picked first, so the group key can exclude it — "max acctbal per
+    nation" must not GROUP BY the measure), its aggregate expression,
+    the single-table group key, the WHERE clause, the calendar grain
+    and the FK-join group key as (column, score, table, path)."""
+
+    expr: str
+    alias: str
+    measure: str | None
+    group: str | None
+    where: str
+    grain: str | None
+    join: tuple | None
+
+
+def _agg_plan(ev: Evidence) -> _AggPlan | None:
+    a = ev.analysis
+    grouped = ev.has(QueryIntent.GROUPED_AGGREGATION)
+    if not a.agg_func or not (grouped or ev.has(QueryIntent.AGGREGATION)):
+        return None
+    preferred = ev.relevant.get(ev.t)
+    measure = None
+    if a.agg_func != "COUNT":
+        measure = ev.best_column(ev.t, ev.question, numeric=True, preferred=preferred)
+    expr, alias = _agg_expr(a.agg_func if measure else "COUNT", measure)
+    group = (
+        ev.group_column(ev.t, ev.question, preferred=preferred, exclude=measure)
+        if grouped
+        else None
+    )
+    where = _where(ev.eng._predicates(ev.t, ev.question, exclude={measure}))
+    grain = _temporal_grain(ev.question)
+    join = _join_group(ev, measure, grain) if grouped else None
+    return _AggPlan(expr, alias, measure, group, where, grain, join)
+
+
+def _join_group(ev: Evidence, measure: str | None, grain: str | None) -> tuple | None:
+    """The FK-join group key: the group phrase resolves to a DIFFERENT
+    linked table reachable over the crawled FK graph ("count of
+    customers per region name" → customer JOIN nation JOIN region
+    GROUP BY r_name). Only on clear foreign evidence: the foreign
+    column must beat the best local one by more than 10 points, so a
+    near-tie never turns a one-table question into a two-table plan."""
+    t = ev.t
+    pm = _PER_PHRASE_RE.search(ev.ql)
+    group_text = pm.group(1) if pm else ev.question
+    local = ev.group_scored(t, group_text, preferred=ev.relevant.get(t), exclude=measure)
+    g_tokens = set(re.findall(r"[a-z_]+", group_text))
+    # a calendar-grain group phrase ("per month") belongs to the
+    # temporal rule — never a dimension join
+    if grain is not None and group_text.split()[:1] in (
+        ["month"], ["year"], ["day"], ["week"],
+    ):
+        g_tokens = set()
+        group_text = ""
+    # the base table gets the SAME name-affinity bonus when the question
+    # names it ("max acctbal per nation IN CUSTOMER" must stay local)
+    if local is not None and _names_table(t, set(re.findall(r"[a-z_]+", ev.ql))):
+        local = (local[0], local[1] + 50.0)
+    best = None
+    for other in ev.tables if group_text else []:
+        if other == t:
+            continue
+        path = ev.eng._fk_path(t, other)
+        if not path:
+            continue
+        # dimension keys are non-numeric by construction, and are scored
+        # against the GROUP PHRASE only, so other question words cannot
+        # pull in an unrelated dimension; a phrase that NAMES the table
+        # ("per customer name") is decisive evidence for its column
+        scored = ev.group_scored(
+            other, group_text, preferred=ev.relevant.get(other), numeric=False
+        )
+        if scored is None:
+            continue
+        score = scored[1] + (50.0 if _names_table(other, g_tokens) else 0.0)
+        if best is None or score > best[1]:
+            best = (scored[0], score, other, path)
+    if best is not None and local is not None and best[1] <= local[1] + 10.0:
+        return None
+    return best
+
+
+def _dimension_group(ev: Evidence, base: str, phrase: str) -> tuple | None:
+    """The categorical column of a DIMENSION table that ``phrase`` names
+    (table-name affinity ≥ 70) and that ``base`` reaches in at most two
+    FK hops, best group score first: (table, column, path from
+    ``base``), or None ("share of customers per nation name" groups by
+    nation.n_name, not by a customer column)."""
+    best = None
+    for cand_t in ev.eng.metadata.tables:
+        if cand_t == base or partial_ratio(cand_t, phrase) < 70.0:
+            continue
+        scored = ev.group_scored(cand_t, phrase, numeric=False)
+        if scored is None:
+            continue
+        path = ev.eng._fk_path(base, cand_t, max_hops=2)
+        if path is None:
+            continue
+        if best is None or scored[1] > best[0]:
+            best = (scored[1], cand_t, scored[0], path)
+    return best and best[1:]
+
+
+def _agg_order(ev: Evidence, alias: str, key: str) -> str:
+    """A sort-intent aggregate orders on its value, any other on its key."""
+    if ev.has(QueryIntent.SORTED):
+        return f" ORDER BY {alias}" + (" DESC" if ev.analysis.sort_desc else "")
+    return f" ORDER BY {key}"
+
+
+def _facet_breakdown(ev: Evidence) -> Emitted:
+    """"break down orders by status and by priority": each 'by <word>'
+    resolves to a categorical column; N facets compile to ONE
+    grouping-sets pass (one scan + one shuffle, the q118 lattice — the
+    SQL twin of NL2Doc's $facet tier)."""
+    if not _BREAKDOWN_RE.search(ev.ql):
+        return []
+    keys: list[str] = []
+    for w in _BY_WORD_RE.findall(ev.ql):
+        sc = ev.group_scored(ev.t, w, numeric=False)
+        if sc is not None and sc[0] not in keys:
+            keys.append(sc[0])
+    if len(keys) < 2:
+        return []
+    facet_case = "CASE " + " ".join(
+        f"WHEN GROUPING({k}) = 0 THEN 'by_{k}'" for k in keys
+    ) + " END"
+    coal = ", ".join(f"CAST({k} AS STRING)" for k in keys)
+    sets = ", ".join(f"({k})" for k in keys)
+    sql = (
+        f"SELECT {facet_case} AS facet, "
+        f"COALESCE({coal}) AS grp, COUNT(*) AS n "
+        f"FROM {ev.t} GROUP BY GROUPING SETS ({sets}) "
+        f"ORDER BY facet, grp"
+    )
+    return [(sql, CONF_SHAPE)]
+
+
+def _predicate_ratio(ev: Evidence) -> Emitted:
+    """"what percentage of orders are urgent": a percent cue with NO
+    'per <g>' breakdown and exactly one domain-grounded value compiles
+    to an ungrouped CASE ratio (the question asks ONE number about ONE
+    predicate)."""
+    if not _PERCENT_RE.search(ev.ql) or _PER_PHRASE_RE.search(ev.ql):
+        return []
+    flt = ev.eng._extract_filters(ev.t, ev.question)
+    if len(flt) != 1:
+        return []
+    fc, fv = flt[0]
+    hit = f"CASE WHEN {fc} = {_sql_str(fv)} THEN 1 ELSE 0 END"
+    sql = (
+        f"SELECT COUNT(*) AS n_total, "
+        f"SUM({hit}) AS n_match, "
+        f"CAST(ROUND(100.0 * SUM({hit}) / COUNT(*), 4) "
+        f"AS DOUBLE) AS pct FROM {ev.t}"
+    )
+    return [(sql, CONF_SHAPE)]
+
+
+def _pct_of_total(ev: Evidence) -> Emitted:
+    """"percentage of orders per orderstatus": share-of-total per group,
+    grouped by a dimension up to two FK hops away when the 'per' phrase
+    names one, and by a local column as well."""
+    if not _PERCENT_RE.search(ev.ql):
+        return []
+
+    def share(g: str, frm: str) -> str:
+        # CAST to DOUBLE: ANSI decimal literal arithmetic would type pct
+        # as DECIMAL(..,4) and serialize '33.9200'
+        return (
+            f"SELECT {g}, COUNT(*) AS cnt, "
+            f"CAST(ROUND(100.0 * COUNT(*) / SUM(COUNT(*)) OVER (), 4)"
+            f" AS DOUBLE) AS pct FROM {frm} "
+            f"GROUP BY {g} ORDER BY {g}"
+        )
+
+    out = []
+    pmp = _PER_PHRASE_RE.search(ev.ql)
+    dim = _dimension_group(ev, ev.t, pmp.group(1)) if pmp else None
+    if dim is not None:
+        _dim_t, dim_c, path = dim
+        out.append((share(dim_c, f"{ev.t} {_join_path_sql(path)}"), CONF_INTENT))
+    g0 = ev.group_column(ev.t, ev.question, preferred=ev.relevant.get(ev.t))
+    if g0 is not None:
+        # a "<col> over <n>" / "before <year>" phrase narrows BOTH the
+        # numerator and the denominator: share within the filtered set
+        where = _where(ev.eng._share_comparison_filters(ev.t, ev.question))
+        out.append((share(g0, f"{ev.t}{where}"), CONF_INTENT))
+    return out
+
+
+def _anti_join(ev: Evidence) -> Emitted:
+    """"customers without orders": FK anti-join (NOT EXISTS)."""
+    wm = _WITHOUT_RE.search(ev.ql)
+    if not wm:
+        return []
+    base_t, sub_t = (ev.eng._entity_table(w) for w in wm.groups())
+    if not (base_t and sub_t and base_t != sub_t):
+        return []
+    edge = next(
+        (r for r in ev.eng.metadata.relationships
+         if r.from_table == sub_t and r.to_table == base_t),
+        None,
+    )
+    if edge is None:
+        return []
+    bcols = [c.name for c in ev.eng._cols(base_t)][:5]
+    sql = (
+        f"SELECT {', '.join(bcols)} FROM {base_t} "
+        f"WHERE NOT EXISTS (SELECT 1 FROM {sub_t} "
+        f"WHERE {sub_t}.{edge.from_column} = "
+        f"{base_t}.{edge.to_column}) "
+        f"ORDER BY {bcols[0]} LIMIT {ev.limit_n or 100}"
+    )
+    return [(sql, CONF_INTENT)]
+
+
+def _topn_entity(ev: Evidence) -> Emitted:
+    """"top 5 parts by average retailprice": the group phrase names an
+    ENTITY TABLE. An own-table measure compiles to a PK-grain aggregate
+    (the entity sort, shaped as the aggregate the question names so the
+    semantic gate's asked-aggregate check passes); a measure up to two
+    FK hops away to a grouped aggregate over the join, with the measure
+    table's predicates ("top 5 courses by average score in 2024")."""
+    tm = _TOPN_GROUP_RE.search(ev.ql)
+    if not tm:
+        return []
+    n_top, g_phrase, f_word, m_phrase = tm.groups()
+    func = _FUNC_WORDS[f_word]
+    eng = ev.eng
+    ent = eng._entity_table(g_phrase)
+    if ent is None:
+        return []
+    m = eng._best_numeric_column(ent, m_phrase.strip())
+    if m is not None:
+        cols = [c.name for c in eng._cols(ent)]
+        pk = next((c.name for c in eng._cols(ent) if c.is_primary_key), cols[0])
+        label = next((c for c in cols if c not in (pk, m)), pk)
+        expr, alias = _agg_expr(func, m)
+        sql = (
+            f"SELECT {pk}, {label}, {expr} AS {alias} "
+            f"FROM {ent} GROUP BY {pk}, {label} "
+            f"ORDER BY {alias} DESC, {pk} LIMIT {int(n_top)}"
+        )
+        return [(sql, CONF_INTENT)]
+    remote = eng._remote_measure(ent, m_phrase)
+    g = ev.group_scored(ent, g_phrase, numeric=False)
+    if remote is None or g is None:
+        return []
+    m_tbl, m, path = remote
+    expr, alias = _agg_expr(func, m)
+    where = _where(
+        eng._equality_predicates(m_tbl, ev.question, exclude={m})
+        + eng._extract_year_filters(m_tbl, ev.question)
+    )
+    sql = (
+        f"SELECT {g[0]}, {expr} AS {alias} "
+        f"FROM {m_tbl} {_join_path_sql(path)}{where} "
+        f"GROUP BY {g[0]} "
+        f"ORDER BY {alias} DESC, {g[0]} "
+        f"LIMIT {int(n_top)}"
+    )
+    return [(sql, CONF_INTENT)]
+
+
+def _topn_grouped(ev: Evidence) -> Emitted:
+    """"top 3 mktsegments by average acctbal": the ranked grouped
+    aggregate re-links over EVERY crawled table on the (group, measure)
+    pair's joint fit — the fuzzy table pruner can misfire on plural
+    group words."""
+    tm = _TOPN_GROUP_RE.search(ev.ql)
+    if not tm:
+        return []
+    n_top, g_phrase, f_word, m_phrase = tm.groups()
+    best = None  # (fit, table, group, measure)
+    for cand_t in ev.eng.metadata.tables:
+        gsc = ev.group_scored(cand_t, g_phrase)
+        if gsc is None:
+            continue
+        m = ev.eng._best_numeric_column(cand_t, m_phrase.strip())
+        if m is None or m == gsc[0]:
+            continue
+        fit = gsc[1] + partial_ratio(m, m_phrase)
+        if best is None or fit > best[0]:
+            best = (fit, cand_t, gsc[0], m)
+    if best is None:
+        return []
+    _fit, t2, g, m = best
+    expr, alias = _agg_expr(_FUNC_WORDS[f_word], m)
+    sql = (
+        f"SELECT {g}, {expr} AS {alias} FROM {t2} "
+        f"GROUP BY {g} ORDER BY {alias} DESC, {g} "
+        f"LIMIT {int(n_top)}"
+    )
+    return [(sql, CONF_INTENT)]
+
+
+def _topn_count(ev: Evidence) -> Emitted:
+    """"top 3 nations by number of customers": a ranked row count
+    through the FK graph."""
+    tcm = _TOPN_COUNT_RE.search(ev.ql)
+    if not tcm:
+        return []
+    n_top, dim_w, ent_w = tcm.groups()
+    ent_t, dim_t = ev.eng._entity_table(ent_w), ev.eng._entity_table(dim_w)
+    if ent_t is None or dim_t is None or ent_t == dim_t:
+        return []
+    gd = ev.group_scored(dim_t, dim_w, numeric=False)
+    path = ev.eng._fk_path(ent_t, dim_t, max_hops=2)
+    if gd is None or not path:
+        return []
+    sql = (
+        f"SELECT {gd[0]}, COUNT(*) AS n_{ent_t} "
+        f"FROM {ent_t} {_join_path_sql(path)} GROUP BY {gd[0]} "
+        f"ORDER BY n_{ent_t} DESC, {gd[0]} "
+        f"LIMIT {int(n_top)}"
+    )
+    return [(sql, CONF_INTENT)]
+
+
+def _superlative(ev: Evidence) -> Emitted:
+    """"which orderpriority has the most orders"."""
+    sm = _SUPERLATIVE_RE.search(ev.ql)
+    if not sm:
+        return []
+    g_phrase, direction = sm.groups()
+    gsc = ev.group_scored(ev.t, g_phrase, preferred=ev.relevant.get(ev.t))
+    if gsc is None:
+        return []
+    order = "DESC" if direction == "most" else "ASC"
+    sql = (
+        f"SELECT {gsc[0]}, COUNT(*) AS cnt FROM {ev.t} "
+        f"GROUP BY {gsc[0]} ORDER BY cnt {order}, {gsc[0]} "
+        f"LIMIT 1"
+    )
+    return [(sql, CONF_INTENT)]
+
+
+def _bottom_n(ev: Evidence) -> Emitted:
+    """"lowest 5 orders by totalprice": bottom-N entity listing."""
+    bm = _BOTTOM_N_RE.search(ev.ql)
+    if not bm:
+        return []
+    _word, n_b, ent_w, m_word = bm.groups()
+    ent_t = ev.eng._entity_table(ent_w)
+    m = ev.eng._best_numeric_column(ent_t, m_word) if ent_t else None
+    if m is None:
+        return []
+    cols = [c.name for c in ev.eng._cols(ent_t)][:5]
+    sql = (
+        f"SELECT {', '.join(cols)} FROM {ent_t} "
+        f"ORDER BY {m}, {cols[0]} LIMIT {int(n_b)}"
+    )
+    return [(sql, CONF_INTENT)]
+
+
+def _scalar_subquery(ev: Evidence) -> Emitted:
+    """"orders with totalprice greater than the average totalprice"
+    (B15): the entity before 'with' anchors the table, else ``t``."""
+    scm = _SCALAR_CMP_RE.search(ev.ql)
+    if not scm:
+        return []
+    m_w1, dir_w, m_w2 = scm.groups()
+    ent_m = _ENTITY_WITH_RE.search(ev.ql)
+    t_s = (ev.eng._entity_table(ent_m.group(1)) if ent_m else None) or ev.t
+    m1 = ev.eng._best_numeric_column(t_s, m_w1)
+    m2 = ev.eng._best_numeric_column(t_s, m_w2)
+    if m1 is None or m2 is None:
+        return []
+    op = ">" if dir_w in ("greater", "more", "higher", "larger") else "<"
+    cols = [c.name for c in ev.eng._cols(t_s)][:5]
+    sql = (
+        f"SELECT {', '.join(cols)} FROM {t_s} "
+        f"WHERE {m1} {op} (SELECT AVG({m2}) FROM {t_s}) "
+        f"ORDER BY {cols[0]} LIMIT {ev.limit_n or 100}"
+    )
+    return [(sql, CONF_INTENT)]
+
+
+def _union_named(ev: Evidence) -> Emitted:
+    """"customers or suppliers named like mall" (B14 UNION)."""
+    um = _UNION_NAMED_RE.search(ev.ql)
+    if not um:
+        return []
+    w_a, w_b, tok = um.groups()
+    t_a, t_b = ev.eng._entity_table(w_a), ev.eng._entity_table(w_b)
+    if not (t_a and t_b and t_a != t_b):
+        return []
+    n_a = ev.best_column(t_a, "name", numeric=False)
+    n_b = ev.best_column(t_b, "name", numeric=False)
+    if not (n_a and n_b):
+        return []
+    sql = (
+        f"SELECT {n_a} AS name FROM {t_a} "
+        f"WHERE {n_a} ILIKE '%{tok}%' "
+        f"UNION "
+        f"SELECT {n_b} AS name FROM {t_b} "
+        f"WHERE {n_b} ILIKE '%{tok}%' "
+        f"ORDER BY name LIMIT {ev.limit_n or 100}"
+    )
+    return [(sql, CONF_INTENT)]
+
+
+def _rank(ev: Evidence) -> Emitted:
+    """"rank orders by totalprice descending" (B10 RANK)."""
+    rm = _RANK_RE.search(ev.ql)
+    if not rm or not ev.has(QueryIntent.RANKING):
+        return []
+    ent_w, m_w, desc = rm.groups()
+    t_r = ev.eng._entity_table(ent_w) or ev.t
+    m = ev.eng._best_numeric_column(t_r, m_w)
+    if m is None:
+        return []
+    d = " DESC" if (desc or ev.analysis.sort_desc) else ""
+    cols = [c.name for c in ev.eng._cols(t_r)][:4]
+    sql = (
+        f"SELECT {', '.join(cols)}, "
+        f"RANK() OVER (ORDER BY {m}{d}) AS rnk "
+        f"FROM {t_r} "
+        f"ORDER BY rnk, {cols[0]} LIMIT {ev.limit_n or 100}"
+    )
+    return [(sql, CONF_INTENT)]
+
+
+def _superlative_agg(ev: Evidence) -> Emitted:
+    """"which nation has the highest average acctbal": the measure may
+    live up to two FK hops from the entity; an entity word that names a
+    COLUMN ("which orderpriority has the highest average totalprice")
+    picks the table where both the group word and the measure word
+    resolve."""
+    sam = _SUPERLATIVE_AGG_RE.search(ev.ql)
+    if not sam:
+        return []
+    ent_w, dir_word, f_word, m_word = sam.groups()
+    direction = "DESC" if dir_word in ("highest", "largest") else "ASC"
+    func = (
+        _FUNC_WORDS[f_word] if f_word else ("MAX" if direction == "DESC" else "MIN")
+    )
+    eng = ev.eng
+    ent_t = eng._entity_table(ent_w)
+    if ent_t is None:
+        best = None
+        for cand_t in eng.metadata.tables:
+            gc = ev.group_scored(cand_t, ent_w, numeric=False)
+            mc = eng._best_numeric_column(cand_t, m_word)
+            if gc is None or mc is None or partial_ratio(gc[0], ent_w) < 70.0:
+                continue
+            fit = gc[1] + partial_ratio(mc, m_word)
+            if best is None or fit > best[0]:
+                best = (fit, cand_t)
+        if best is None:
+            return []
+        ent_t = best[1]
+    gsc = ev.group_scored(ent_t, ent_w, numeric=False)
+    m_t, m, path = ent_t, eng._best_numeric_column(ent_t, m_word), []
+    if m is None:
+        m_t, m, path = eng._remote_measure(ent_t, m_word) or (m_t, m, path)
+    if gsc is None or m is None:
+        return []
+    expr, alias = _agg_expr(func, m)
+    frm = f"{m_t} {_join_path_sql(path)}".strip()
+    sql = (
+        f"SELECT {gsc[0]}, {expr} AS {alias} "
+        f"FROM {frm} GROUP BY {gsc[0]} "
+        f"ORDER BY {alias} {direction}, {gsc[0]} LIMIT 1"
+    )
+    return [(sql, CONF_INTENT)]
+
+
+def _having_count(ev: Evidence) -> Emitted:
+    """"<groups> with more than N <entity>s": a count threshold, grouped
+    by a DIMENSION the group phrase names ("nations with … customers"
+    groups by nation.n_name through the FK), else by the entity's own
+    column ("priorities with … orders")."""
+    hm = _HAVING_COUNT_RE.search(ev.ql)
+    if not hm:
+        return []
+    g_phrase, op_word, n_str, ent_w = hm.groups()
+    ent_t = ev.eng._entity_table(ent_w)
+    if ent_t is None:
+        return []
+    dim = _dimension_group(ev, ent_t, g_phrase)
+    if dim is not None:
+        _dim_t, g, path = dim
+        frm = f"{ent_t} {_join_path_sql(path)}"
+    else:
+        gsc = ev.group_scored(ent_t, g_phrase)
+        if gsc is None:
+            return []
+        g, frm = gsc[0], ent_t
+    where = _where(ev.eng._equality_predicates(ent_t, ev.question))
+    sql = (
+        f"SELECT {g}, COUNT(*) AS n_{ent_t} "
+        f"FROM {frm}{where} GROUP BY {g} "
+        f"HAVING COUNT(*) {_HAVING_OPS[op_word]} {int(n_str)} "
+        f"ORDER BY {g}"
+    )
+    return [(sql, CONF_INTENT)]
+
+
+def _time_count(ev: Evidence) -> Emitted:
+    """Bare entity + calendar grain ("orders per week"): no aggregate
+    word, but the grain implies a count rollup (the listing fallback
+    would emit ungrouped SQL the semantic gate rejects)."""
+    grain = _temporal_grain(ev.question)
+    if grain is None or ev.analysis.agg_func is not None:
+        return []
+    dcol = ev.eng._date_column(ev.t, ev.question)
+    if dcol is None:
+        return []
+    sql = (
+        f"SELECT {_grain_key(grain, dcol)} AS {grain}_key, "
+        f"COUNT(*) AS cnt FROM {ev.t} "
+        f"GROUP BY {grain}_key ORDER BY {grain}_key"
+    )
+    return [(sql, CONF_SINGLE_AGG)]
+
+
+def _trend_rollup(ev: Evidence, grain: str | None) -> tuple[str, str] | None:
+    """(calendar rollup subquery, its total column) that the trend rules
+    window over — a compositional shape: the reference's DATE_TIME
+    intent (query_intent.py:183-195) only ever detected the grain."""
+    dcol = ev.eng._date_column(ev.t, ev.question) if grain else None
+    if not (grain and dcol):
+        return None
+    m = ev.eng._best_numeric_column(ev.t, ev.question)
+    if ev.analysis.agg_func == "COUNT" or m is None:
+        inner_agg, total_sel = "COUNT(*)", "total"
+    else:
+        inner_agg = f"{ev.analysis.agg_func or 'SUM'}({m})"
+        total_sel = "ROUND(total, 2) AS total"
+    inner = (
+        f"SELECT {_grain_key(grain, dcol)} AS {grain}_key, {inner_agg} AS total "
+        f"FROM {ev.t} GROUP BY {grain}_key"
+    )
+    return inner, total_sel
+
+
+def _time_trend(ev: Evidence) -> Emitted:
+    """"month over month change": LAG over a calendar rollup."""
+    tm = _TREND_RE.search(ev.ql)
+    if not tm:
+        return []
+    grain = tm.group(1) or tm.group(2)
+    rollup = _trend_rollup(ev, grain)
+    if rollup is None:
+        return []
+    inner, total_sel = rollup
+    sql = (
+        f"SELECT {grain}_key, {total_sel}, "
+        f"ROUND(total - LAG(total) OVER "
+        f"(ORDER BY {grain}_key), 2) AS delta "
+        f"FROM ({inner}) ORDER BY {grain}_key"
+    )
+    return [(sql, CONF_SHAPE)]
+
+
+def _time_cumulative(ev: Evidence) -> Emitted:
+    """"running/cumulative total": SUM OVER a calendar rollup (a trend
+    phrasing takes precedence)."""
+    if _TREND_RE.search(ev.ql) or not _RUNNING_RE.search(ev.ql):
+        return []
+    grain = _temporal_grain(ev.ql)
+    rollup = _trend_rollup(ev, grain)
+    if rollup is None:
+        return []
+    inner, total_sel = rollup
+    sql = (
+        f"SELECT {grain}_key, {total_sel}, "
+        f"ROUND(SUM(total) OVER (ORDER BY {grain}_key "
+        f"ROWS UNBOUNDED PRECEDING), 2) AS running_total "
+        f"FROM ({inner}) ORDER BY {grain}_key"
+    )
+    return [(sql, CONF_SHAPE)]
+
+
+def _histogram(ev: Evidence) -> Emitted:
+    """"histogram/distribution of <m> in buckets of N": equi-width
+    floor-division buckets labeled by their lower bound (the SQL twin of
+    NL2Doc's $bucket tier; one aggregate, no boundary-table join)."""
+    hm = _HISTOGRAM_RE.search(ev.ql)
+    if not hm:
+        return []
+    m_word, width_s = hm.groups()
+    m = ev.eng._best_numeric_column(ev.t, m_word)
+    width = int(width_s)
+    if m is None or width <= 0:
+        return []
+    sql = (
+        f"SELECT CAST(FLOOR({m} / {width}) * {width} AS BIGINT)"
+        f" AS bucket_lo, COUNT(*) AS cnt "
+        f"FROM {ev.t} GROUP BY bucket_lo ORDER BY bucket_lo"
+    )
+    return [(sql, CONF_SHAPE)]
+
+
+def _equidepth(ev: Evidence) -> Emitted:
+    """"decile/quintile/quartile (breakdown/distribution) of <m>": NTILE
+    over an order whose ties the crawled primary key breaks, so both
+    engines assign identical tiles (the q153 shape from NL)."""
+    dm = _NTILE_RE.search(ev.ql)
+    if not dm:
+        return []
+    tile_word, m_word = dm.groups()
+    m = ev.eng._best_numeric_column(ev.t, m_word)
+    pk = ev.eng.metadata.tables[ev.t].primary_key
+    if m is None or not pk:
+        return []
+    sql = (
+        f"SELECT tile, COUNT(*) AS cnt, "
+        f"MIN({m}) AS lo, MAX({m}) AS hi "
+        f"FROM (SELECT {m}, NTILE({_NTILES[tile_word]}) OVER "
+        f"(ORDER BY {m}, {pk[0]}) AS tile FROM {ev.t}) "
+        f"GROUP BY tile ORDER BY tile"
+    )
+    return [(sql, CONF_SHAPE)]
+
+
+def _having_agg(ev: Evidence) -> Emitted:
+    """"<groups> with avg <measure> above N": HAVING on an aggregate;
+    the measure must really match a column (≥ 70)."""
+    am = _HAVING_AGG_RE.search(ev.ql)
+    if not am:
+        return []
+    g_phrase, f_word, m_word, op_word, n_str = am.groups()
+    func = _FUNC_WORDS[f_word]
+    best = None  # (fit, table, group, measure)
+    for cand_t in ev.eng.metadata.tables:
+        m = ev.eng._best_numeric_column(cand_t, m_word)
+        if m is None:
+            continue
+        msc = partial_ratio(m, m_word)
+        if msc < 70.0:
+            continue
+        gsc = ev.group_scored(cand_t, g_phrase, exclude=m)
+        if gsc is None:
+            continue
+        fit = gsc[1] + msc
+        if best is None or fit > best[0]:
+            best = (fit, cand_t, gsc[0], m)
+    if best is None:
+        return []
+    _f, t3, g, m = best
+    expr, alias = _agg_expr(func, m)
+    sql = (
+        f"SELECT {g}, {expr} AS {alias} FROM {t3} "
+        f"GROUP BY {g} "
+        f"HAVING {func}({m}) {_HAVING_OPS[op_word]} {n_str} "
+        f"ORDER BY {g}"
+    )
+    return [(sql, CONF_INTENT)]
+
+
+def _count_distinct(ev: Evidence) -> Emitted:
+    """"count of distinct X" asks for the cardinality, not the values."""
+    if ev.analysis.agg_func != "COUNT" or not ev.has(QueryIntent.DISTINCT):
+        return []
+    c = ev.best_column(ev.t, ev.question, preferred=ev.relevant.get(ev.t))
+    if c is None:
+        return []
+    sql = f"SELECT COUNT(DISTINCT {c}) AS n_distinct_{c} FROM {ev.t}"
+    return [(sql, CONF_INTENT)]
+
+
+def _time_grouped_agg(ev: Evidence) -> Emitted:
+    """"per month"/"yearly"/...: a calendar grain, not a categorical
+    column — truncate the best date column (the reference's DATE_TIME
+    intent, query_intent.py:183-195, never generated the GROUP BY)."""
+    p = ev.agg
+    if p is None or p.grain is None:
+        return []
+    dcol = ev.eng._date_column(ev.t, ev.question)
+    if dcol is None:
+        return []
+    key = f"{p.grain}_key"
+    sql = (
+        f"SELECT {_grain_key(p.grain, dcol)} AS {key}, "
+        f"{p.expr} AS {p.alias} FROM {ev.t}{p.where} "
+        f"GROUP BY {key} ORDER BY {key}"
+    ) + _limit(ev.limit_n)
+    return [(sql, CONF_INTENT)]
+
+
+def _join_grouped_agg(ev: Evidence) -> Emitted:
+    """The grouped aggregate over the FK-join group key (:func:`_join_group`)."""
+    p = ev.agg
+    if p is None or p.join is None:
+        return []
+    g, _score, other, path = p.join
+    sql = (
+        f"SELECT {other}.{g} AS {g}, {p.expr} AS {p.alias} "
+        f"FROM {ev.t} {_join_path_sql(path)}{p.where} GROUP BY {other}.{g}"
+    ) + _agg_order(ev, p.alias, g) + _limit(ev.limit_n)
+    return [(sql, CONF_JOIN_AGG)]
+
+
+def _multi_agg(ev: Evidence) -> Emitted:
+    """Several aggregate functions in one question ("count of orders AND
+    average totalprice per X"; the intent layer carries one agg_func).
+    The (group, measure) pair re-anchors on the table where both fit
+    together when that fit beats the local one by more than 20 points
+    ("min and max acctbal per mktsegment" belongs to customer even when
+    the pruner ranked another table first)."""
+    p = ev.agg
+    if p is None or not p.group:
+        return []
+    eng, t, question = ev.eng, ev.t, ev.question
+    hits = [
+        (m.start(), fn)
+        for pat, fn in _AGG_KEYWORDS
+        for m in [re.search(pat, ev.ql)]
+        if m
+    ]
+    funcs = [fn for _pos, fn in sorted(hits)]
+    if len(funcs) < 2:
+        return []
+    t_m, g_m = t, p.group
+    pm = _PER_PHRASE_RE.search(ev.ql)
+    if pm:
+        best = None  # (fit, table, group, measure)
+        for cand_t in eng.metadata.tables:
+            m = eng._best_numeric_column(cand_t, question)
+            if m is None:
+                continue
+            gsc = ev.group_scored(cand_t, pm.group(1), exclude=m)
+            if gsc is None:
+                continue
+            fit = gsc[1] + partial_ratio(m, question)
+            if best is None or fit > best[0]:
+                best = (fit, cand_t, gsc[0], m)
+        if best is not None and best[1] != t:
+            local_m = ev.best_column(
+                t, question, numeric=True, preferred=ev.relevant.get(t)
+            )
+            lg = ev.group_scored(t, pm.group(1), exclude=local_m)
+            local_fit = (lg[1] if lg else 0.0) + (
+                partial_ratio(local_m, question) if local_m else 0.0
+            )
+            if best[0] > local_fit + 20.0:
+                t_m, g_m = best[1], best[2]
+    mcol = ev.best_column(t_m, question, numeric=True, preferred=ev.relevant.get(t_m))
+    sel = [
+        "%s AS %s" % _agg_expr(fn, mcol)
+        for fn in funcs
+        if fn == "COUNT" or (mcol is not None and mcol != g_m)
+    ]
+    if len(sel) < 2:
+        return []
+    where = p.where if t_m == t else _where(
+        eng._predicates(t_m, question, exclude={mcol})
+    )
+    sql = (
+        f"SELECT {g_m}, {', '.join(sel)} "
+        f"FROM {t_m}{where} "
+        f"GROUP BY {g_m} ORDER BY {g_m}"
+    ) + _limit(ev.limit_n)
+    return [(sql, CONF_INTENT)]
+
+
+def _multi_grouped_agg(ev: Evidence) -> Emitted:
+    """"per X and Y" groups on BOTH resolved keys (the reference's intent
+    layer saw only one)."""
+    p = ev.agg
+    if p is None or not ev.has(QueryIntent.GROUPED_AGGREGATION):
+        return []
+    pm = _PER_PHRASE_RE.search(ev.ql)
+    if not pm or " and " not in pm.group(1):
+        return []
+    keys: list[str] = []
+    for part in pm.group(1).split(" and "):
+        gc = ev.group_column(
+            ev.t, part.strip(), preferred=ev.relevant.get(ev.t), exclude=p.measure
+        )
+        if gc is None or gc in keys:
+            return []
+        keys.append(gc)
+    if len(keys) < 2:
+        return []
+    klist = ", ".join(keys)
+    sql = (
+        f"SELECT {klist}, {p.expr} AS {p.alias} FROM {ev.t}"
+        f"{p.where} GROUP BY {klist} ORDER BY {klist}"
+    ) + _limit(ev.limit_n)
+    return [(sql, CONF_INTENT)]
+
+
+def _grouped_agg(ev: Evidence) -> Emitted:
+    """SELECT g, F(c) FROM t GROUP BY g — the single-table variant."""
+    p = ev.agg
+    if p is None or not p.group:
+        return []
+    sql = (
+        f"SELECT {p.group}, {p.expr} AS {p.alias} FROM {ev.t}{p.where} "
+        f"GROUP BY {p.group}"
+    ) + _agg_order(ev, p.alias, p.group) + _limit(ev.limit_n)
+    return [(sql, CONF_SINGLE_AGG)]
+
+
+def _global_agg(ev: Evidence) -> Emitted:
+    """An ungrouped aggregate, when neither group key resolved."""
+    p = ev.agg
+    if p is None or p.group or p.join is not None:
+        return []
+    sql = f"SELECT {p.expr} AS {p.alias} FROM {ev.t}{p.where}"
+    return [(sql, CONF_PLAIN)]
+
+
+def _window(ev: Evidence) -> Emitted:
+    """Rows alongside a partitioned aggregate; the partition key excludes
+    the measure ("average acctbal per nation" scored acctbal highest for
+    both)."""
+    func = ev.analysis.agg_func
+    if not ev.has(QueryIntent.WINDOW_FUNCTION) or not func:
+        return []
+    preferred = ev.relevant.get(ev.t)
+    c = ev.best_column(ev.t, ev.question, numeric=True, preferred=preferred)
+    g = ev.group_column(ev.t, ev.question, preferred=preferred, exclude=c)
+    if not (g and c and g != c):
+        return []
+    sql = (
+        f"SELECT {', '.join(ev.all_cols[:4])}, "
+        f"ROUND({func}({c}) OVER (PARTITION BY {g}), 4) "
+        f"AS {func.lower()}_{c}_per_{g} FROM {ev.t} "
+        f"ORDER BY {ev.all_cols[0]}"
+    )
+    # "along with" = the window is the ask; as a secondary hint it stays
+    # under the grouped aggregate
+    conf = CONF_SHAPE if ev.analysis.intent == QueryIntent.WINDOW_FUNCTION else CONF_PLAIN
+    return [(sql, conf)]
+
+
+def _distinct(ev: Evidence) -> Emitted:
+    if not ev.has(QueryIntent.DISTINCT):
+        return []
+    c = ev.best_column(
+        ev.t, ev.question, numeric=False, preferred=ev.relevant.get(ev.t)
+    ) or ev.all_cols[0]
+    sql = f"SELECT DISTINCT {c} FROM {ev.t} ORDER BY {c}"
+    return [(sql, CONF_PLAIN)]
+
+
+def _sorted(ev: Evidence) -> Emitted:
+    """Ranking / sorted top-N listing. Recency phrasing sorts on the
+    DATE column (the numeric-best pick would order by a surrogate key)
+    and takes an adjacent count ("oldest 3 orders") as the bound."""
+    if not (
+        ev.has(QueryIntent.RANKING) or ev.has(QueryIntent.SORTED)
+    ) or ev.analysis.intent == QueryIntent.GROUPED_AGGREGATION:
+        return []
+    ql = ev.ql
+    recency = (
+        "desc" if any(w in ql for w in _RECENCY_DESC)
+        else "asc" if any(w in ql for w in _RECENCY_ASC)
+        else None
+    )
+    c = (recency and ev.eng._date_column(ev.t, ev.question)) or ev.best_column(
+        ev.t, ev.question, numeric=True, preferred=ev.relevant.get(ev.t)
+    )
+    bound = ev.limit_n
+    if bound is None:
+        nm = _RECENCY_N_RE.search(ql)
+        if nm:
+            bound = int(nm.group(1))
+    if not c:
+        return []
+    desc = recency == "desc" or (recency is None and ev.analysis.sort_desc)
+    sql = (
+        f"SELECT {', '.join(ev.all_cols[:5])} FROM {ev.t}"
+        f" ORDER BY {c}{' DESC' if desc else ''}, {ev.all_cols[0]}"
+        f" LIMIT {bound or 100}"
+    )
+    # an explicit bound or recency phrasing is the ask; a bare sort is
+    # weaker evidence than the FK-join fallback
+    conf = CONF_INTENT if (bound or recency) else CONF_WEAK
+    return [(sql, conf)]
+
+
+def _case_bucket(ev: Evidence) -> Emitted:
+    """"categorize orders as big or small with totalprice over 150000":
+    CASE-threshold buckets with per-bucket counts. The threshold is the
+    question's own comparator when present, else the corpus mean via a
+    scalar subquery (the reference only declares the CONDITIONAL intent
+    and keeps CASE tokens in its LLM-SQL extractor, nl2sql.py:121)."""
+    cm = _CASE_BUCKET_RE.search(ev.ql)
+    if not cm or not ev.has(QueryIntent.CONDITIONAL):
+        return []
+    ent_w, lab_hi, lab_lo = cm.groups()
+    case_t = ev.eng._entity_table(ent_w) or ev.t
+    cond = None
+    for word, cmp_word, num in _CMP_RE.findall(ev.ql):
+        col = ev.eng._best_numeric_column(case_t, word)
+        if col is not None:
+            cond = f"{col} {_CMP_OPS[cmp_word]} {num.replace(',', '')}"
+            break
+    if cond is None:
+        col = ev.eng._best_numeric_column(case_t, ev.question)
+        if col is None:
+            return []
+        cond = f"{col} >= (SELECT AVG({col}) FROM {case_t})"
+    sql = (
+        f"SELECT category, COUNT(*) AS cnt FROM "
+        f"(SELECT CASE WHEN {cond} THEN '{lab_hi}' ELSE '{lab_lo}' END "
+        f"AS category FROM {case_t}) "
+        f"AS bucketed GROUP BY category ORDER BY category"
+    )
+    return [(sql, CONF_SHAPE)]
+
+
+def _entity_join_listing(ev: Evidence) -> Emitted:
+    """"list students who received a C with score above 75": the anchor
+    entity carries no predicate evidence itself, but an FK-linked table
+    does; compile the reference's demo shape (README.md:168-179 gold):
+    entity PK + label joined to the predicate table's columns."""
+    if ev.aggregate_ask or ev.predicates:
+        return []
+    eng, t = ev.eng, ev.t
+    t_cols = {c.name for c in eng._cols(t)}
+    for ft in ev.tables[1:]:
+        edge = next(
+            (r for r in eng.metadata.relationships
+             if r.from_table == ft and r.to_table == t),
+            None,
+        )
+        if edge is None:
+            continue
+        conds = eng._predicates(ft, ev.question)
+        # unqualified predicates must be unambiguous after the join
+        if not conds or any(cond.split()[0] in t_cols for cond in conds):
+            continue
+        pk = next((c.name for c in eng._cols(t) if c.is_primary_key), ev.all_cols[0])
+        label = next(
+            (c.name for c in eng._cols(t)
+             if c.name != pk and "string" in c.type_str.lower()),
+            None,
+        )
+        proj = [f"{t}.{pk}"] + ([f"{t}.{label}"] if label else []) + [
+            f"{ft}.{c.name}" for c in eng._cols(ft) if c.name != edge.from_column
+        ]
+        join = _join_path_sql([(ft, edge.from_column, t, edge.to_column)])
+        sql = (
+            f"SELECT {', '.join(proj)} FROM {ft} {join} "
+            f"WHERE {' AND '.join(conds)} "
+            f"ORDER BY {t}.{pk} LIMIT {ev.limit_n or 100}"
+        )
+        return [(sql, CONF_ENTITY_JOIN)]
+    return []
+
+
+def _filtered_select(ev: Evidence) -> Emitted:
+    """Predicate evidence without an aggregate intent: a WHERE'd
+    projection, ordered on the first column for a deterministic set."""
+    if ev.aggregate_ask or not ev.predicates:
+        return []
+    sql = (
+        f"SELECT {', '.join(ev.all_cols[:5])} FROM {ev.t}"
+        f" WHERE {' AND '.join(ev.predicates)}"
+        f" ORDER BY {ev.all_cols[0]} LIMIT {ev.limit_n or 100}"
+    )
+    return [(sql, CONF_INTENT)]
+
+
+def _listing(ev: Evidence) -> Emitted:
+    """The reference's first template (inference.py:215-246)."""
+    sql = f"SELECT {', '.join(ev.all_cols[:5])} FROM {ev.t} LIMIT 100"
+    return [(sql, CONF_LISTING)]
+
+
+def _fk_join(ev: Evidence) -> Emitted:
+    """The reference's second template: the first crawled FK edge
+    between two linked tables."""
+    tables = ev.tables
+    for rel in ev.eng.metadata.relationships if len(tables) >= 2 else []:
+        if rel.from_table in tables and rel.to_table in tables:
+            sql = (
+                f"SELECT * FROM {rel.from_table} f "
+                f"JOIN {rel.to_table} t ON f.{rel.from_column} = t.{rel.to_column} "
+                f"LIMIT 100"
+            )
+            return [(sql, CONF_WEAK)]
+    return []
+
+
+# The template tier: (method, rule) pairs. Rules run in this order and
+# their candidates are concatenated; the order is the tie-break that
+# rank's stable sort keeps between equal scores, so a rule that must win
+# a tie comes first.
+TEMPLATE_RULES: tuple[tuple[str, Callable[[Evidence], Emitted]], ...] = (
+    ("template_facet_breakdown", _facet_breakdown),
+    ("template_predicate_ratio", _predicate_ratio),
+    ("template_pct_of_total", _pct_of_total),
+    ("template_anti_join", _anti_join),
+    ("template_topn_entity", _topn_entity),
+    ("template_topn_grouped", _topn_grouped),
+    ("template_topn_count", _topn_count),
+    ("template_superlative", _superlative),
+    ("template_bottom_n", _bottom_n),
+    ("template_scalar_subquery", _scalar_subquery),
+    ("template_union_named", _union_named),
+    ("template_rank", _rank),
+    ("template_superlative_agg", _superlative_agg),
+    ("template_having_count", _having_count),
+    ("template_time_count", _time_count),
+    ("template_time_trend", _time_trend),
+    ("template_time_cumulative", _time_cumulative),
+    ("template_histogram", _histogram),
+    ("template_equidepth", _equidepth),
+    ("template_having_agg", _having_agg),
+    ("template_count_distinct", _count_distinct),
+    ("template_time_grouped_agg", _time_grouped_agg),
+    ("template_join_grouped_agg", _join_grouped_agg),
+    ("template_multi_agg", _multi_agg),
+    ("template_multi_grouped_agg", _multi_grouped_agg),
+    ("template_grouped_agg", _grouped_agg),
+    ("template_global_agg", _global_agg),
+    ("template_window", _window),
+    ("template_distinct", _distinct),
+    ("template_sorted", _sorted),
+    ("template_case_bucket", _case_bucket),
+    ("template_entity_join_listing", _entity_join_listing),
+    ("template_filtered_select", _filtered_select),
+    ("template", _listing),
+    ("template_join", _fk_join),
+)
 
 
 def explain_query(sql: str, schema: dict[str, list[str]]) -> str:

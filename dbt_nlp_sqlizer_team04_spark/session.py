@@ -160,9 +160,6 @@ def ensure_event_time_confs(spark: SparkSession) -> None:
         # TIMESTAMP(NANOS) is rejected by the vectorized reader; read raw
         # nanos and let the loaders truncate to micros (DuckDB-identical).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Keep the schema-cache's conf memo in sync with the value just
-    # pinned (sources/parquet keys cached schemas on it).
-    setattr(spark, "_dbt_nlp_nanos_as_long_conf", "true")
     if spark.conf.get("spark.sql.session.timeZone") != "UTC":
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     setattr(spark, _EVENT_CONFS_SENTINEL, True)

@@ -84,31 +84,19 @@ def views_generation(spark: SparkSession) -> int:
 # the path's :func:`data_fingerprint`, so it invalidates on any in-place
 # regeneration of the corpus, nested part files included — same
 # contract as operators/dedup._sf_tag. The key also carries the
-# nanosAsLong conf value inference depends on, so a schema inferred
-# before the event-time guard pinned the conf can never be served after
-# it. No data rows are cached: every query still scans parquet.
+# nanosAsLong conf value inference depends on, read on every load (one
+# py4j round trip), so a schema inferred under one value is never
+# served under the other, whoever set the conf. No data rows are
+# cached: every query still scans parquet.
 _SCHEMA_CACHE: dict[tuple, object] = {}
-
-_NANOS_CONF_MEMO = "_dbt_nlp_nanos_as_long_conf"
-
-
-def _nanos_conf(spark: SparkSession) -> str:
-    """nanosAsLong conf value, memoized on the session object.
-
-    The only in-engine mutator (``session.ensure_event_time_confs``)
-    refreshes this memo when it pins the conf, so the memo tracks the
-    live value without a py4j conf read per table load.
-    """
-    v = getattr(spark, _NANOS_CONF_MEMO, None)
-    if v is None:
-        v = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
-        setattr(spark, _NANOS_CONF_MEMO, v)
-    return v
 
 
 def _read_with_cached_schema(spark: SparkSession, path: str) -> DataFrame:
     try:
-        key = (data_fingerprint(path), _nanos_conf(spark))
+        key = (
+            data_fingerprint(path),
+            spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"),
+        )
     except OSError:
         return spark.read.parquet(path)  # missing file: loud error as before
     schema = _SCHEMA_CACHE.get(key)

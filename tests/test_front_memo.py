@@ -4,9 +4,6 @@ template-tier candidates, and every answer equals a fresh engine's."""
 
 from __future__ import annotations
 
-import importlib.util
-import os
-import random
 import sys
 from concurrent.futures import ThreadPoolExecutor
 
@@ -18,31 +15,8 @@ from dbt_nlp_sqlizer_team04_spark.plans.nl2sql import (
     FRONT_MEMO_MAX_ENTRIES,
     NL2SQLEngine,
 )
+from tests.nl_corpus import corpus_questions
 from tests.test_nl2sql_pipeline import EVAL_QUESTIONS
-
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def _perfbench_workload():
-    """perfbench/workload.py (not a package), for its question pools."""
-    spec = importlib.util.spec_from_file_location(
-        "perfbench_workload", os.path.join(ROOT, "perfbench", "workload.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    sys.modules[spec.name] = mod  # dataclasses resolve the module by name
-    spec.loader.exec_module(mod)
-    return mod
-
-
-def _corpus_questions() -> list[str]:
-    wl = _perfbench_workload()
-    unique = []
-    for i, (tpl, params) in enumerate(wl._UNIQUE_SHAPES):
-        rng = random.Random(i)
-        for _ in range(2):
-            unique.append(tpl.format(**{k: wl._draw(rng, v) for k, v in params.items()}))
-    return (EVAL_QUESTIONS + [q for q, _gold in wl.ASK_POOL] + wl.ASK_PROBES
-            + unique)
 
 
 def _out(engine: NL2SQLEngine, q: str):
@@ -73,7 +47,7 @@ def engine(spark, sf_smoke):
 
 
 def test_memo_matches_fresh_engine_on_corpus_questions(engine):
-    questions = _corpus_questions()
+    questions = corpus_questions()
     assert len(questions) >= 70  # 8 eval + 24 ask + 7 probes + 36 unique
     _assert_memo_exact(engine, questions)
 

@@ -7,7 +7,11 @@ from __future__ import annotations
 import pytest
 
 from dbt_nlp_sqlizer_team04_spark.plans.executor import ResultCache, run_readonly
-from dbt_nlp_sqlizer_team04_spark.plans.nl2sql import NL2SQLEngine, explain_query
+from dbt_nlp_sqlizer_team04_spark.plans.nl2sql import (
+    TEMPLATE_RULES,
+    NL2SQLEngine,
+    explain_query,
+)
 
 
 @pytest.fixture(scope="module")
@@ -838,3 +842,71 @@ def test_last_method_is_per_thread(engine):
     with ThreadPoolExecutor(8) as pool:
         got = list(pool.map(winner, work, timeout=600))
     assert got == [serial[q] for q in work]
+
+
+# One question per template rule that the ladder (query_df, reported by
+# last_method) answers with that rule, on the sf0.001 engine; the
+# entity-join listing's question runs on the parity school fixture with
+# no LLM tier.
+RULE_WINNERS = {
+    "template_facet_breakdown": "break down orders by status and by priority",
+    "template_predicate_ratio": "what percentage of orders are urgent",
+    "template_pct_of_total": "percentage of orders per orderstatus",
+    "template_anti_join": "customers without orders",
+    "template_topn_entity": "top 5 parts by average retailprice",
+    "template_topn_grouped": "top 3 mktsegments by average acctbal",
+    "template_topn_count": "top 3 nations by number of customers",
+    "template_superlative": "which orderpriority has the most orders",
+    "template_bottom_n": "lowest 5 orders by totalprice",
+    "template_scalar_subquery": "orders with totalprice greater than the average totalprice",
+    "template_union_named": "customers or suppliers named like 19",
+    "template_rank": "rank orders by totalprice descending",
+    "template_superlative_agg": "which nation has the highest average acctbal",
+    "template_having_count": "orderpriorities with more than 10 orders",
+    "template_time_count": "orders per week",
+    "template_time_trend": "month over month change in total totalprice for orders",
+    "template_time_cumulative": "running total of totalprice by month for orders",
+    "template_histogram": "histogram of totalprice for orders in buckets of 50000",
+    "template_equidepth": "decile breakdown of totalprice in orders",
+    "template_having_agg": "segments with average acctbal above 4500",
+    "template_count_distinct": "count of distinct custkey values in orders",
+    "template_time_grouped_agg": "count of orders per month",
+    "template_join_grouped_agg": "count of customers per region name",
+    "template_multi_agg": "count of orders and average totalprice per orderpriority",
+    "template_multi_grouped_agg": "count of orders per orderstatus and orderpriority",
+    "template_grouped_agg": "count of orders per orderpriority",
+    "template_global_agg": "how many lineitem rows are there",
+    "template_window": "customers along with the average acctbal per nation",
+    "template_distinct": "unique mktsegment values from customer",
+    "template_sorted": "top 5 orders by totalprice",
+    "template_case_bucket": "categorize orders as big or small with totalprice over 150000",
+    "template_filtered_select": "show customers with name containing 19",
+    "template": "truncate the lineitem table",
+    "template_join": "show me all customers",
+}
+SCHOOL_RULE_WINNERS = {
+    "template_entity_join_listing":
+        "List students who received a C but have a numeric score above 75",
+}
+
+
+@pytest.fixture(scope="module")
+def school_engine(spark, tmp_path_factory):
+    from dbt_nlp_sqlizer_team04_spark.plans import parity_eval as pe
+
+    child = spark.newSession()  # the parity fixtures get their own catalog
+    d = str(tmp_path_factory.mktemp("school"))
+    pe.build_school_fixture(child, d)
+    return NL2SQLEngine.from_sf_dir(child, d, tables=pe.SCHOOL_TABLES)
+
+
+@pytest.mark.parametrize("method", [m for m, _rule in TEMPLATE_RULES])
+def test_every_template_rule_wins_the_ladder(method, engine, school_engine):
+    """Every rule of the template table answers some question: its
+    candidate is the first the ladder validates and analyzes."""
+    if method in SCHOOL_RULE_WINNERS:
+        eng, question = school_engine, SCHOOL_RULE_WINNERS[method]
+    else:
+        eng, question = engine, RULE_WINNERS[method]
+    eng.query_df(question)
+    assert eng.last_method == method, question

@@ -228,3 +228,21 @@ def test_schema_cache_misses_on_nested_part_rewrite(spark, tmp_path):
     second = parquet._read_with_cached_schema(spark, str(root))
     assert second.columns == ["a", "b", "k"]
     assert second.orderBy("a").collect()[0]["b"] == "x"
+
+
+def test_schema_cache_rekeys_on_direct_nanos_conf_set(spark, tmp_path):
+    """The nanosAsLong conf is read on every load: setting it directly
+    (not through ``ensure_event_time_confs``) makes the next load infer
+    the schema again under the new value instead of serving the schema
+    cached under the old one."""
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    child = spark.newSession()  # the shared session's conf stays as it is
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    old = child.conf.get(conf, "false")
+    new = "false" if old == "true" else "true"
+    parquet._read_with_cached_schema(child, path)
+    assert (data_fingerprint(path), old) in parquet._SCHEMA_CACHE
+    child.conf.set(conf, new)
+    parquet._read_with_cached_schema(child, path)
+    assert (data_fingerprint(path), new) in parquet._SCHEMA_CACHE

@@ -204,10 +204,10 @@ def test_validate_memo_matches_unmemoized(spark, sf_smoke):
     bounding cases and every generated candidate of the corpus questions
     (with the question, allowlist and schema context the ladder passes)."""
     from dbt_nlp_sqlizer_team04_spark.plans.nl2sql import NL2SQLEngine
-    from tests.test_front_memo import _perfbench_workload
+    from tests.nl_corpus import perfbench_workload
     from tests.test_nl2sql_pipeline import EVAL_QUESTIONS
 
-    refusals = [tpl.format(n=n) for tpl in _perfbench_workload()._REFUSALS for n in (1, 77)]
+    refusals = [tpl.format(n=n) for tpl in perfbench_workload()._REFUSALS for n in (1, 77)]
     allowed = ["orders", "customer", "lineitem", "nation", "region"]
     cases = [((sql,), {"allowed_tables": allowed}) for sql in refusals + ADVERSARIAL]
     cases += [((sql,), {}) for sql in ADVERSARIAL]
