@@ -41,22 +41,24 @@ _QUESTION_VERBS = {"query_df", "ask", "generate"}
 
 
 def _is_question(node) -> bool:
-    # SQL probes ("DROP TABLE customer") lead with an upper-case verb
+    # SQL probes ("DROP TABLE customer") lead with an upper-case verb;
+    # single tokens ("$first", "cnt") are column or operator names
     return (isinstance(node, ast.Constant) and isinstance(node.value, str)
-            and node.value.split()[:1] != [] and not node.value.split()[0].isupper())
+            and " " in node.value.strip() and not node.value.split()[0].isupper())
 
 
-def pipeline_questions() -> list[str]:
-    """Every question literal of tests/test_nl2sql_pipeline.py: first
-    arguments of ``query_df``/``ask``/``generate`` calls, and string
-    lists or tuples bound to a name or looped over."""
-    with open(os.path.join(HERE, "test_nl2sql_pipeline.py")) as fh:
+def question_literals(path: str, verbs: set[str]) -> list[str]:
+    """Every question literal of the Python file at ``path``: first
+    arguments of calls to a method named in ``verbs``, and string lists
+    or tuples bound to a name or looped over, in source order and
+    without repeats."""
+    with open(path) as fh:
         tree = ast.parse(fh.read())
     out: list[str] = []
     for node in ast.walk(tree):
         found = []
         if (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
-                and node.func.attr in _QUESTION_VERBS and node.args):
+                and node.func.attr in verbs and node.args):
             found = [node.args[0]]
         elif isinstance(node, (ast.Assign, ast.For)):
             seq = node.value if isinstance(node, ast.Assign) else node.iter
@@ -72,7 +74,8 @@ def pipeline_questions() -> list[str]:
 def smoke_questions() -> list[str]:
     from tests.nl_corpus import corpus_questions
 
-    return list(dict.fromkeys(pipeline_questions() + corpus_questions()))
+    pipeline = question_literals(os.path.join(HERE, "test_nl2sql_pipeline.py"), _QUESTION_VERBS)
+    return list(dict.fromkeys(pipeline + corpus_questions()))
 
 
 def property_questions() -> list[str]:
