@@ -286,6 +286,51 @@ def test_crawl_document_schema_adapter(spark, store):
     assert rt.tables["users"].primary_key == ["_id"]
 
 
+def test_nl2doc_ask_links_once_for_both_tiers(store, tmp_path, monkeypatch, matcher_count):
+    """``ask`` links once and hands the same slice to the LLM prompt and
+    the template tier: without a model the prompt's schema lines are the
+    fuzzy pruner's (the prompt is unchanged), with one they are the
+    semantic slice, and the LLM tier adds no fuzzy work."""
+    from dbt_nlp_sqlizer_team04_spark.models.trainer import ModelTrainer
+    from dbt_nlp_sqlizer_team04_spark.operators.documents import crawl_document_schema
+    from dbt_nlp_sqlizer_team04_spark.plans import nl2doc
+    from dbt_nlp_sqlizer_team04_spark.plans.linking import partial_ratio
+
+    question = "average characters per source of documents"
+    prompts: list[str] = []
+    monkeypatch.setattr(
+        nl2doc, "chat_complete", lambda _sys, user: prompts.append(user) or "no json"
+    )
+    links: list[str] = []
+    real_link = nl2doc.NL2DocEngine._link
+    monkeypatch.setattr(
+        nl2doc.NL2DocEngine, "_link", lambda self, q: links.append(q) or real_link(self, q)
+    )
+    model = ModelTrainer(str(tmp_path)).train(
+        crawl_document_schema(store, sample_size=5), use_llm=False
+    )
+    fuzzy_slice = nl2doc.select_relevant_collections(
+        {c: store.collection(c).columns for c in store.list_collections()}, question
+    )
+    for eng in (nl2doc.NL2DocEngine(store), nl2doc.NL2DocEngine(store, model=model)):
+        prompts.clear(), links.clear()
+        eng.ask(question)
+        assert links == [question]
+        relevant = real_link(eng, question).relevant
+        ctx = "\n".join(f"- {c}({', '.join(fs)})" for c, fs in relevant.items())
+        assert prompts == [f"Q: {question}\nSchema: {ctx}\nGenerate MongoDB query JSON only."]
+        assert (relevant == fuzzy_slice) == (eng.model is None)
+
+        partial_ratio.cache_clear()
+        before = matcher_count()
+        eng.template_query(question)
+        tier = matcher_count() - before
+        partial_ratio.cache_clear()
+        before = matcher_count()
+        eng.ask(question)
+        assert matcher_count() - before == tier
+
+
 def test_doc_semantic_linking_beats_fuzzy(spark, store, tmp_path):
     """The nl09 scenario on the document plane: 'characters' names no
     field, so the fuzzy tier aggregates the string field `source` and
@@ -973,8 +1018,8 @@ def test_ask_ladder_carries_failure_cause(store):
     eng = NL2DocEngine(store)
     # candidate tiers: LLM emits a query against a typo'd collection,
     # template has nothing — the raised error must chain the cause
-    eng.llm_query = lambda q: {"collection": "documentz", "find": {}}
-    eng.template_query = lambda q: None
+    eng.llm_query = lambda q, relevant=None: {"collection": "documentz", "find": {}}
+    eng.template_query = lambda q, link=None: None
     with _pytest.raises(ValueError, match="no viable") as ei:
         eng.ask("gibberish question")
     assert isinstance(ei.value.__cause__, DocumentQueryError)
